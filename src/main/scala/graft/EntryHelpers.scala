@@ -71,24 +71,24 @@ private[graft] object EntryHelpers {
     * partition-count-invariant (all stream ops here are keyed
     * aggregates/joins); the oracle gate re-proves it.
     */
-  private[graft] val StreamShufflePartitions: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS").map(_.toInt)
-      .getOrElse(8)
+  private[graft] lazy val StreamShufflePartitions: Int =
+    GraftSession.positiveIntVar(sys.env, "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", 8)
 
   /** Start-and-await a streaming query with the session's shuffle
     * partitions pinned to [[StreamShufflePartitions]] for the duration
-    * of the start call (Structured Streaming clones the session conf at
-    * `start()`, so the override binds the STREAM's state layout and
-    * nothing else; the batch value is restored immediately after the
-    * run). All 16 q_stream_* lanes funnel through here.
+    * of the start call only: the stream's constructor clones the
+    * session (`StreamExecution` → `cloneSession()`) before `start()`
+    * returns, so the override binds the STREAM's state layout and the
+    * batch value is back before the run is awaited. All 16 q_stream_*
+    * lanes funnel through here.
     */
   private[graft] def runStream(spark: SparkSession)(
       start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     val key = "spark.sql.shuffle.partitions"
     val old = spark.conf.get(key)
     spark.conf.set(key, StreamShufflePartitions.toString)
-    try { val q = start; q.awaitTermination() }
-    finally spark.conf.set(key, old)
+    val q = try start finally spark.conf.set(key, old)
+    q.awaitTermination()
   }
 
   /** Run an append-mode stream through a PARQUET file sink and read the

@@ -28,7 +28,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * ~5e-19 — the same silent weak-independence failure class as the
   * round-8 AMS sign-hash collapse. One seeded hash per (element, row)
   * restores the independence the S-curve math prices; MissScratch
-  * replays the diagnosis.
+  * (git show 89f0515:src/test/scala/graft/MissScratch.scala) replays the
+  * diagnosis.
   *
   * Why an Expression and not `transform(sequence(0,k-1), s ->
   * array_min(transform(set, e -> xxhash64(e, s))))`: nested

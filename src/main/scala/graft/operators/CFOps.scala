@@ -79,7 +79,8 @@ object CFOps {
     * regardless of skew — EdgeCasesSpec measures both properties
     * under an 80%-hot key, and output is bit-identical by spec.
     *
-    * MEASURED boundary (round 8, CfSkewScratch on the Zipf-headed
+    * MEASURED boundary (round 8, CfSkewScratch (git show
+    * 1128979:src/test/scala/graft/CfSkewScratch.scala) on the Zipf-headed
     * zipf_sf1 corpus — hot item 5.7% of 6M ratings): the window form
     * stays ahead at every measurable scale (isolated support→center
     * stage 2.5 s vs 7.6 s salted at 512 partitions; even a 50%-viral

@@ -163,7 +163,8 @@ object DedupOps {
     * above promoted to code. The blowup statistic is NOT the
     * background Jaccard's upper quantile (even on the measured
     * saturated corpora no random pair reaches the default t ≈ 0.42 —
-    * BandingScratch: p99 = 0.125); it is the PAIR POPULATION times the
+    * BandingScratch (git show 1128979:src/test/scala/graft/BandingScratch.scala):
+    * p99 = 0.125); it is the PAIR POPULATION times the
     * S-curve's tail: expected spurious candidates per doc
     * `mean_i[1 − (1 − Jᵢʳ)ᵇ] · (n−1)/2` over a background-pair sample.
     * On the 4k-doc saturated spec corpus that is 0.65/doc at the
@@ -675,7 +676,8 @@ object DedupOps {
     * put background collisions near n²·(h+1)/2^15 total, and AQE
     * splits any hot bucket; nothing quadratic ever materializes
     * unless the OUTPUT is (reference scale path: same role as the
-    * raised-r MinHash banding, DedupScaleScratch).
+    * raised-r MinHash banding, DedupScaleScratch (git show
+    * c42b6cf:src/test/scala/graft/DedupScaleScratch.scala)).
     */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3, bits: Int = 60,
       textCol: String = "text"): DataFrame =
@@ -711,7 +713,8 @@ object DedupOps {
     // higher-order exists() here ran 9× slower interpreted) replacing
     // the `.distinct()` whose candidate-sized shuffle dominated on
     // signature-skewed corpora (saturated-vocab sf1: 390M candidates
-    // for 6.4M pairs — SimhashScaleScratch). The hamming cut runs
+    // for 6.4M pairs — SimhashScaleScratch (git show
+    // dfcb6e2:src/test/scala/graft/SimhashScaleScratch.scala)). The hamming cut runs
     // FIRST so the block check sees only output-sized survivors;
     // nothing wide ever sees the candidate stream.
     val xorAb = col("__sa").bitwiseXOR(col("__sb"))

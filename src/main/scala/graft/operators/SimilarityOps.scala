@@ -949,7 +949,8 @@ object SimilarityOps {
     // queries × shortlist, tiny either way. 5% (was 1.7%): the round-7
     // sf1 correctness audit caught recall@10 < 0.5 on 4/10 queries at
     // 20k vectors with the 1.7% slice (340); 1000 (5%) restores every
-    // certificate with margin (PqSf1Scratch). The driver gate scales
+    // certificate with margin (PqSf1Scratch (git show
+    // 998c69f:src/test/scala/graft/PqSf1Scratch.scala)). The driver gate scales
     // (500/2000 vectors) sit on the 200 floor either way — their
     // hashes are unchanged by this.
     val sl =

@@ -243,7 +243,7 @@ class DedupOpsSpec extends SparkSpec {
           sigBase = Some(base.filter(!isNew)))
         .as[(Long, Long, Double)].collect().toSet
       assert(vShared == vDefault && vShared.nonEmpty)
-    } finally { base.unpersist(blocking = false); () }
+    } finally { base.unpersist(blocking = true); () }
   }
 
   test("incrementalClusters: bridge-merge relabels, pass-through, pairless-old, empty batch") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 
 /** Scaling-study data generator (test-scope tooling, not shipped).
   *
@@ -95,13 +95,8 @@ object GenScale {
     val mode = if (args.length > 2) args(2) else "driver"
     val zipf = mode == "zipf"
     val clustered = mode == "clustered"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(32)
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
 
     val nLi = (6000000L * sf).toLong
     val nOrders = nLi / 4

@@ -36,10 +36,17 @@ class GraphOpsSpec extends SparkSpec {
     // documented bound). This pins that the deep-walk plan stays
     // analyzable and runs to completion — the declared gate depths
     // (iters ≤ 5) never enter the guard and keep their pure-lazy plans.
-    val pr = GraphOps.pageRank(nodes, e, outDeg = 3, iters = 9, nNodes = n)
-    assert(pr.count() == n)
-    val h = GraphOps.hits(nodes, e, rounds = 9)
-    assert(h.count() == n)
+    val before = persistentRddIds
+    try {
+      val pr = GraphOps.pageRank(nodes, e, outDeg = 3, iters = 9, nNodes = n)
+      assert(pr.count() == n)
+      val h = GraphOps.hits(nodes, e, rounds = 9)
+      assert(h.count() == n)
+    } finally { // release the guard's localCheckpoint blocks
+      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!before(id)) rdd.unpersist(blocking = true)
+      }
+    }
   }
 
   test("pageRank matches an independent double-arithmetic reference") {

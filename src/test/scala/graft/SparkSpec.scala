@@ -5,14 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared base: one local SparkSession per forked test JVM. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   val sf0: String = "/root/testdata/sf0.001"
+
+  /** Ids of the RDDs persisted in the shared context right now. */
+  def persistentRddIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 }

@@ -3,7 +3,10 @@ package graft
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import scala.concurrent.{Await, Future, Promise}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 
 class StreamingOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -409,5 +412,33 @@ class StreamingOpsSpec extends SparkSpec {
     q.stop()
     val want = ids.sortBy(tag).take(5)
     assert(got.sorted == want.sorted)
+  }
+
+  test("runStream gives the session its batch partitions back while the stream runs") {
+    implicit val sqlCtx = spark.sqlContext
+    val key = "spark.sql.shuffle.partitions"
+    val old = spark.conf.get(key)
+    // a batch value distinct from the stream's, so a held override shows
+    val batch = (EntryHelpers.StreamShufflePartitions + 1).toString
+    spark.conf.set(key, batch)
+    val started = Promise[StreamingQuery]()
+    val run = Future(EntryHelpers.runStream(spark) {
+      // no data is ever added: the stream stays active until stopped
+      val q = MemoryStream[Int].toDF().writeStream.format("noop").start()
+      started.success(q)
+      q
+    })
+    val q = Await.result(started.future, 60.seconds)
+    try {
+      val deadline = System.currentTimeMillis() + 10000
+      while (spark.conf.get(key) != batch && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(q.isActive)
+      assert(spark.conf.get(key) == batch)
+    } finally {
+      q.stop()
+      Await.result(run, 60.seconds)
+      spark.conf.set(key, old)
+    }
   }
 }
