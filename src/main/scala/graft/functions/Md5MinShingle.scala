@@ -15,7 +15,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * the digest's first 60 bits), but computed in one per-row loop: the
   * `transform(..., s -> conv(substring(md5(...))))` formulation builds
   * an interpreted five-node expression tree per SHINGLE (~500 k trees
-  * at sf0.1); this is one tight loop per DOC. Empty arrays yield null.
+  * at sf0.1); this is one tight loop per DOC. Its input, the shingle
+  * array, comes from the native [[WordShingles]] kernel, so the
+  * fingerprint's whole per-row path runs in generated code. Empty
+  * arrays yield null.
   */
 case class Md5MinShingle(child: Expression) extends UnaryExpression {
 

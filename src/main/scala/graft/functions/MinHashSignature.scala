@@ -12,9 +12,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * Catalyst expression: sig[j] = min over elements e of xxhash64(h0(e),
   * seed = j) — k INDEPENDENTLY SEEDED hash rows over a per-element
   * pre-hash h0 (long input IS the pre-hash, the hashed-shingle fast
-  * path of [[graft.operators.DedupOps.hashedShingled]]; string input
-  * is pre-hashed once with seed 42). Cf. Broder's minwise hashing;
-  * row independence is what the banding recall math assumes.
+  * path of [[graft.operators.DedupOps.hashedShingled]], whose longs
+  * come from the [[WordShingles]] kernel with the same seed-42
+  * xxhash64; string input is pre-hashed once with seed 42). Cf.
+  * Broder's minwise hashing; row independence is what the banding
+  * recall math assumes. Upstream ([[WordShingles]]) and downstream
+  * ([[LshBandHashes]]) of this expression are native kernels too, so
+  * no step of the shingle → signature → band path runs interpreted.
   *
   * Why not Kirsch–Mitzenmacher double hashing (sig[j] = min of
   * h1 + j·h2, the construction this expression used through round 8):

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{LshBandHashes, WordShingles}
+
 /** Document deduplication for large-scale training-data pipelines:
   * exact (hash groupBy), MinHash+LSH near-dup, SimHash fingerprints and
   * exact n-gram Jaccard. Extends the reference's minhash/LSH material
@@ -11,7 +13,15 @@ import org.apache.spark.sql.functions._
   *
   * Scale design (the whole point at 100 TB):
   *  - Signatures are computed per-row inside a single scan — O(k·|set|)
-  *    arithmetic, no shuffle, no driver state, no model fit.
+  *    arithmetic, no shuffle, no driver state, no model fit. The
+  *    per-row path is tokenize ([[words]], the one regex tokenizer) →
+  *    [[graft.functions.WordShingles]] (distinct n-grams, optionally
+  *    hashed) → [[graft.functions.MinHashSignature]] →
+  *    [[graft.functions.LshBandHashes]]: every step after the regex is
+  *    a native codegen'd expression, one loop per row. The portable
+  *    `transform(sequence(…), …)` forms they replace run interpreted
+  *    (`ArrayTransform` is a `CodegenFallback`), once per shingle and
+  *    once per band; CodegenParitySpec keeps them as the reference.
   *  - LSH banding explodes each doc into `bands` bucket keys and
   *    self-joins on (band, bucket): the only wide exchange is keyed by
   *    bucket, whose cardinality grows with the corpus — no all-pairs
@@ -32,25 +42,23 @@ import org.apache.spark.sql.functions._
 object DedupOps {
 
   /** Language-agnostic word tokens (dedup ops deliberately use a
-    * simpler tokenizer than the reference-parity [[TextOps]] regex).
+    * simpler tokenizer than the reference-parity [[TextOps]] regex) —
+    * the one tokenizer every shingling op feeds to the native
+    * [[graft.functions.WordShingles]] kernel.
     */
   def words(text: Column): Column =
     regexp_extract_all(lower(text), lit("[a-z0-9]+"), lit(0))
 
-  /** Distinct word n-gram shingles of a token array. */
-  def shingles(ws: Column, n: Int): Column =
-    when(size(ws) >= n,
-      array_distinct(transform(sequence(lit(0), size(ws) - n),
-        i => array_join(slice(ws, i + lit(1), lit(n)), " "))))
-      .otherwise(array().cast("array<string>"))
-
-  /** (doc_id, shingles) for docs with at least one shingle. The
-    * [[graft.PlanUtils.spread]] barrier keeps the tokenize→shingle
-    * tree above an exchange so it parallelizes on single-split input.
+  /** (doc_id, shingles) for docs with at least one shingle: the distinct
+    * word n-grams of [[words]], computed by the native
+    * [[graft.functions.WordShingles]] kernel (one codegen'd loop per
+    * doc). The [[graft.PlanUtils.spread]] barrier keeps the
+    * tokenize→shingle tree above an exchange so it parallelizes on
+    * single-split input.
     */
   def shingled(docs: DataFrame, n: Int, textCol: String = "text"): DataFrame =
     graft.PlanUtils.spread(docs.select(col("doc_id"), col(textCol)))
-      .select(col("doc_id"), shingles(words(col(textCol)), n).as("shingles"))
+      .select(col("doc_id"), WordShingles(words(col(textCol)), n).as("shingles"))
       .filter(size(col("shingles")) > 0)
 
   /** [[shingled]] with each shingle collapsed to its xxHash64 — the
@@ -59,11 +67,14 @@ object DedupOps {
     * multi-word strings (smaller shuffle payload, cheaper compares);
     * a 64-bit collision inside one candidate pair's union is a ~1e-15
     * event and only perturbs the third decimal of a Jaccard estimate,
-    * so results are exact in practice.
+    * so results are exact in practice. The same
+    * [[graft.functions.WordShingles]] kernel dedups the strings and
+    * hashes them in one pass.
     */
   def hashedShingled(docs: DataFrame, n: Int, textCol: String = "text"): DataFrame =
-    shingled(docs, n, textCol)
-      .select(col("doc_id"), transform(col("shingles"), s => xxhash64(s)).as("hs"))
+    graft.PlanUtils.spread(docs.select(col("doc_id"), col(textCol)))
+      .select(col("doc_id"), WordShingles(words(col(textCol)), n, hashed = true).as("hs"))
+      .filter(size(col("hs")) > 0)
 
   /** Exact dedup: one representative (min doc_id) per distinct text,
     * with its multiplicity. Keep-list semantics: `n_copies = 1` rows
@@ -89,11 +100,11 @@ object DedupOps {
     sh.withColumn("sig", graft.functions.MinHashSignature(col(inputCol), k))
 
   /** LSH banding: (doc_id, band, bucket) with bucket = hash of the
-    * band's signature slice (r values per band).
+    * band's signature slice (r values per band), computed by the native
+    * [[graft.functions.LshBandHashes]] kernel.
     */
   def lshBands(sigs: DataFrame, r: Int, b: Int): DataFrame =
-    sigs.select(col("doc_id"),
-        posexplode(expr(s"transform(sequence(0, ${b - 1}), bi -> xxhash64(bi, slice(sig, bi*$r + 1, $r)))")))
+    sigs.select(col("doc_id"), posexplode(LshBandHashes(col("sig"), r, b)))
       .select(col("doc_id"), col("pos").as("band"), col("col").as("bucket"))
 
   /** Candidate pairs: docs sharing ≥1 (band, bucket). Equi self-join

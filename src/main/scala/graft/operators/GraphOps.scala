@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Link-graph centrality for web-corpus curation. A crawled corpus
@@ -44,9 +46,36 @@ object GraphOps {
     * byte-identical; a 20-round walk pays two cheap truncations instead
     * of a 20-round analyzed plan (GraphOpsSpec pins the deep-walk path).
     * Results are unaffected — the checkpoint is a plan barrier, not a
-    * computation change.
+    * computation change. A walk's checkpoints go through
+    * [[WalkCheckpoints]], which releases the superseded ones once the
+    * output has been consumed.
     */
   private val CheckpointEvery = 8
+
+  /** The `localCheckpoint` RDDs one deep walk pins. After the walk's
+    * output has run, only the LAST one still matters: its blocks back
+    * the truncated lineage (a second action on the same frame reads
+    * them), while materializing it cut every link to the earlier ones,
+    * which would otherwise stay cached for the session's lifetime.
+    */
+  private final class WalkCheckpoints {
+    private val rdds = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+
+    /** `df.localCheckpoint(false)`, remembering the RDD it pins. */
+    def apply(df: DataFrame): DataFrame = {
+      val ck = df.localCheckpoint(false)
+      rdds ++= ck.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+      ck
+    }
+
+    /** Unpersist every checkpoint but the last, once the last one is
+      * materialized. If the consuming action failed before that, the
+      * last one still reads through its predecessors, so all stay.
+      */
+    def releaseSuperseded(): Unit =
+      if (rdds.nonEmpty && rdds.last.isCheckpointed)
+        rdds.init.foreach(_.unpersist(blocking = false))
+  }
 
   /** PageRank with damping 0.85 over `edges` (`src`, `dst` BIGINT;
     * parallel edges allowed and counted with multiplicity). Every node
@@ -80,6 +109,7 @@ object GraphOps {
       // the pinned edge list is cached (filled by round 1's stage,
       // read by rounds 2..iters).
       var ranks = nodes.select(col("node"), lit(1L).as("r"))
+      val ckpts = new WalkCheckpoints
       var k = 0
       while (k < iters) {
         val base = 3L * outDeg * pow60(scalePerIter, k)
@@ -94,7 +124,7 @@ object GraphOps {
         // deep-walk lineage guard (see [[CheckpointEvery]]); never fires
         // at the declared gate depths, so their plans stay pure-lazy
         if (k % CheckpointEvery == 0 && k < iters)
-          ranks = ranks.localCheckpoint(false)
+          ranks = ckpts(ranks)
       }
       val denom = nNodes.toDouble * pow60(scalePerIter, iters).toDouble
       val out = ranks
@@ -102,7 +132,10 @@ object GraphOps {
           round(col("r").cast("double") / denom, 9).as("rank"))
       // the edge cache must outlive this function (nothing has run yet
       // when it returns) — release on the first consuming action
-      graft.CacheScope.onConsumed(out)(e.unpersist(blocking = false))
+      graft.CacheScope.onConsumed(out) {
+        e.unpersist(blocking = false)
+        ckpts.releaseSuperseded()
+      }
       out
     } catch {
       case t: Throwable => e.unpersist(blocking = false); throw t
@@ -143,6 +176,7 @@ object GraphOps {
       // so no per-round persist/count; one caller action runs the walk
       var ranks = nodes
         .select(col("node"), when(col("seed"), 1L).otherwise(0L).as("r"))
+      val ckpts = new WalkCheckpoints
       var k = 0
       while (k < iters) {
         val base = 3L * outDeg * pow60(scalePerIter, k)
@@ -157,13 +191,16 @@ object GraphOps {
         k += 1
         // deep-walk lineage guard (see [[CheckpointEvery]])
         if (k % CheckpointEvery == 0 && k < iters)
-          ranks = ranks.localCheckpoint(false)
+          ranks = ckpts(ranks)
       }
       val denom = nSeeds.toDouble * pow60(scalePerIter, iters).toDouble
       val out = ranks
         .select(col("node"), col("r").as("rank_scaled"),
           round(col("r").cast("double") / denom, 9).as("rank"))
-      graft.CacheScope.onConsumed(out)(e.unpersist(blocking = false))
+      graft.CacheScope.onConsumed(out) {
+        e.unpersist(blocking = false)
+        ckpts.releaseSuperseded()
+      }
       out
     } catch {
       case t: Throwable => e.unpersist(blocking = false); throw t
@@ -232,6 +269,7 @@ object GraphOps {
       // alone keeps a lazy persist mark.
       var hubs = nodes.select(col("node"), lit(1L).as("h"))
       var auths: DataFrame = null
+      val ckpts = new WalkCheckpoints
       var k = 0
       while (k < rounds) {
         val a0 = nodes.select(col("node"))
@@ -251,7 +289,7 @@ object GraphOps {
         // deep-walk lineage guard (see [[CheckpointEvery]]); the
         // mid-chain hub table is the only frame the next round reads
         if (k % CheckpointEvery == 0 && k < rounds)
-          hubs = hubs.localCheckpoint(false)
+          hubs = ckpts(hubs)
       }
       val lastA = auths
       val out = hubs.join(auths, "node")
@@ -260,6 +298,7 @@ object GraphOps {
         lastA.unpersist(blocking = false)
         eSrc.unpersist(blocking = false)
         eDst.unpersist(blocking = false)
+        ckpts.releaseSuperseded()
       }
       out
     } catch {

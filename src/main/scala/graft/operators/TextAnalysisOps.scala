@@ -94,7 +94,8 @@ object TextAnalysisOps {
     *
     * Plan shape: the top-token count is explode → (doc, token) count →
     * per-doc max — two partial-aggregated exchanges keyed by doc; the
-    * 2-gram distinct runs entirely per-row (array ops, no explode).
+    * 2-gram distinct runs entirely per-row (the native
+    * [[graft.functions.WordShingles]] kernel, no explode).
     * Output: (doc_id, n_tokens, top_token_frac, dup_2gram_frac, keep).
     */
   def repetitionStats(docs: DataFrame, maxTopTokenFrac: Double = 0.12,
@@ -107,9 +108,7 @@ object TextAnalysisOps {
       .groupBy("doc_id").agg(max(col("__c")).as("__top_c"))
     val grams = toks.select(col("doc_id"),
       size(col("__ws")).cast("long").as("n_tokens"),
-      size(array_distinct(transform(sequence(lit(0), size(col("__ws")) - 2),
-        i => concat_ws(" ", element_at(col("__ws"), i + lit(1)),
-          element_at(col("__ws"), i + lit(2)))))).cast("long").as("__d2"))
+      size(graft.functions.WordShingles(col("__ws"), 2)).cast("long").as("__d2"))
     val topFrac = col("__top_c").cast("double") / col("n_tokens")
     val dupFrac = lit(1.0) - col("__d2").cast("double") / (col("n_tokens") - 1)
     grams.join(top, "doc_id")

@@ -112,6 +112,7 @@ object StreamingOps {
   def streamingNearDups(newDocs: DataFrame, corpus: DataFrame,
       nGram: Int = 3, sigLen: Int = 128, r: Int = 4, bands: Int = 32,
       minJac: Double = 0.8, textCol: String = "text"): DataFrame = {
+    import graft.functions.{LshBandHashes, WordShingles}
     import graft.operators.DedupOps
     // static side: corpus shingle sets + band table (caller persists
     // for a long-lived stream; recomputed per micro-batch otherwise)
@@ -123,15 +124,12 @@ object StreamingOps {
     // bands (no PlanUtils.spread — `.rdd` is illegal on a stream, and
     // a live stream is already many micro-batch tasks)
     val sHs = newDocs
-      .select(col("doc_id"), col(textCol),
-        DedupOps.shingles(DedupOps.words(col(textCol)), nGram).as("shingles"))
-      .filter(size(col("shingles")) > 0)
       .select(col("doc_id"),
-        transform(col("shingles"), s => xxhash64(s)).as("hs"))
+        WordShingles(DedupOps.words(col(textCol)), nGram, hashed = true).as("hs"))
+      .filter(size(col("hs")) > 0)
     val sBands = DedupOps.minhashSignatures(sHs, sigLen, "hs")
       .select(col("doc_id").as("n_id"), col("hs").as("n_hs"),
-        posexplode(expr(
-          s"transform(sequence(0, ${bands - 1}), bi -> xxhash64(bi, slice(sig, bi*$r + 1, $r)))")))
+        posexplode(LshBandHashes(col("sig"), r, bands)))
       .select(col("n_id"), col("n_hs"), col("pos").as("band"), col("col").as("bucket"))
     val cand = sBands
       .join(cBands.select(col("band"), col("bucket"), col("doc_id").as("c_id")),

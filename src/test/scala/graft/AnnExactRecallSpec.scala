@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
   */
 class AnnExactRecallSpec extends SparkSpec {
   import spark.implicits._
-  private val sf001 = "/root/testdata/sf0.01"
 
   test("annTopK equals brute-force top-10 exactly at sf0.01") {
     val emb = Tables.embeddings(spark, sf001)

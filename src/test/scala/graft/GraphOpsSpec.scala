@@ -36,17 +36,30 @@ class GraphOpsSpec extends SparkSpec {
     // documented bound). This pins that the deep-walk plan stays
     // analyzable and runs to completion — the declared gate depths
     // (iters ≤ 5) never enter the guard and keep their pure-lazy plans.
+    val pr = GraphOps.pageRank(nodes, e, outDeg = 3, iters = 9, nNodes = n)
+    assert(pr.count() == n)
+    val h = GraphOps.hits(nodes, e, rounds = 9)
+    assert(h.count() == n)
+  }
+
+  test("a 20-round walk keeps only its last checkpoint once consumed") {
+    // a directed cycle: every hub and authority score stays 1 in every
+    // round, so 20 rounds (checkpoints after rounds 8 and 16) stay exact
+    val n = 7L
+    val nodes = spark.range(0, n).select(col("id").as("node"))
+    val cycle = nodes.select(col("node").as("src"), ((col("node") + 1) % n).as("dst"))
     val before = persistentRddIds
-    try {
-      val pr = GraphOps.pageRank(nodes, e, outDeg = 3, iters = 9, nNodes = n)
-      assert(pr.count() == n)
-      val h = GraphOps.hits(nodes, e, rounds = 9)
-      assert(h.count() == n)
-    } finally { // release the guard's localCheckpoint blocks
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!before(id)) rdd.unpersist(blocking = true)
-      }
-    }
+    def pinned = persistentRddIds -- before
+    val h = GraphOps.hits(nodes, cycle, rounds = 20)
+    assert(pinned.size >= 2) // both checkpoints are marked before any action
+    val first = h.orderBy("node").as[(Long, Long, Long)].collect().toSeq
+    assert(first == (0L until n).map(v => (v, 1L, 1L)))
+    // release runs on the listener bus: wait for it
+    val deadline = System.currentTimeMillis() + 20000
+    while (pinned.size > 1 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    assert(pinned.size == 1, s"left pinned: $pinned")
+    // the one left backs the truncated lineage: the frame still runs
+    assert(h.orderBy("node").as[(Long, Long, Long)].collect().toSeq == first)
   }
 
   test("pageRank matches an independent double-arithmetic reference") {

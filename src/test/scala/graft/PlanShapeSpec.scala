@@ -35,6 +35,25 @@ class PlanShapeSpec extends SparkSpec {
     walk(planOf(df))
   }
 
+  test("shingling and banding are native kernels: no higher-order function in their plans") {
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    import graft.operators.DedupOps
+    // ArrayTransform & co. are CodegenFallback: one back in these
+    // projections silently puts the near-dup hot path on interpreted eval
+    def hofs(df: DataFrame): Seq[String] = df.queryExecution.analyzed.flatMap(
+      _.expressions.flatMap(_.collect { case f: HigherOrderFunction => f.prettyName }))
+    val docs = Tables.documents(spark, sf0)
+    assert(hofs(docs.select(transform(split(col("text"), " "), s => s))).nonEmpty)
+    val sigs = DedupOps.minhashSignatures(DedupOps.hashedShingled(docs, 3), 128, "hs")
+    Seq(
+      "shingled" -> DedupOps.shingled(docs, 3),
+      "hashedShingled" -> DedupOps.hashedShingled(docs, 3),
+      "lshBands" -> DedupOps.lshBands(sigs.select("doc_id", "sig"), 4, 32),
+      "streamingNearDups" -> graft.streaming.StreamingOps.streamingNearDups(
+        Tables.documentsStream(spark, sf0), docs)
+    ).foreach { case (name, df) => assert(hofs(df).isEmpty, name) }
+  }
+
   test("q_topk_words plans TakeOrderedAndProject, not a global sort") {
     val df = SparkEntry.queries("q_topk_words")(spark, sf0)
     assert(planString(df).contains("TakeOrderedAndProject"))

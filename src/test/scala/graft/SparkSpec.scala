@@ -9,6 +9,9 @@ trait SparkSpec extends AnyFunSuite {
 
   val sf0: String = "/root/testdata/sf0.001"
 
+  /** The sf0.01 corpus next to [[sf0]]. */
+  val sf001: String = new java.io.File(sf0).getParent + "/sf0.01"
+
   /** Ids of the RDDs persisted in the shared context right now. */
   def persistentRddIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 }
