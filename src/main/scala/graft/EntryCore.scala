@@ -98,15 +98,11 @@ private[graft] object EntryCore {
           col("event_type"), col("value"))
         .as[(Long, String, Long, Long, String, Double)]
       val out = graft.streaming.StreamingOps.streamingUniformSample(src, 1000)
-      val qn = s"graft_stream_sample_${StreamSeq.incrementAndGet()}"
-      runStream(s)(out.toDF().writeStream.format("memory").queryName(qn)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start())
       // latest snapshot per shard via a window (a groupBy+self-join on
       // a memory-sink view hits conflicting attribute ids); the table
       // is shards·k·batches rows — sink-side work constant in stream
       // length
-      val t = s.table(qn)
+      val t = memorySinkRun(out.toDF(), "sample", "update")
         .withColumn("__mx", max("seq").over(Window.partitionBy("shard")))
         .filter(col("seq") === col("__mx"))
       t.orderBy(col("h"), col("event_id")).limit(1000)
@@ -153,13 +149,9 @@ private[graft] object EntryCore {
           col("event_id"), col("event_type"), col("value"))
         .as[(Long, Long, Long, String, Double)]
       val out = graft.streaming.StreamingOps.upsertLatestByKey(src)
-      val qn = s"graft_stream_upsert_${StreamSeq.incrementAndGet()}"
-      runStream(s)(out.toDF().writeStream.format("memory").queryName(qn)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start())
       val w = Window.partitionBy("user_id")
         .orderBy(col("last_ts_us").desc, col("last_event_id").desc)
-      s.table(qn).withColumn("__rn", row_number().over(w))
+      memorySinkRun(out.toDF(), "upsert", "update").withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn")
         .orderBy("user_id")
     }),

@@ -76,25 +76,22 @@ private[graft] object EntryDedup {
     // the batch-bounded supernode CC. Oracle = from-scratch clustering
     // of the full corpus — hash equality proves maintenance ≡
     // recompute (the q_incr_agg construction).
-    "q_incr_clusters" -> ((s, dir) => {
+    "q_incr_clusters" -> ((s, dir) => CacheScope.pinned { p =>
       val docs = Tables.documents(s, dir)
       val isNew = pmod(col("doc_id"), lit(7L)) === 0
       val old = docs.filter(!isNew)
       // ONE corpus tokenize→shingle→minhash pass shared by BOTH pair
       // passes (the old-corpus self-pairs and the incremental batch
       // pairs each recomputed it from scratch — guide §6, fewer corpus
-      // scans). Manually persisted: autoRelease would fire on the
-      // old-pairs CC loop's FIRST label-sum action and strip the cache
-      // before the incremental pass reads it; instead it releases when
-      // the incremental pairs' first consuming action (the supernode CC
-      // loop) lands.
-      val base = DedupOps.minhashSignatures(
-        DedupOps.hashedShingled(docs, 3), 128, "hs").persist()
+      // scans). Both CC loops run their label-sum actions while this
+      // query is built; the pin outlives them and, since the returned
+      // frame reads only their materialized labels, releases at return.
+      val base = p(DedupOps.minhashSignatures(
+        DedupOps.hashedShingled(docs, 3), 128, "hs"))
       val oldClusters = DedupOps.nearDupClusters(
         DedupOps.verifiedNearDups(old, sigBase = Some(base.filter(!isNew))))
       val incr = DedupOps.incrementalNearDups(old, docs.filter(isNew),
         sigBase = Some(base))
-      graft.CacheScope.onConsumed(incr)(base.unpersist(blocking = false))
       DedupOps.incrementalClusters(oldClusters, incr.select("da", "db"))
         .orderBy("doc_id")
     }),

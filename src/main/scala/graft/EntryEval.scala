@@ -419,11 +419,7 @@ private[graft] object EntryEval {
       val binned = graft.streaming.StreamingOps.windowedBinCounts(
         Tables.eventsStream(s, dir), "ts", "value",
         "1 day", "2 days", binWidth = 50.0, maxBin = 9)
-      val qn = s"graft_stream_psi_${StreamSeq.incrementAndGet()}"
-      runStream(s)(binned.writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start())
-      val cur = s.table(qn)
+      val cur = memorySinkRun(binned, "psi", "complete")
         .select(unix_micros(col("w_start")).as("grp"), col("bin"), col("cnt"))
       val ref = Tables.events(s, dir)
         .select(least(floor(col("value") / 50.0), lit(9L)).cast("long").as("bin"))

@@ -225,11 +225,7 @@ private[graft] object EntryFormats {
       val stream = Tables.eventsStream(s, dir)
       val sessions = TemporalOps.sessionize(
         stream.withWatermark("ts", "24 hours"), Seq("user_id"), "ts", "30 minutes")
-      val qn = s"graft_stream_sessionize_${StreamSeq.incrementAndGet()}"
-      runStream(s)(sessions.writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start())
-      s.table(qn)
+      memorySinkRun(sessions, "sessionize", "complete")
         .select(col("user_id"), unix_micros(col("s_start")).as("start_us"),
           unix_micros(col("s_end")).as("end_us"), col("n_events"))
         .orderBy("user_id", "start_us")
@@ -392,11 +388,7 @@ private[graft] object EntryFormats {
         .agg(count(lit(1)).as("n"),
           decMean(col("value")).as("mean_value"),
           round(stddev_pop(col("value")), 4).as("std_value"))
-      val qn = s"graft_stream_welford_${StreamSeq.incrementAndGet()}"
-      runStream(s)(sampled.writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start())
-      s.table(qn).orderBy("event_type")
+      memorySinkRun(sampled, "welford", "complete").orderBy("event_type")
     }),
     // The CUSTOM-STATE streaming path: welfordByKey's explicit
     // flatMapGroupsWithState recurrence (update mode — one cumulative
@@ -409,11 +401,7 @@ private[graft] object EntryFormats {
       val stream = Tables.eventsStream(s, dir)
         .select(col("event_type"), col("value")).as[(String, Double)]
       val stats = graft.streaming.StreamingOps.welfordByKey(stream)
-      val qn = s"graft_stream_welford_state_${StreamSeq.incrementAndGet()}"
-      runStream(s)(stats.toDF().writeStream.format("memory").queryName(qn)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start())
-      s.table(qn).groupBy(col("key").as("event_type"))
+      memorySinkRun(stats.toDF(), "welford_state", "update").groupBy(col("key").as("event_type"))
         .agg(max(col("n")).as("n"),
           max_by(round(col("mean"), 4), col("n")).as("mean_value"),
           max_by(round(col("std"), 4), col("n")).as("std_value"))
@@ -426,11 +414,7 @@ private[graft] object EntryFormats {
       val stream = Tables.eventsStream(s, dir)
       val agg = graft.streaming.StreamingOps.windowedStats(stream, "ts", "value",
         "1 hour", "2 hours")
-      val qn = s"graft_stream_window_${StreamSeq.incrementAndGet()}"
-      runStream(s)(agg.writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start())
-      s.table(qn)
+      memorySinkRun(agg, "window", "complete")
         .select(unix_micros(col("w_start")).as("start_us"), col("n"),
           col("mean_value"))
         .orderBy("start_us")

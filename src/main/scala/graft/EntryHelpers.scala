@@ -91,6 +91,24 @@ private[graft] object EntryHelpers {
     q.awaitTermination()
   }
 
+  /** Run a stream to completion through a MEMORY sink (`mode` =
+    * "update" or "complete") and return its result table — the sink
+    * shape for the metric-sized streaming gates. The sink registers a
+    * temp view `graft_stream_<tag>_<n>` that holds every result row on
+    * the driver; it is held in a [[CacheScope.pinned]] scope, so the
+    * view is dropped when the returned frame is first consumed (a
+    * second action on that frame still reads the sink's rows).
+    */
+  private[graft] def memorySinkRun(df: DataFrame, tag: String,
+      mode: String): DataFrame = CacheScope.pinned { p =>
+    val spark = df.sparkSession
+    val qn = s"graft_stream_${tag}_${StreamSeq.incrementAndGet()}"
+    runStream(spark)(df.writeStream.format("memory").queryName(qn)
+      .outputMode(mode)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start())
+    p.tempView(spark, qn)
+  }
+
   /** Run an append-mode stream through a PARQUET file sink and read the
     * result back — the production sink shape for DATA-SIZED streaming
     * output. The memory sink collects every result row onto the driver:

@@ -379,11 +379,7 @@ private[graft] object EntryRelational {
       val stream = Tables.eventsStream(s, dir)
       val agg = graft.streaming.StreamingOps.hoppingStats(stream, "ts",
         "value", "21600 seconds", "10800 seconds", "12 hours")
-      val qn = s"graft_stream_hop_${StreamSeq.incrementAndGet()}"
-      runStream(s)(agg.writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start())
-      s.table(qn)
+      memorySinkRun(agg, "hop", "complete")
         .select(unix_micros(col("w_start")).as("win_start_us"), col("n"),
           round(col("sum_value"), 4).as("sum_value"))
         .orderBy("win_start_us")
@@ -395,13 +391,9 @@ private[graft] object EntryRelational {
       val stream = Tables.eventsStream(s, dir)
       val agg = graft.streaming.StreamingOps.windowedTypeCounts(stream,
         "ts", "event_type", "21600 seconds", "12 hours")
-      val qn = s"graft_stream_topk_${StreamSeq.incrementAndGet()}"
-      runStream(s)(agg.writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start())
       val w = Window.partitionBy("w_start")
         .orderBy(col("n").desc, col("event_type").asc)
-      s.table(qn)
+      memorySinkRun(agg, "topk", "complete")
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") <= 3)
         .select(unix_micros(col("w_start")).as("win_start_us"),

@@ -90,10 +90,8 @@ object ClusterOps {
     * only driver state. Init = the vectors of the k smallest ids
     * (deterministic, no RNG); updates are decimal-sum means (shuffle-
     * order-independent, engine-portable); an empty cluster keeps its
-    * previous centroid. Shared by [[kmeans]] (full-corpus form) and
-    * [[graft.operators.SimilarityOps.ivfTopK]]'s sample fit — one
-    * quantizer implementation, two consumers. The caller persists `x`
-    * (each iteration re-reads it). `assign` picks the assignment-plan
+    * previous centroid. Shared by [[kmeans]], [[kmeansAssign]] and
+    * [[silhouette]]. The caller pins `x` (each iteration re-reads it). `assign` picks the assignment-plan
     * encoding ([[cascadeAssign]] or [[arrAssign]] — bit-identical
     * results by construction).
     */
@@ -134,22 +132,14 @@ object ClusterOps {
   def kmeans(embeddings: DataFrame, idCol: String, vecCol: String,
       dims: Int, k: Int, iters: Int): DataFrame = {
     require(k >= 2 && dims >= 1 && iters >= 1, "k>=2, dims>=1, iters>=1")
-    // manual persist, NOT CacheScope at creation: the per-iteration
-    // collects below would consume a one-shot release listener; instead
-    // the cache is re-armed for auto-release on the RETURNED frame (the
-    // pageRank lifecycle), and dropped eagerly only on failure
-    val x = embeddings.select(col(idCol),
-      expr(s"transform(slice($vecCol, 1, $dims), e -> CAST(e AS DOUBLE))")
-        .as("__x"))
-      .persist()
-    try {
+    graft.CacheScope.pinned { p =>
+      val x = p(embeddings.select(col(idCol),
+        expr(s"transform(slice($vecCol, 1, $dims), e -> CAST(e AS DOUBLE))")
+          .as("__x")))
       val cents = lloyd(x, idCol, k, dims, iters)
       val finalDs = cents.toIndexedSeq.map(c => dist2(col("__x"), c))
-      graft.CacheScope.autoRelease(x)
-        .select(col(idCol), argmin(finalDs).as("cluster"),
-          round(least(finalDs: _*), 6).as("dist2"))
-    } catch {
-      case t: Throwable => x.unpersist(blocking = false); throw t
+      x.select(col(idCol), argmin(finalDs).as("cluster"),
+        round(least(finalDs: _*), 6).as("dist2"))
     }
   }
 
@@ -169,17 +159,13 @@ object ClusterOps {
   def kmeansAssign(embeddings: DataFrame, idCol: String, vecCol: String,
       dims: Int, k: Int, iters: Int): DataFrame = {
     require(k >= 2 && dims >= 1 && iters >= 1, "k>=2, dims>=1, iters>=1")
-    val x = embeddings.select(col(idCol),
-      expr(s"transform(slice($vecCol, 1, $dims), e -> CAST(e AS DOUBLE))")
-        .as("__x"))
-      .repartition(col(idCol))
-      .persist()
-    try {
+    graft.CacheScope.pinned { p =>
+      val x = p(embeddings.select(col(idCol),
+        expr(s"transform(slice($vecCol, 1, $dims), e -> CAST(e AS DOUBLE))")
+          .as("__x"))
+        .repartition(col(idCol)))
       val cents = lloyd(x, idCol, k, dims, iters, arrAssign(dims))
-      graft.CacheScope.autoRelease(x)
-        .select(col(idCol), arrAssign(dims)(cents).as("cluster"))
-    } catch {
-      case t: Throwable => x.unpersist(blocking = false); throw t
+      x.select(col(idCol), arrAssign(dims)(cents).as("cluster"))
     }
   }
 
@@ -207,11 +193,10 @@ object ClusterOps {
   def silhouette(embeddings: DataFrame, idCol: String, vecCol: String,
       dims: Int, k: Int, iters: Int): DataFrame = {
     require(k >= 2 && dims >= 1 && iters >= 1, "k>=2, dims>=1, iters>=1")
-    val x = embeddings.select(col(idCol),
-      expr(s"transform(slice($vecCol, 1, $dims), e -> CAST(e AS DOUBLE))")
-        .as("__x"))
-      .persist()
-    try {
+    graft.CacheScope.pinned { p =>
+      val x = p(embeddings.select(col(idCol),
+        expr(s"transform(slice($vecCol, 1, $dims), e -> CAST(e AS DOUBLE))")
+          .as("__x")))
       val cents = lloyd(x, idCol, k, dims, iters)
       val ds = cents.toIndexedSeq.map(c => dist2(col("__x"), c))
       val cl = argmin(ds)
@@ -224,14 +209,11 @@ object ClusterOps {
       val s = when(greatest(sqrt(a2), sqrt(b2)) > 0,
         round((sqrt(b2) - sqrt(a2)) / greatest(sqrt(a2), sqrt(b2)), 9))
         .otherwise(lit(0.0))
-      graft.CacheScope.autoRelease(x)
-        .select(cl.as("cluster"), s.as("__s"))
+      x.select(cl.as("cluster"), s.as("__s"))
         .groupBy("cluster")
         .agg(count(lit(1)).as("n"),
           round(sum(col("__s").cast("decimal(38,12)")).cast("double")
             / count(lit(1)), 6).as("mean_sil"))
-    } catch {
-      case t: Throwable => x.unpersist(blocking = false); throw t
     }
   }
 
@@ -317,40 +299,39 @@ object ClusterOps {
   def kCenterGreedy(emb: DataFrame, k: Int = 8, idCol: String = "vec_id",
       vecCol: String = "embedding", scale: Double = 1000.0): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    val pts = graft.CacheScope.autoRelease(
-      emb.select(col(idCol).as("vec_id"),
+    graft.CacheScope.pinned { p =>
+      val pts = p(emb.select(col(idCol).as("vec_id"),
           transform(col(vecCol),
             x => floor(x.cast("double") * scale).cast("float")).as("q"))
         .withColumn("qq", SimilarityOps.dot(col("q"), col("q"))))
-    def d2To(c: DataFrame): DataFrame =
-      pts.crossJoin(broadcast(c))
-        .select(col("vec_id"),
-          (col("qq") - lit(2.0) * SimilarityOps.dot(col("q"), col("cq"))
-            + col("cqq")).as("d2"))
-    val c0 = pts.orderBy("vec_id").limit(1)
-      .select(col("vec_id").as("c_id"), col("q").as("cq"), col("qq").as("cqq"))
-    // lazy checkpoints throughout (the labelPropagation idiom): the
-    // min-distance recurrence still truncates its lineage per round,
-    // but the k greedy rounds run inside the caller's single action
-    // instead of 2 blocking jobs per round
-    var md = d2To(c0).localCheckpoint(false)
-    var out = c0.select(lit(0).as("sel_rank"), col("c_id").as("vec_id"),
-      lit(0.0).as("d2"))
-    for (r <- 1 until k) {
-      val next = md.orderBy(col("d2").desc, col("vec_id").asc).limit(1)
-        .localCheckpoint(false)
-      val c = next.join(pts, "vec_id")
+      def d2To(c: DataFrame): DataFrame =
+        pts.crossJoin(broadcast(c))
+          .select(col("vec_id"),
+            (col("qq") - lit(2.0) * SimilarityOps.dot(col("q"), col("cq"))
+              + col("cqq")).as("d2"))
+      val c0 = pts.orderBy("vec_id").limit(1)
         .select(col("vec_id").as("c_id"), col("q").as("cq"), col("qq").as("cqq"))
-      out = out.unionByName(
-        next.select(lit(r).as("sel_rank"), col("vec_id"), col("d2")))
-      md = md.join(d2To(c).withColumnRenamed("d2", "nd"), "vec_id")
-        .select(col("vec_id"), least(col("d2"), col("nd")).as("d2"))
-        .localCheckpoint(false)
+      // lazy checkpoints throughout (the labelPropagation idiom): the
+      // min-distance recurrence still truncates its lineage per round,
+      // but the k greedy rounds run inside the caller's single action
+      // instead of 2 blocking jobs per round
+      var md = p.checkpoint(d2To(c0))
+      var out = c0.select(lit(0).as("sel_rank"), col("c_id").as("vec_id"),
+        lit(0.0).as("d2"))
+      for (r <- 1 until k) {
+        val next = p.checkpoint(md.orderBy(col("d2").desc, col("vec_id").asc).limit(1))
+        val c = next.join(pts, "vec_id")
+          .select(col("vec_id").as("c_id"), col("q").as("cq"), col("qq").as("cqq"))
+        out = out.unionByName(
+          next.select(lit(r).as("sel_rank"), col("vec_id"), col("d2")))
+        md = p.checkpoint(md.join(d2To(c).withColumnRenamed("d2", "nd"), "vec_id")
+          .select(col("vec_id"), least(col("d2"), col("nd")).as("d2")))
+      }
+      val cov = md.agg(max("d2").as("d2"))
+        .select(lit(k).as("sel_rank"), lit(null).cast("long").as("vec_id"),
+          col("d2"))
+      out.unionByName(cov)
+        .select(col("sel_rank"), col("vec_id"), col("d2").cast("long").as("d2"))
     }
-    val cov = md.agg(max("d2").as("d2"))
-      .select(lit(k).as("sel_rank"), lit(null).cast("long").as("vec_id"),
-        col("d2"))
-    out.unionByName(cov)
-      .select(col("sel_rank"), col("vec_id"), col("d2").cast("long").as("d2"))
   }
 }

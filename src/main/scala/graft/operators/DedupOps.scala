@@ -772,8 +772,9 @@ object DedupOps {
     * stay keyed by node/label id — no driver state, nothing quadratic.
     * The driver-side loop holds ONE scalar per round (the label-sum
     * fixpoint check: labels only ever decrease, so an unchanged sum IS
-    * convergence). Per-round persists are released as soon as the next
-    * round materializes (the standard iterative-caching pattern).
+    * convergence). Per-round pins and checkpoints are released as soon
+    * as the next round materializes (the standard iterative-caching
+    * pattern).
     *
     * Fail-fast: refuses (IllegalStateException) if `maxIter` rounds
     * don't converge rather than returning half-merged clusters.
@@ -785,76 +786,66 @@ object DedupOps {
     */
   private val JumpAfter = 3
 
-  def nearDupClusters(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
-    // persist the edge list for the LOOP's lifetime: every round joins
-    // against it, and without the pin each round would re-evaluate the
-    // whole upstream pair pipeline (measured 6.0 s → 2.5 s at sf0.1 on
-    // the LSH near-dup graph). Safe to release after the loop — each
-    // round's label-sum action has already MATERIALIZED that round's
-    // persisted labels, so the caller's action reads the label cache,
-    // never the edge lineage.
-    val edges = pairs.select(col("da").as("src"), col("db").as("dst"))
-      .union(pairs.select(col("db").as("src"), col("da").as("dst")))
-      .persist()
-    try {
-      var labels = edges.select(col("src").as("node")).distinct()
-        .withColumn("label", col("node"))
-        .persist()
+  def nearDupClusters(pairs: DataFrame, maxIter: Int = 30): DataFrame =
+    graft.CacheScope.pinned { p =>
+      // pin the edge list for the LOOP's lifetime: every round joins
+      // against it, and without the pin each round would re-evaluate the
+      // whole upstream pair pipeline (measured 6.0 s → 2.5 s at sf0.1 on
+      // the LSH near-dup graph). It releases at return — each round's
+      // label-sum action has already MATERIALIZED that round's labels,
+      // so the caller's action reads the label checkpoint, never the
+      // edge lineage.
+      val edges = p(pairs.select(col("da").as("src"), col("db").as("dst"))
+        .union(pairs.select(col("db").as("src"), col("da").as("dst"))))
+      var labels = p(edges.select(col("src").as("node")).distinct()
+        .withColumn("label", col("node")))
       // empty pair set (e.g. a quiet ingest batch): sum over no rows is
       // null — return the empty assignment instead of NPEing on it
       val sum0 = labels.agg(sum("label")).head()
-      if (sum0.isNullAt(0)) {
-        labels.unpersist(blocking = false)
-        return labels.select(col("node").as("doc_id"), col("label").as("cluster"))
+      if (!sum0.isNullAt(0)) {
+        var prevSum = sum0.getLong(0)
+        var converged = false
+        var i = 0
+        while (!converged && i < maxIter) {
+          // neighbor min-propagation
+          val prop0 = edges.join(labels, edges("dst") === labels("node"))
+            .select(edges("src").as("node"), col("label"))
+            .union(labels)
+            .groupBy("node").agg(min("label").as("label"))
+          // still not settled after JumpAfter rounds → a long-diameter
+          // component exists; engage pointer jumping (label(x) :=
+          // label(label(x)) — the inner join is total because every label
+          // value is a node id present in `prop`)
+          val jumping = i >= JumpAfter
+          val prop = if (jumping) p(prop0) else prop0
+          // localCheckpoint, not persist: every round's plan references
+          // the previous round's frame TWICE (edge join + union; the jump
+          // join twice again), so without lineage truncation the LOGICAL
+          // plan doubles per round — 2^rounds nodes whose execution-id
+          // explain string OOMs the driver long before the (node-sized)
+          // data is any problem. The checkpoint caches the same blocks a
+          // persist would.
+          val next = p.checkpoint(
+            if (!jumping) prop
+            else prop
+              .join(prop.select(col("node").as("__ln"), col("label").as("__ll")),
+                col("label") === col("__ln"))
+              .select(col("node"), col("__ll").as("label")))
+          val nextSum = next.agg(sum("label")).head().getLong(0)
+          // next is materialized: the previous round's blocks are dead
+          if (jumping) p.release(prop)
+          p.release(labels)
+          labels = next
+          converged = nextSum == prevSum
+          prevSum = nextSum
+          i += 1
+        }
+        if (!converged)
+          throw new IllegalStateException(
+            s"nearDupClusters did not converge in $maxIter rounds")
       }
-      var prevSum = sum0.getLong(0)
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIter) {
-        // neighbor min-propagation
-        val prop0 = edges.join(labels, edges("dst") === labels("node"))
-          .select(edges("src").as("node"), col("label"))
-          .union(labels)
-          .groupBy("node").agg(min("label").as("label"))
-        // still not settled after JumpAfter rounds → a long-diameter
-        // component exists; engage pointer jumping (label(x) :=
-        // label(label(x)) — the inner join is total because every label
-        // value is a node id present in `prop`)
-        val jumping = i >= JumpAfter
-        val prop = if (jumping) prop0.persist() else prop0
-        // localCheckpoint, not persist: every round's plan references
-        // the previous round's frame TWICE (edge join + union; the jump
-        // join twice again), so without lineage truncation the LOGICAL
-        // plan doubles per round — 2^rounds nodes whose execution-id
-        // explain string OOMs the driver long before the (node-sized)
-        // data is any problem. The checkpoint caches the same blocks a
-        // persist would; intermediate rounds' blocks free when their
-        // RDDs are GC'd (only the final round stays reachable through
-        // the returned frame).
-        val next =
-          (if (!jumping) prop
-           else prop
-             .join(prop.select(col("node").as("__ln"), col("label").as("__ll")),
-               col("label") === col("__ln"))
-             .select(col("node"), col("__ll").as("label")))
-            .localCheckpoint(false)
-        val nextSum = next.agg(sum("label")).head().getLong(0)
-        if (jumping) prop.unpersist(blocking = false)
-        labels.unpersist(blocking = false)
-        labels = next
-        converged = nextSum == prevSum
-        prevSum = nextSum
-        i += 1
-      }
-      if (!converged)
-        throw new IllegalStateException(
-          s"nearDupClusters did not converge in $maxIter rounds")
-      // the converged labels stay materialized for the caller's action,
-      // then release query-scoped like every operator-internal cache
-      graft.CacheScope.autoRelease(labels)
-        .select(col("node").as("doc_id"), col("label").as("cluster"))
-    } finally edges.unpersist(blocking = false)
-  }
+      labels.select(col("node").as("doc_id"), col("label").as("cluster"))
+    }
 
   /** Incremental cluster maintenance for an ingest batch — the
     * companion to [[incrementalNearDups]]: fold the batch's pairs into

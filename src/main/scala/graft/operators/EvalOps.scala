@@ -1306,52 +1306,51 @@ object EvalOps {
   def bradleyTerry(outcomes: DataFrame, winner: Column, loser: Column,
       rounds: Int = 5): DataFrame = {
     val dec = "decimal(38,12)"
-    // pin the per-(winner, loser) counts: the symmetrization below
-    // references wl TWICE — unpinned, the corpus aggregation (and any
-    // upstream window) would run once per branch. coalesce(1): every
-    // table from here on is item²-sized, so the 5 MM rounds run as
-    // 1-task stages instead of shuffle.partitions-wide ones.
-    val wl = graft.CacheScope.autoRelease(
-      outcomes.select(winner.as("w"), loser.as("l"))
+    graft.CacheScope.pinned { pins =>
+      // pin the per-(winner, loser) counts: the symmetrization below
+      // references wl TWICE — unpinned, the corpus aggregation (and any
+      // upstream window) would run once per branch. coalesce(1): every
+      // table from here on is item²-sized, so the 5 MM rounds run as
+      // 1-task stages instead of shuffle.partitions-wide ones.
+      val wl = pins(outcomes.select(winner.as("w"), loser.as("l"))
         .groupBy("w", "l").agg(count(lit(1)).as("c"))
         .coalesce(1))
-    val sym = graft.CacheScope.autoRelease(
-      wl.select(col("w").as("i"), col("l").as("j"),
+      val sym = pins(wl.select(col("w").as("i"), col("l").as("j"),
           col("c").as("wi"), col("c").as("nn"))
         .unionByName(wl.select(col("l").as("i"), col("w").as("j"),
           lit(0L).as("wi"), col("c").as("nn")))
         .groupBy("i", "j").agg(sum("wi").as("w"), sum("nn").as("n")))
-    val tot = sym.groupBy("i").agg(sum("w").as("wins"), sum("n").as("n_comps"))
-    var p = tot.select(col("i"), lit(1.0).as("p"))
-    for (_ <- 1 to rounds) {
-      val pi = p.select(col("i"), col("p").as("pi"))
-      val pj = p.select(col("i").as("j"), col("p").as("pj"))
-      val den = sym
-        .join(broadcast(pi), Seq("i"))
-        .join(broadcast(pj), Seq("j"))
-        .groupBy("i")
-        .agg(sum(round(col("n").cast("double") / (col("pi") + col("pj")), 9)
-          .cast(dec)).as("den"))
-      // item-sized; localCheckpoint truncates the recurrence lineage —
-      // praw is referenced twice (normalizer + update) and p twice
-      // (both sides of the pair join), so an unpinned plan doubles
-      // per round (the nearDupClusters/bpeMerges lesson). LAZY form
-      // (the labelPropagation/kCore idiom): an eager checkpoint here
-      // is one blocking driver job per MM round; lazy truncates the
-      // lineage identically but lets all rounds run inside the
-      // caller's single action.
-      val praw = tot.join(broadcast(den), Seq("i"))
-        .select(col("i"), round(col("wins").cast("double")
-          / col("den").cast("double"), 9).as("praw"))
-        .localCheckpoint(false)
-      val s = praw.agg(sum(col("praw").cast(dec)).as("s"))
-      p = praw.crossJoin(broadcast(s))
-        .select(col("i"),
-          round(col("praw") / col("s").cast("double"), 9).as("p"))
+      val tot = sym.groupBy("i").agg(sum("w").as("wins"), sum("n").as("n_comps"))
+      var p = tot.select(col("i"), lit(1.0).as("p"))
+      for (_ <- 1 to rounds) {
+        val pi = p.select(col("i"), col("p").as("pi"))
+        val pj = p.select(col("i").as("j"), col("p").as("pj"))
+        val den = sym
+          .join(broadcast(pi), Seq("i"))
+          .join(broadcast(pj), Seq("j"))
+          .groupBy("i")
+          .agg(sum(round(col("n").cast("double") / (col("pi") + col("pj")), 9)
+            .cast(dec)).as("den"))
+        // item-sized; localCheckpoint truncates the recurrence lineage —
+        // praw is referenced twice (normalizer + update) and p twice
+        // (both sides of the pair join), so an unpinned plan doubles
+        // per round (the nearDupClusters/bpeMerges lesson). LAZY form
+        // (the labelPropagation/kCore idiom): an eager checkpoint here
+        // is one blocking driver job per MM round; lazy truncates the
+        // lineage identically but lets all rounds run inside the
+        // caller's single action.
+        val praw = pins.checkpoint(tot.join(broadcast(den), Seq("i"))
+          .select(col("i"), round(col("wins").cast("double")
+            / col("den").cast("double"), 9).as("praw")))
+        val s = praw.agg(sum(col("praw").cast(dec)).as("s"))
+        p = praw.crossJoin(broadcast(s))
+          .select(col("i"),
+            round(col("praw") / col("s").cast("double"), 9).as("p"))
+      }
+      tot.join(p, Seq("i"))
+        .select(col("i").as("item"), col("n_comps"), col("wins"),
+          round(col("p"), 6).as("strength"))
     }
-    tot.join(p, Seq("i"))
-      .select(col("i").as("item"), col("n_comps"), col("wins"),
-        round(col("p"), 6).as("strength"))
   }
 
   /** Chance-corrected annotator agreement (Cohen 1960): kappa between

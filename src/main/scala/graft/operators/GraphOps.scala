@@ -1,8 +1,6 @@
 package graft.operators
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Link-graph centrality for web-corpus curation. A crawled corpus
@@ -46,36 +44,12 @@ object GraphOps {
     * byte-identical; a 20-round walk pays two cheap truncations instead
     * of a 20-round analyzed plan (GraphOpsSpec pins the deep-walk path).
     * Results are unaffected — the checkpoint is a plan barrier, not a
-    * computation change. A walk's checkpoints go through
-    * [[WalkCheckpoints]], which releases the superseded ones once the
-    * output has been consumed.
+    * computation change. A walk's checkpoints are held by its
+    * [[graft.CacheScope.pinned]] scope, which releases the superseded
+    * ones once the output has been consumed and keeps the last one,
+    * whose blocks back the truncated lineage.
     */
   private val CheckpointEvery = 8
-
-  /** The `localCheckpoint` RDDs one deep walk pins. After the walk's
-    * output has run, only the LAST one still matters: its blocks back
-    * the truncated lineage (a second action on the same frame reads
-    * them), while materializing it cut every link to the earlier ones,
-    * which would otherwise stay cached for the session's lifetime.
-    */
-  private final class WalkCheckpoints {
-    private val rdds = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
-
-    /** `df.localCheckpoint(false)`, remembering the RDD it pins. */
-    def apply(df: DataFrame): DataFrame = {
-      val ck = df.localCheckpoint(false)
-      rdds ++= ck.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
-      ck
-    }
-
-    /** Unpersist every checkpoint but the last, once the last one is
-      * materialized. If the consuming action failed before that, the
-      * last one still reads through its predecessors, so all stay.
-      */
-    def releaseSuperseded(): Unit =
-      if (rdds.nonEmpty && rdds.last.isCheckpointed)
-        rdds.init.foreach(_.unpersist(blocking = false))
-  }
 
   /** PageRank with damping 0.85 over `edges` (`src`, `dst` BIGINT;
     * parallel edges allowed and counted with multiplicity). Every node
@@ -90,16 +64,15 @@ object GraphOps {
       iters: Int, nNodes: Long): DataFrame = {
     require(iters >= 1 && outDeg >= 1, "iters and outDeg must be >= 1")
     val scalePerIter = 20L * outDeg
-    // pin the edge list for the loop's lifetime (same reasoning as
-    // nearDupClusters: every round joins against it) — PRE-PARTITIONED
-    // on the join key: InMemoryRelation preserves its child's
-    // outputPartitioning, so every round's join reuses this one
-    // edge shuffle and only the (node-sized) rank table moves. At
-    // graph scale the edge list is the dominant table; shuffling it
-    // once instead of once per round is the classic Pregel partitioning.
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).persist()
-    try {
+    graft.CacheScope.pinned { p =>
+      // pin the edge list for the loop's lifetime (same reasoning as
+      // nearDupClusters: every round joins against it) — PRE-PARTITIONED
+      // on the join key: InMemoryRelation preserves its child's
+      // outputPartitioning, so every round's join reuses this one
+      // edge shuffle and only the (node-sized) rank table moves. At
+      // graph scale the edge list is the dominant table; shuffling it
+      // once instead of once per round is the classic Pregel partitioning.
+      val e = p(edges.select(col("src"), col("dst")).repartition(col("src")))
       // LAZY round chain, no per-round action (the bfsHops lesson,
       // measured there at ~10%): each round's rank table is referenced
       // EXACTLY once — by the next round's join — so the unrolled plan
@@ -109,7 +82,6 @@ object GraphOps {
       // the pinned edge list is cached (filled by round 1's stage,
       // read by rounds 2..iters).
       var ranks = nodes.select(col("node"), lit(1L).as("r"))
-      val ckpts = new WalkCheckpoints
       var k = 0
       while (k < iters) {
         val base = 3L * outDeg * pow60(scalePerIter, k)
@@ -124,21 +96,11 @@ object GraphOps {
         // deep-walk lineage guard (see [[CheckpointEvery]]); never fires
         // at the declared gate depths, so their plans stay pure-lazy
         if (k % CheckpointEvery == 0 && k < iters)
-          ranks = ckpts(ranks)
+          ranks = p.checkpoint(ranks)
       }
       val denom = nNodes.toDouble * pow60(scalePerIter, iters).toDouble
-      val out = ranks
-        .select(col("node"), col("r").as("rank_scaled"),
-          round(col("r").cast("double") / denom, 9).as("rank"))
-      // the edge cache must outlive this function (nothing has run yet
-      // when it returns) — release on the first consuming action
-      graft.CacheScope.onConsumed(out) {
-        e.unpersist(blocking = false)
-        ckpts.releaseSuperseded()
-      }
-      out
-    } catch {
-      case t: Throwable => e.unpersist(blocking = false); throw t
+      ranks.select(col("node"), col("r").as("rank_scaled"),
+        round(col("r").cast("double") / denom, 9).as("rank"))
     }
   }
 
@@ -169,14 +131,12 @@ object GraphOps {
     require(iters >= 1 && outDeg >= 1 && nSeeds >= 1,
       "iters, outDeg and nSeeds must be >= 1")
     val scalePerIter = 20L * outDeg
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).persist()
-    try {
+    graft.CacheScope.pinned { p =>
+      val e = p(edges.select(col("src"), col("dst")).repartition(col("src")))
       // lazy round chain — see [[pageRank]]: each round referenced once,
       // so no per-round persist/count; one caller action runs the walk
       var ranks = nodes
         .select(col("node"), when(col("seed"), 1L).otherwise(0L).as("r"))
-      val ckpts = new WalkCheckpoints
       var k = 0
       while (k < iters) {
         val base = 3L * outDeg * pow60(scalePerIter, k)
@@ -191,19 +151,11 @@ object GraphOps {
         k += 1
         // deep-walk lineage guard (see [[CheckpointEvery]])
         if (k % CheckpointEvery == 0 && k < iters)
-          ranks = ckpts(ranks)
+          ranks = p.checkpoint(ranks)
       }
       val denom = nSeeds.toDouble * pow60(scalePerIter, iters).toDouble
-      val out = ranks
-        .select(col("node"), col("r").as("rank_scaled"),
-          round(col("r").cast("double") / denom, 9).as("rank"))
-      graft.CacheScope.onConsumed(out) {
-        e.unpersist(blocking = false)
-        ckpts.releaseSuperseded()
-      }
-      out
-    } catch {
-      case t: Throwable => e.unpersist(blocking = false); throw t
+      ranks.select(col("node"), col("r").as("rank_scaled"),
+        round(col("r").cast("double") / denom, 9).as("rank"))
     }
   }
 
@@ -251,15 +203,13 @@ object GraphOps {
     */
   def hits(nodes: DataFrame, edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    // TWO pinned copies of the edge list, one per join key: the
-    // scatter-to-authorities leg joins on src, the gather-to-hubs leg
-    // on dst — a single copy would re-shuffle the (dominant) edge
-    // table every round on whichever key it isn't partitioned by
-    val eSrc = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).persist()
-    val eDst = edges.select(col("src"), col("dst"))
-      .repartition(col("dst")).persist()
-    try {
+    graft.CacheScope.pinned { p =>
+      // TWO pinned copies of the edge list, one per join key: the
+      // scatter-to-authorities leg joins on src, the gather-to-hubs leg
+      // on dst — a single copy would re-shuffle the (dominant) edge
+      // table every round on whichever key it isn't partitioned by
+      val eSrc = p(edges.select(col("src"), col("dst")).repartition(col("src")))
+      val eDst = p(edges.select(col("src"), col("dst")).repartition(col("dst")))
       // LAZY round chain (the pageRank/bfsHops lesson): every mid-round
       // score table is referenced exactly once by the next leg, so the
       // unrolled plan is linear and runs inside the caller's ONE action
@@ -269,7 +219,6 @@ object GraphOps {
       // alone keeps a lazy persist mark.
       var hubs = nodes.select(col("node"), lit(1L).as("h"))
       var auths: DataFrame = null
-      val ckpts = new WalkCheckpoints
       var k = 0
       while (k < rounds) {
         val a0 = nodes.select(col("node"))
@@ -277,7 +226,7 @@ object GraphOps {
             .groupBy(eSrc("dst").as("node")).agg(sum(col("h")).as("s")),
             Seq("node"), "left")
           .select(col("node"), coalesce(col("s"), lit(0L)).as("a"))
-        val a = if (k == rounds - 1) a0.persist() else a0
+        val a = if (k == rounds - 1) p(a0) else a0
         val h = nodes.select(col("node"))
           .join(eDst.join(a, eDst("dst") === a("node"))
             .groupBy(eDst("src").as("node")).agg(sum(col("a")).as("s")),
@@ -289,23 +238,10 @@ object GraphOps {
         // deep-walk lineage guard (see [[CheckpointEvery]]); the
         // mid-chain hub table is the only frame the next round reads
         if (k % CheckpointEvery == 0 && k < rounds)
-          hubs = ckpts(hubs)
+          hubs = p.checkpoint(hubs)
       }
-      val lastA = auths
-      val out = hubs.join(auths, "node")
+      hubs.join(auths, "node")
         .select(col("node"), col("h").as("hub"), col("a").as("auth"))
-      graft.CacheScope.onConsumed(out) {
-        lastA.unpersist(blocking = false)
-        eSrc.unpersist(blocking = false)
-        eDst.unpersist(blocking = false)
-        ckpts.releaseSuperseded()
-      }
-      out
-    } catch {
-      case t: Throwable =>
-        eSrc.unpersist(blocking = false)
-        eDst.unpersist(blocking = false)
-        throw t
     }
   }
 
@@ -364,9 +300,8 @@ object GraphOps {
     */
   def bfsHops(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).persist()
-    try {
+    graft.CacheScope.pinned { p =>
+      val e = p(edges.select(col("src"), col("dst")).repartition(col("src")))
       // LAZY persist chain, no per-round action: each round's frame is
       // marked for caching and referenced (at most twice — as the next
       // round's frontier filter and anti-join base), but nothing runs
@@ -378,9 +313,8 @@ object GraphOps {
       // dominate). The persist marks are what keep the recursion
       // linear — without them round k would re-derive every earlier
       // round per reference (the 2^k funnel disease).
-      var visited = seeds.select(col("node")).distinct()
-        .select(col("node"), lit(0).as("hop")).persist()
-      val intermediates = Seq.newBuilder[DataFrame]
+      var visited = p(seeds.select(col("node")).distinct()
+        .select(col("node"), lit(0).as("hop")))
       var k = 1
       while (k <= rounds) {
         val frontier = visited.filter(col("hop") === k - 1)
@@ -388,25 +322,13 @@ object GraphOps {
           .select(col("dst").as("node")).distinct()
           .join(visited.select("node"), Seq("node"), "left_anti")
           .select(col("node"), lit(k).as("hop"))
-        intermediates += visited
-        visited = visited.unionByName(next).persist()
+        visited = p(visited.unionByName(next))
         k += 1
       }
-      // intermediate levels AND the pinned edge list release once the
-      // final level materializes (their blocks already fed it); the
-      // final level itself is query-scoped. e must NOT release in a
-      // finally: with the lazy chain nothing has run yet when this
-      // function returns, and an eager unpersist would strip the
-      // edge cache before any of the `rounds` joins consume it.
-      val out = graft.CacheScope.autoRelease(visited).select("node", "hop")
-      val toRelease = intermediates.result()
-      graft.CacheScope.onConsumed(visited) {
-        toRelease.foreach(_.unpersist(blocking = false))
-        e.unpersist(blocking = false)
-      }
-      out
-    } catch {
-      case t: Throwable => e.unpersist(blocking = false); throw t
+      // every level and the edge list are read by the returned frame,
+      // so all release on its first consuming action (nothing has run
+      // yet when this function returns)
+      visited.select("node", "hop")
     }
   }
 
@@ -440,10 +362,10 @@ object GraphOps {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
-    val sym = und.select(col("a").as("node"), col("b").as("nbr"))
-      .unionByName(und.select(col("b").as("node"), col("a").as("nbr")))
-      .repartition(col("nbr")).persist()
-    try {
+    graft.CacheScope.pinned { p =>
+      val sym = p(und.select(col("a").as("node"), col("b").as("nbr"))
+        .unionByName(und.select(col("b").as("node"), col("a").as("nbr")))
+        .repartition(col("nbr")))
       var labels = sym.select(col("node")).distinct()
         .select(col("node"), col("node").as("label"))
       var k = 0
@@ -458,16 +380,12 @@ object GraphOps {
         // lazy plan truncation + cache: the next round references this
         // frame twice (join + nothing else, but the chain still doubles
         // without truncation over many rounds)
-        labels = next.localCheckpoint(false)
+        labels = p.checkpoint(next)
         k += 1
       }
-      val out = graft.CacheScope.autoRelease(labels)
-      graft.CacheScope.onConsumed(labels) {
-        sym.unpersist(blocking = false)
-      }
-      out
-    } catch {
-      case t: Throwable => sym.unpersist(blocking = false); throw t
+      // the last checkpoint backs the returned frame; the earlier ones
+      // and the edge list release once it has run
+      labels
     }
   }
 
@@ -539,21 +457,21 @@ object GraphOps {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
-    var sym = und.select(col("a").as("node"), col("b").as("nbr"))
-      .unionByName(und.select(col("b").as("node"), col("a").as("nbr")))
-      .localCheckpoint(false)
-    var r = 0
-    while (r < rounds) {
-      val kept = sym.groupBy("node").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select("node")
-      sym = sym
-        .join(kept, "node")
-        .join(kept.withColumnRenamed("node", "nbr"), "nbr")
-        .select("node", "nbr")
-        .localCheckpoint(false)
-      r += 1
+    graft.CacheScope.pinned { p =>
+      var sym = p.checkpoint(und.select(col("a").as("node"), col("b").as("nbr"))
+        .unionByName(und.select(col("b").as("node"), col("a").as("nbr"))))
+      var r = 0
+      while (r < rounds) {
+        val kept = sym.groupBy("node").agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= k).select("node")
+        sym = p.checkpoint(sym
+          .join(kept, "node")
+          .join(kept.withColumnRenamed("node", "nbr"), "nbr")
+          .select("node", "nbr"))
+        r += 1
+      }
+      sym.groupBy("node").agg(count(lit(1)).as("deg"))
     }
-    sym.groupBy("node").agg(count(lit(1)).as("deg"))
   }
 
   private def pow60(base: Long, k: Int): Long = {

@@ -156,12 +156,11 @@ object RegressionOps {
   def logisticGd(featsIn: DataFrame, iters: Int = 3, lr: Double = 0.5): DataFrame = {
     val session = featsIn.sparkSession
     import session.implicits._
-    // manual persist (kmeans lifecycle): per-iteration collects would
-    // consume a one-shot CacheScope listener; re-armed on the last pass
-    val feats = graft.PlanUtils.spread(featsIn.select(
-      col("x1").cast(DoubleType).as("x1"), col("x2").cast(DoubleType).as("x2"),
-      col("y").cast(DoubleType).as("y"))).persist()
-    try {
+    // the returned frame is driver-side rows: the pin releases at return
+    graft.CacheScope.pinned { p =>
+      val feats = p(graft.PlanUtils.spread(featsIn.select(
+        col("x1").cast(DoubleType).as("x1"), col("x2").cast(DoubleType).as("x2"),
+        col("y").cast(DoubleType).as("y"))))
       def r9(v: Double): Double = java.math.BigDecimal.valueOf(v)
         .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
       def zOf(b: Array[Double]): Column =
@@ -180,7 +179,7 @@ object RegressionOps {
           r9(b(j) - lr * (row.getDecimal(j).doubleValue() / n)))
       }
       val z = zOf(b)
-      val acc = graft.CacheScope.autoRelease(feats).agg(
+      val acc = feats.agg(
         sum(when((z > lit(0.0)) === (col("y") === lit(1.0)), 1L).otherwise(0L))
           .as("nc"),
         count(lit(1)).as("n")).head()
@@ -189,8 +188,6 @@ object RegressionOps {
         ("n_correct", nc.toDouble), ("n_docs", n.toDouble),
         ("accuracy", nc.toDouble / n.toDouble))
         .toDF("metric", "value").orderBy("metric")
-    } catch {
-      case t: Throwable => feats.unpersist(blocking = false); throw t
     }
   }
 

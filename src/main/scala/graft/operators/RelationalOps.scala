@@ -449,41 +449,40 @@ object RelationalOps {
   def assocRules(baskets: DataFrame, basketCol: String, itemCol: String,
       minSupport: Long): DataFrame = {
     require(minSupport >= 1, "minSupport must be >= 1")
-    val sets = baskets
-      .groupBy(col(basketCol).as("__bk"))
-      .agg(collect_set(col(itemCol)).as("__items"))
-      .persist()
-    // one cheap action sizes the lift denominator AND materializes the
-    // persist; autoRelease below re-arms release for the real consumer
-    // (the pageRank pattern — a one-shot scope would be spent here)
-    val nBaskets = sets.count()
-    val setsScoped = graft.CacheScope.autoRelease(sets)
-    val sorted = array_sort(col("__items"))
-    // upper-triangle pair generation inside the row: for element i,
-    // pair it with every element after it — canonical (a < b) order
-    // falls out of the sort, duplicates are impossible post-collect_set
-    val pairsArr = flatten(transform(sorted, (x, i) =>
-      transform(slice(sorted, i + lit(2), size(sorted)), y =>
-        struct(x.as("item_a"), y.as("item_b")))))
-    val pairCounts = setsScoped
-      .select(explode(pairsArr).as("__p"))
-      .select(col("__p.item_a").as("item_a"), col("__p.item_b").as("item_b"))
-      .groupBy("item_a", "item_b").agg(count(lit(1)).as("n_ab"))
-      .filter(col("n_ab") >= lit(minSupport))
-    val itemCounts = setsScoped
-      .select(explode(col("__items")).as("__it"))
-      .groupBy("__it").agg(count(lit(1)).as("__n"))
-    pairCounts
-      .join(broadcast(itemCounts.select(col("__it").as("item_a"),
-        col("__n").as("n_a"))), Seq("item_a"))
-      .join(broadcast(itemCounts.select(col("__it").as("item_b"),
-        col("__n").as("n_b"))), Seq("item_b"))
-      .select(col("item_a"), col("item_b"), col("n_ab"), col("n_a"),
-        col("n_b"),
-        (col("n_ab").cast("double") / col("n_a")).as("conf_ab"),
-        (col("n_ab").cast("double") / col("n_b")).as("conf_ba"),
-        ((col("n_ab").cast("double") * lit(nBaskets.toDouble)) /
-          (col("n_a").cast("double") * col("n_b"))).as("lift"))
+    graft.CacheScope.pinned { p =>
+      val sets = p(baskets
+        .groupBy(col(basketCol).as("__bk"))
+        .agg(collect_set(col(itemCol)).as("__items")))
+      // one cheap action sizes the lift denominator AND materializes the
+      // pin; it releases when the returned frame is first consumed
+      val nBaskets = sets.count()
+      val sorted = array_sort(col("__items"))
+      // upper-triangle pair generation inside the row: for element i,
+      // pair it with every element after it — canonical (a < b) order
+      // falls out of the sort, duplicates are impossible post-collect_set
+      val pairsArr = flatten(transform(sorted, (x, i) =>
+        transform(slice(sorted, i + lit(2), size(sorted)), y =>
+          struct(x.as("item_a"), y.as("item_b")))))
+      val pairCounts = sets
+        .select(explode(pairsArr).as("__p"))
+        .select(col("__p.item_a").as("item_a"), col("__p.item_b").as("item_b"))
+        .groupBy("item_a", "item_b").agg(count(lit(1)).as("n_ab"))
+        .filter(col("n_ab") >= lit(minSupport))
+      val itemCounts = sets
+        .select(explode(col("__items")).as("__it"))
+        .groupBy("__it").agg(count(lit(1)).as("__n"))
+      pairCounts
+        .join(broadcast(itemCounts.select(col("__it").as("item_a"),
+          col("__n").as("n_a"))), Seq("item_a"))
+        .join(broadcast(itemCounts.select(col("__it").as("item_b"),
+          col("__n").as("n_b"))), Seq("item_b"))
+        .select(col("item_a"), col("item_b"), col("n_ab"), col("n_a"),
+          col("n_b"),
+          (col("n_ab").cast("double") / col("n_a")).as("conf_ab"),
+          (col("n_ab").cast("double") / col("n_b")).as("conf_ba"),
+          ((col("n_ab").cast("double") * lit(nBaskets.toDouble)) /
+            (col("n_a").cast("double") * col("n_b"))).as("lift"))
+    }
   }
 
   /** ANALYZE-style column profile: one row per requested numeric

@@ -769,18 +769,16 @@ object SimilarityOps {
     * rounding boundary is ≥ 1.2e-9 across all three SFs (≥ 12× the
     * noise), so both engines round identically. Between-round
     * normalization divides by max|w| (order-independent, no sqrt); the
-    * single sqrt happens once at the end. The iterate is persisted
-    * manually across rounds (the driver-loop pattern; a scoped cache
-    * would release on the first round's action).
+    * single sqrt happens once at the end. The iterate is pinned across
+    * rounds and released at return: the output is driver-side rows.
     */
   def powerIterationPC(embeddings: DataFrame, vecCol: String = "embedding",
       iters: Int = 5): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val dec = "decimal(38,12)"
-    val base = embeddings.select(col(vecCol).cast("array<double>").as("e"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.CacheScope.pinned { p =>
+      val base = p(embeddings.select(col(vecCol).cast("array<double>").as("e")))
       val n = base.count()
       require(n > 0, "powerIterationPC needs a non-empty corpus")
       val dims = base.select(size(col("e"))).head().getInt(0)
@@ -817,7 +815,7 @@ object SimilarityOps {
         (j, BigDecimal(w / norm)
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
       }.toSeq.toDF("dim", "loading")
-    } finally { base.unpersist(blocking = false); () }
+    }
   }
 
   /** Top TWO principal components by power iteration + Hotelling
@@ -844,9 +842,8 @@ object SimilarityOps {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val dec = "decimal(38,12)"
-    val base = embeddings.select(col(vecCol).cast("array<double>").as("e"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.CacheScope.pinned { p =>
+      val base = p(embeddings.select(col(vecCol).cast("array<double>").as("e")))
       val n = base.count()
       require(n > 0, "powerIterationPC2 needs a non-empty corpus")
       val dims = base.select(size(col("e"))).head().getInt(0)
@@ -896,7 +893,7 @@ object SimilarityOps {
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
       (0 until dims).map(j => (j, r6(u1(j)), r6(v2(j) / n2)))
         .toDF("dim", "pc1", "pc2")
-    } finally { base.unpersist(blocking = false); () }
+    }
   }
 
   /** Product-quantization ANN (Jégou et al., "Product Quantization for
@@ -1131,14 +1128,13 @@ object SimilarityOps {
   def mmrRerank(embeddings: DataFrame, queryPred: Column, topC: Int = 10,
       select: Int = 5, lambda: Double = 0.7): DataFrame = {
     require(topC >= select && select >= 1, "need topC >= select >= 1")
-    val cand = graft.CacheScope.autoRelease(
-      bruteForceTopK(embeddings, queryPred, topC)
+    graft.CacheScope.pinned { p =>
+      val cand = p(bruteForceTopK(embeddings, queryPred, topC)
         .select(col("q_id"), col("nn_id"), round(col("sim"), 6).as("rel"))
         .coalesce(1))
-    val vecs = embeddings.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nrm"))
-    val ps = graft.CacheScope.autoRelease(
-      cand.select(col("q_id"), col("nn_id").as("a"))
+      val vecs = embeddings.select(col("vec_id"), col("embedding"),
+        norm(col("embedding")).as("nrm"))
+      val ps = p(cand.select(col("q_id"), col("nn_id").as("a"))
         .join(cand.select(col("q_id"), col("nn_id").as("b")), "q_id")
         .filter(col("a") =!= col("b"))
         .join(vecs.select(col("vec_id").as("a"), col("embedding").as("ea"),
@@ -1148,35 +1144,34 @@ object SimilarityOps {
         .select(col("q_id"), col("a"), col("b"),
           round(dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6).as("s"))
         .coalesce(1))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("score").desc, col("nn_id").asc)
-    var sel = cand
-      .select(col("q_id"), col("nn_id"), (lit(lambda) * col("rel")).as("score"))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-      .select(col("q_id"), col("nn_id"), lit(1).as("mmr_rank"), col("score"))
+      val w = Window.partitionBy("q_id")
+        .orderBy(col("score").desc, col("nn_id").asc)
       // lazy checkpoint (the labelPropagation idiom): truncates the
       // per-round recurrence lineage without one blocking job per
       // greedy round — all `select` rounds run inside the caller's
       // single action
-      .localCheckpoint(false)
-    for (r <- 2 to select) {
-      val rem = cand.join(sel.select(col("q_id"), col("nn_id")),
-        Seq("q_id", "nn_id"), "left_anti")
-      val mx = rem
-        .join(ps.withColumnRenamed("a", "nn_id"), Seq("q_id", "nn_id"))
-        .join(sel.select(col("q_id"), col("nn_id").as("b")), Seq("q_id", "b"))
-        .groupBy("q_id", "nn_id").agg(max(col("s")).as("mxs"))
-      val scored = rem.join(mx, Seq("q_id", "nn_id"), "left")
-        .select(col("q_id"), col("nn_id"),
-          (lit(lambda) * col("rel")
-            - lit(1.0 - lambda) * coalesce(col("mxs"), lit(0.0))).as("score"))
-      sel = sel.unionByName(
-        scored.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-          .select(col("q_id"), col("nn_id"), lit(r).as("mmr_rank"),
-            col("score")))
-        .localCheckpoint(false)
+      var sel = p.checkpoint(cand
+        .select(col("q_id"), col("nn_id"), (lit(lambda) * col("rel")).as("score"))
+        .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+        .select(col("q_id"), col("nn_id"), lit(1).as("mmr_rank"), col("score")))
+      for (r <- 2 to select) {
+        val rem = cand.join(sel.select(col("q_id"), col("nn_id")),
+          Seq("q_id", "nn_id"), "left_anti")
+        val mx = rem
+          .join(ps.withColumnRenamed("a", "nn_id"), Seq("q_id", "nn_id"))
+          .join(sel.select(col("q_id"), col("nn_id").as("b")), Seq("q_id", "b"))
+          .groupBy("q_id", "nn_id").agg(max(col("s")).as("mxs"))
+        val scored = rem.join(mx, Seq("q_id", "nn_id"), "left")
+          .select(col("q_id"), col("nn_id"),
+            (lit(lambda) * col("rel")
+              - lit(1.0 - lambda) * coalesce(col("mxs"), lit(0.0))).as("score"))
+        sel = p.checkpoint(sel.unionByName(
+          scored.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+            .select(col("q_id"), col("nn_id"), lit(r).as("mmr_rank"),
+              col("score"))))
+      }
+      sel.select(col("q_id"), col("mmr_rank"), col("nn_id"), col("score"))
     }
-    sel.select(col("q_id"), col("mmr_rank"), col("nn_id"), col("score"))
   }
 
   def cosineNearDups(embeddings: DataFrame, minSim: Double): DataFrame = {
@@ -1301,8 +1296,7 @@ object SimilarityOps {
       embeddings.select(col("vec_id"), col("embedding"))
         .join(asg, Seq("vec_id"))
         .select(col("cluster"), col("vec_id"), col("embedding"),
-          norm(col("embedding")).as("nrm"))
-        .persist())
+          norm(col("embedding")).as("nrm")))
     // pinned: the qualifying-pair table feeds the drop set, the detail
     // sim lookup AND the per-cluster drop count — tiny after the tau
     // filter, but its computation is the quadratic term
@@ -1314,8 +1308,7 @@ object SimilarityOps {
         .filter(col("va") < col("vb"))
         .withColumn("sim", dot(col("ea"), col("eb")) / (col("na") * col("nb")))
         .filter(col("sim") >= tau)
-        .select(col("cluster"), col("va"), col("vb"), col("sim"))
-        .persist())
+        .select(col("cluster"), col("va"), col("vb"), col("sim")))
     val dropped = pairs.groupBy("cluster", "vb").agg(min("va").as("dup_of"))
     val detail = dropped
       .join(pairs.select(col("vb"), col("va").as("dup_of"), col("sim")),

@@ -142,8 +142,8 @@ object TextOps {
     * rounds ≪ distinct-pair count, as any real tokenizer does.
     */
   def bpeMerges(docs: DataFrame, rounds: Int = 8, vocabTopK: Int = 20,
-      textCol: String = "text"): DataFrame = {
-    val (wf, merges) = bpeTrainLoop(bpeWordFreqs(docs, textCol), rounds)
+      textCol: String = "text"): DataFrame = graft.CacheScope.pinned { p =>
+    val (wf, merges) = bpeTrainLoop(p, bpeWordFreqs(p, docs, textCol), rounds)
     val mergeRows = merges.zipWithIndex.map { case (top1, i) =>
       top1.select(lit(i + 1).as("round"), lit("merge").as("kind"),
         col("l"), col("r"), col("n"))
@@ -169,11 +169,11 @@ object TextOps {
     * sentinel-wrapped (see [[bpeMerges]]). The ONE corpus-sized scan of
     * the BPE family; everything downstream is vocabulary-sized.
     */
-  private def bpeWordFreqs(docs: DataFrame, textCol: String): DataFrame =
-    tokenize(docs, textCol = textCol)
+  private def bpeWordFreqs(p: graft.CacheScope.Pins, docs: DataFrame,
+      textCol: String): DataFrame =
+    p.checkpoint(tokenize(docs, textCol = textCol)
       .groupBy("word").agg(count(lit(1)).as("freq"))
-      .select(col("freq"), bpeEncodeCol(col("word")).as("enc"))
-      .localCheckpoint(false)
+      .select(col("freq"), bpeEncodeCol(col("word")).as("enc")))
 
   /** Sentinel-wrap every character of `word` into the initial symbol
     * string.
@@ -218,18 +218,16 @@ object TextOps {
     * table is checkpointed per round, truncating the otherwise-doubling
     * iterative lineage (the funnel/CC lesson, NOTES.md).
     */
-  private def bpeTrainLoop(wf0: DataFrame,
+  private def bpeTrainLoop(p: graft.CacheScope.Pins, wf0: DataFrame,
       rounds: Int): (DataFrame, Vector[DataFrame]) = {
     var wf = wf0
     var merges = Vector.empty[DataFrame]
     var round = 1
     while (round <= rounds) {
-      val top1 = bpePairCountsOf(wf)
-        .orderBy(col("n").desc, col("l").asc, col("r").asc).limit(1)
-        .localCheckpoint(false)
+      val top1 = p.checkpoint(bpePairCountsOf(wf)
+        .orderBy(col("n").desc, col("l").asc, col("r").asc).limit(1))
       merges :+= top1
-      wf = bpeApplyMerge(wf, top1).select(col("freq"), col("enc"))
-        .localCheckpoint(false)
+      wf = p.checkpoint(bpeApplyMerge(wf, top1).select(col("freq"), col("enc")))
       round += 1
     }
     (wf, merges)
@@ -262,15 +260,14 @@ object TextOps {
     * scoring family. Nothing corpus-sized reaches the driver.
     */
   def bpeEncode(docs: DataFrame, rounds: Int = 8, evalMod: Long = 5,
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = graft.CacheScope.pinned { p =>
     val train = docs.filter(pmod(col("doc_id"), lit(evalMod)) =!= 0)
     val eval = docs.filter(pmod(col("doc_id"), lit(evalMod)) === 0)
-    val (_, merges) = bpeTrainLoop(bpeWordFreqs(train, textCol), rounds)
+    val (_, merges) = bpeTrainLoop(p, bpeWordFreqs(p, train, textCol), rounds)
 
     // per-doc word occurrence counts of the eval split (one scan)
-    val evalWords = graft.CacheScope.autoRelease(
-      tokenize(eval, textCol = textCol)
-        .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("cnt")))
+    val evalWords = p(tokenize(eval, textCol = textCol)
+      .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("cnt")))
     // encode the distinct eval vocabulary through the trained merges
     var enc = evalWords.select(col("word")).distinct()
       .select(col("word"), bpeEncodeCol(col("word")).as("enc"))

@@ -157,14 +157,17 @@ class StreamingSinksSpec extends SparkSpec {
     assert(blocks.keySet == fileGates ++ memoryGates.keySet,
       s"unclassified streaming gates: ${blocks.keySet -- fileGates -- memoryGates.keySet}; " +
         s"stale contract entries: ${(fileGates ++ memoryGates.keySet) -- blocks.keySet}")
+    // memory gates go through EntryHelpers.memorySinkRun(df, tag, mode)
+    def memorySink(block: String): Option[String] =
+      """memorySinkRun\([^\n]*, "([a-z]+)"\)""".r.findFirstMatchIn(block).map(_.group(1))
     for (g <- fileGates) {
       assert(blocks(g).contains("fileSinkRun"), s"$g must use the parquet file sink")
-      assert(!blocks(g).contains("format(\"memory\")"),
+      assert(memorySink(blocks(g)).isEmpty && !blocks(g).contains("format(\"memory\")"),
         s"$g is data-sized: the memory sink is the driver-collect anti-pattern")
     }
     for ((g, (mode, _)) <- memoryGates) {
-      assert(blocks(g).contains("format(\"memory\")"), s"$g expected a memory sink")
-      assert(blocks(g).contains(s"outputMode(\"$mode\")"),
+      assert(memorySink(blocks(g)).nonEmpty, s"$g expected a memory sink")
+      assert(memorySink(blocks(g)).contains(mode),
         s"$g expected outputMode $mode (the mode is WHY memory is allowed)")
       assert(!blocks(g).contains("fileSinkRun"),
         s"$g classified memory-sink but uses fileSinkRun — reclassify")
