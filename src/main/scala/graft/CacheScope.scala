@@ -6,13 +6,14 @@ import scala.collection.mutable
 
 import org.apache.spark.graft.MemoryBridge.dropCheckpoint
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** The one lifecycle for data an operator pins: persisted frames, lazy
-  * `localCheckpoint`s and memory-sink result views.
+/** The one lifecycle for data an operator pins: persisted frames and
+  * lazy `localCheckpoint`s. (Memory-sink result views need no scope:
+  * `EntryHelpers.memorySinkRun` drops the view before it returns.)
   *
   * Operators pin intermediates (the deduped ratings, the shingle +
   * signature base, a Pregel walk's edge list) so a multi-branch plan or
@@ -72,16 +73,15 @@ object CacheScope {
 
   /** The pins and checkpoints one [[pinned]] body holds. */
   final class Pins private[CacheScope] () {
-    private final class Pin(val frame: DataFrame, val drop: () => Unit)
     private final class Checkpoint(val rdd: RDD[_], val source: LogicalPlan)
 
-    private val pins = mutable.ArrayBuffer.empty[Pin]
+    private val pins = mutable.ArrayBuffer.empty[DataFrame]
     private val checkpoints = mutable.ArrayBuffer.empty[Checkpoint]
 
     /** `df.persist()` (MEMORY_AND_DISK), held by this scope. */
     def apply(df: DataFrame): DataFrame = {
       val persisted = df.persist()
-      pins += new Pin(persisted, () => { persisted.unpersist(blocking = false); () })
+      pins += persisted
       persisted
     }
 
@@ -95,22 +95,12 @@ object CacheScope {
       ck
     }
 
-    /** `spark.table(name)` for a temp view (a memory sink's result
-      * table), held like a pin: the view is dropped on release, which
-      * frees the rows it keeps on the driver.
-      */
-    def tempView(spark: SparkSession, name: String): DataFrame = {
-      val view = spark.table(name)
-      pins += new Pin(view, () => { spark.catalog.dropTempView(name); () })
-      view
-    }
-
     /** Release `df` — a pin or checkpoint of this scope — now, for
       * round-scoped data the rest of the body no longer reads.
       */
     def release(df: DataFrame): Unit = {
-      val pin = pins.indexWhere(_.frame eq df)
-      if (pin >= 0) pins.remove(pin).drop()
+      val pin = pins.indexWhere(_ eq df)
+      if (pin >= 0) unpersist(pins.remove(pin))
       else {
         val rdds = rddsOf(df.queryExecution.analyzed).toSet
         val gone = checkpoints.filter(c => rdds(c.rdd))
@@ -119,6 +109,8 @@ object CacheScope {
         checkpoints --= gone
       }
     }
+
+    private def unpersist(pin: DataFrame): Unit = pin.unpersist(blocking = false)
 
     private def rddsOf(plan: LogicalPlan): Seq[RDD[_]] =
       plan.collect { case r: LogicalRDD => r.rdd }
@@ -141,7 +133,7 @@ object CacheScope {
     }
 
     private[CacheScope] def releaseAll(): Unit = {
-      pins.foreach(_.drop())
+      pins.foreach(unpersist)
       checkpoints.foreach(c => dropCheckpoint(c.rdd))
     }
 
@@ -150,12 +142,12 @@ object CacheScope {
       val plan = out.queryExecution.analyzed
       val runs = runPlans(plan)
       val (read, unread) = pins.toList.partition(pin =>
-        runs.exists(_.exists(_.sameResult(pin.frame.queryExecution.analyzed))))
-      unread.foreach(_.drop())
+        runs.exists(_.exists(_.sameResult(pin.queryExecution.analyzed))))
+      unread.foreach(unpersist)
       val cks = checkpoints.toList
       val direct = checkpointsIn(plan)
       if (read.nonEmpty || cks.nonEmpty) onConsumed(out) {
-        read.foreach(_.drop())
+        read.foreach(unpersist)
         if (direct.forall(_.rdd.isCheckpointed))
           cks.filterNot(direct.contains).foreach(c => dropCheckpoint(c.rdd))
       }

@@ -94,19 +94,19 @@ private[graft] object EntryHelpers {
   /** Run a stream to completion through a MEMORY sink (`mode` =
     * "update" or "complete") and return its result table — the sink
     * shape for the metric-sized streaming gates. The sink registers a
-    * temp view `graft_stream_<tag>_<n>` that holds every result row on
-    * the driver; it is held in a [[CacheScope.pinned]] scope, so the
-    * view is dropped when the returned frame is first consumed (a
-    * second action on that frame still reads the sink's rows).
+    * temp view `graft_stream_<tag>_<n>`; it is dropped before this
+    * returns. The returned frame's resolved plan reads the sink itself,
+    * so it keeps the result rows (on the driver) for as long as the
+    * frame is referenced, and every action on it reads the same rows.
     */
   private[graft] def memorySinkRun(df: DataFrame, tag: String,
-      mode: String): DataFrame = CacheScope.pinned { p =>
+      mode: String): DataFrame = {
     val spark = df.sparkSession
     val qn = s"graft_stream_${tag}_${StreamSeq.incrementAndGet()}"
     runStream(spark)(df.writeStream.format("memory").queryName(qn)
       .outputMode(mode)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start())
-    p.tempView(spark, qn)
+    try spark.table(qn) finally spark.catalog.dropTempView(qn)
   }
 
   /** Run an append-mode stream through a PARQUET file sink and read the

@@ -124,6 +124,13 @@ object ClusterOps {
     cents
   }
 
+  /** (`idCol`, `__x` = the first `dims` dims of `vecCol` as doubles). */
+  private def vectors(embeddings: DataFrame, idCol: String, vecCol: String,
+      dims: Int): DataFrame =
+    embeddings.select(col(idCol),
+      expr(s"transform(slice($vecCol, 1, $dims), e -> CAST(e AS DOUBLE))")
+        .as("__x"))
+
   /** Run `iters` Lloyd iterations with k clusters over the first `dims`
     * dimensions of `vecCol` (float32 → double cast is exact), then
     * publish each row's final assignment under the FINAL centroids:
@@ -133,9 +140,7 @@ object ClusterOps {
       dims: Int, k: Int, iters: Int): DataFrame = {
     require(k >= 2 && dims >= 1 && iters >= 1, "k>=2, dims>=1, iters>=1")
     graft.CacheScope.pinned { p =>
-      val x = p(embeddings.select(col(idCol),
-        expr(s"transform(slice($vecCol, 1, $dims), e -> CAST(e AS DOUBLE))")
-          .as("__x")))
+      val x = p(vectors(embeddings, idCol, vecCol, dims))
       val cents = lloyd(x, idCol, k, dims, iters)
       val finalDs = cents.toIndexedSeq.map(c => dist2(col("__x"), c))
       x.select(col(idCol), argmin(finalDs).as("cluster"),
@@ -160,10 +165,7 @@ object ClusterOps {
       dims: Int, k: Int, iters: Int): DataFrame = {
     require(k >= 2 && dims >= 1 && iters >= 1, "k>=2, dims>=1, iters>=1")
     graft.CacheScope.pinned { p =>
-      val x = p(embeddings.select(col(idCol),
-        expr(s"transform(slice($vecCol, 1, $dims), e -> CAST(e AS DOUBLE))")
-          .as("__x"))
-        .repartition(col(idCol)))
+      val x = p(vectors(embeddings, idCol, vecCol, dims).repartition(col(idCol)))
       val cents = lloyd(x, idCol, k, dims, iters, arrAssign(dims))
       x.select(col(idCol), arrAssign(dims)(cents).as("cluster"))
     }
@@ -194,9 +196,7 @@ object ClusterOps {
       dims: Int, k: Int, iters: Int): DataFrame = {
     require(k >= 2 && dims >= 1 && iters >= 1, "k>=2, dims>=1, iters>=1")
     graft.CacheScope.pinned { p =>
-      val x = p(embeddings.select(col(idCol),
-        expr(s"transform(slice($vecCol, 1, $dims), e -> CAST(e AS DOUBLE))")
-          .as("__x")))
+      val x = p(vectors(embeddings, idCol, vecCol, dims))
       val cents = lloyd(x, idCol, k, dims, iters)
       val ds = cents.toIndexedSeq.map(c => dist2(col("__x"), c))
       val cl = argmin(ds)

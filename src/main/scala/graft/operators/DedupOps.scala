@@ -253,12 +253,7 @@ object DedupOps {
       graft.CacheScope.autoRelease(withSig)
     }
     val cand = lshCandidates(base.select("doc_id", "sig"), r, bands)
-    val sa = base.select(col("doc_id").as("da"), col("hs").as("sha"))
-    val sb = base.select(col("doc_id").as("db"), col("hs").as("shb"))
-    cand.join(sa, "da").join(sb, "db")
-      .withColumn("jac", jaccard(col("sha"), col("shb")))
-      .filter(col("jac") >= minJac)
-      .select("da", "db", "jac")
+    verifiedPairs(cand, base, minJac)
   }
 
   /** Incremental near-dup detection for an ingest batch: near-dup
@@ -309,6 +304,12 @@ object DedupOps {
       .select(least(col("da"), col("db")).as("da"),
         greatest(col("da"), col("db")).as("db"))
       .distinct()
+    verifiedPairs(cand, base, minJac)
+  }
+
+  /** `cand`'s pairs (da, db) whose `base` shingle sets have Jaccard ≥ `minJac`. */
+  private def verifiedPairs(cand: DataFrame, base: DataFrame,
+      minJac: Double): DataFrame = {
     val sa = base.select(col("doc_id").as("da"), col("hs").as("sha"))
     val sb = base.select(col("doc_id").as("db"), col("hs").as("shb"))
     cand.join(sa, "da").join(sb, "db")

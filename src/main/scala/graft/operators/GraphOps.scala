@@ -63,45 +63,9 @@ object GraphOps {
   def pageRank(nodes: DataFrame, edges: DataFrame, outDeg: Int,
       iters: Int, nNodes: Long): DataFrame = {
     require(iters >= 1 && outDeg >= 1, "iters and outDeg must be >= 1")
-    val scalePerIter = 20L * outDeg
-    graft.CacheScope.pinned { p =>
-      // pin the edge list for the loop's lifetime (same reasoning as
-      // nearDupClusters: every round joins against it) — PRE-PARTITIONED
-      // on the join key: InMemoryRelation preserves its child's
-      // outputPartitioning, so every round's join reuses this one
-      // edge shuffle and only the (node-sized) rank table moves. At
-      // graph scale the edge list is the dominant table; shuffling it
-      // once instead of once per round is the classic Pregel partitioning.
-      val e = p(edges.select(col("src"), col("dst")).repartition(col("src")))
-      // LAZY round chain, no per-round action (the bfsHops lesson,
-      // measured there at ~10%): each round's rank table is referenced
-      // EXACTLY once — by the next round's join — so the unrolled plan
-      // is linear (no 2^k funnel) and needs neither persist nor a
-      // blocking count(). The whole walk runs inside the caller's ONE
-      // action instead of `iters` serialized driver round-trips; only
-      // the pinned edge list is cached (filled by round 1's stage,
-      // read by rounds 2..iters).
-      var ranks = nodes.select(col("node"), lit(1L).as("r"))
-      var k = 0
-      while (k < iters) {
-        val base = 3L * outDeg * pow60(scalePerIter, k)
-        val contrib = e.join(ranks, e("src") === ranks("node"))
-          .groupBy(e("dst").as("node"))
-          .agg(sum(col("r")).as("in_r"))
-        ranks = nodes.select(col("node"))
-          .join(contrib, Seq("node"), "left")
-          .select(col("node"),
-            (lit(base) + lit(17L) * coalesce(col("in_r"), lit(0L))).as("r"))
-        k += 1
-        // deep-walk lineage guard (see [[CheckpointEvery]]); never fires
-        // at the declared gate depths, so their plans stay pure-lazy
-        if (k % CheckpointEvery == 0 && k < iters)
-          ranks = p.checkpoint(ranks)
-      }
-      val denom = nNodes.toDouble * pow60(scalePerIter, iters).toDouble
-      ranks.select(col("node"), col("r").as("rank_scaled"),
-        round(col("r").cast("double") / denom, 9).as("rank"))
-    }
+    rankWalk(edges, outDeg, iters, nNodes,
+      nodes.select(col("node"), lit(1L).as("r")), nodes.select(col("node")),
+      base => lit(base))
   }
 
   /** Personalized PageRank (Jeh–Widom 2003): random walk with restart
@@ -130,30 +94,59 @@ object GraphOps {
       iters: Int, nSeeds: Long): DataFrame = {
     require(iters >= 1 && outDeg >= 1 && nSeeds >= 1,
       "iters, outDeg and nSeeds must be >= 1")
+    rankWalk(edges, outDeg, iters, nSeeds,
+      nodes.select(col("node"), when(col("seed"), 1L).otherwise(0L).as("r")),
+      nodes.select(col("node"), col("seed")),
+      base => when(col("seed"), lit(base)).otherwise(lit(0L)))
+  }
+
+  /** The scaled-integer Pregel walk behind [[pageRank]] and
+    * [[personalizedPageRank]]: from `ranks0` (node, r = R_0), each round
+    * sets R_{k+1} = teleport(3d·(20d)^k) + 17·Σ in-edge R_k over
+    * `walkNodes` (which carries whatever columns `teleport` reads), and
+    * publishes rank = R_iters / (mass · (20d)^iters). `ranks0` is
+    * by-name: it is built inside the scope, after the edge pin, so the
+    * plan's expression ids follow the walk's build order.
+    */
+  private def rankWalk(edges: DataFrame, outDeg: Int, iters: Int, mass: Long,
+      ranks0: => DataFrame, walkNodes: DataFrame, teleport: Long => Column)
+      : DataFrame = {
     val scalePerIter = 20L * outDeg
     graft.CacheScope.pinned { p =>
+      // pin the edge list for the loop's lifetime (same reasoning as
+      // nearDupClusters: every round joins against it) — PRE-PARTITIONED
+      // on the join key: InMemoryRelation preserves its child's
+      // outputPartitioning, so every round's join reuses this one
+      // edge shuffle and only the (node-sized) rank table moves. At
+      // graph scale the edge list is the dominant table; shuffling it
+      // once instead of once per round is the classic Pregel partitioning.
       val e = p(edges.select(col("src"), col("dst")).repartition(col("src")))
-      // lazy round chain — see [[pageRank]]: each round referenced once,
-      // so no per-round persist/count; one caller action runs the walk
-      var ranks = nodes
-        .select(col("node"), when(col("seed"), 1L).otherwise(0L).as("r"))
+      // LAZY round chain, no per-round action (the bfsHops lesson,
+      // measured there at ~10%): each round's rank table is referenced
+      // EXACTLY once — by the next round's join — so the unrolled plan
+      // is linear (no 2^k funnel) and needs neither persist nor a
+      // blocking count(). The whole walk runs inside the caller's ONE
+      // action instead of `iters` serialized driver round-trips; only
+      // the pinned edge list is cached (filled by round 1's stage,
+      // read by rounds 2..iters).
+      var ranks = ranks0
       var k = 0
       while (k < iters) {
         val base = 3L * outDeg * pow60(scalePerIter, k)
         val contrib = e.join(ranks, e("src") === ranks("node"))
           .groupBy(e("dst").as("node"))
           .agg(sum(col("r")).as("in_r"))
-        ranks = nodes.select(col("node"), col("seed"))
+        ranks = walkNodes
           .join(contrib, Seq("node"), "left")
           .select(col("node"),
-            (when(col("seed"), lit(base)).otherwise(lit(0L))
-              + lit(17L) * coalesce(col("in_r"), lit(0L))).as("r"))
+            (teleport(base) + lit(17L) * coalesce(col("in_r"), lit(0L))).as("r"))
         k += 1
-        // deep-walk lineage guard (see [[CheckpointEvery]])
+        // deep-walk lineage guard (see [[CheckpointEvery]]); never fires
+        // at the declared gate depths, so their plans stay pure-lazy
         if (k % CheckpointEvery == 0 && k < iters)
           ranks = p.checkpoint(ranks)
       }
-      val denom = nSeeds.toDouble * pow60(scalePerIter, iters).toDouble
+      val denom = mass.toDouble * pow60(scalePerIter, iters).toDouble
       ranks.select(col("node"), col("r").as("rank_scaled"),
         round(col("r").cast("double") / denom, 9).as("rank"))
     }
@@ -267,11 +260,7 @@ object GraphOps {
     * machinery lives — is identical.
     */
   def triangleCounts(edges: DataFrame): DataFrame = {
-    val e = graft.CacheScope.autoRelease(
-      edges.filter(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .distinct())
+    val e = graft.CacheScope.autoRelease(undirectedSimple(edges))
     val wedges = e.select(col("a").as("x"), col("b").as("y"))
       .join(e.select(col("a").as("y"), col("b").as("z")), "y")
     wedges
@@ -358,14 +347,9 @@ object GraphOps {
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
     val M = 1L << 40
-    val und = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = undirectedSimple(edges)
     graft.CacheScope.pinned { p =>
-      val sym = p(und.select(col("a").as("node"), col("b").as("nbr"))
-        .unionByName(und.select(col("b").as("node"), col("a").as("nbr")))
-        .repartition(col("nbr")))
+      val sym = p(symmetric(und).repartition(col("nbr")))
       var labels = sym.select(col("node")).distinct()
         .select(col("node"), col("node").as("label"))
       var k = 0
@@ -407,13 +391,8 @@ object GraphOps {
     * division, published at 6 dp.
     */
   def linkPrediction(edges: DataFrame, minCommon: Long = 2): DataFrame = {
-    val und = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    val sym = graft.CacheScope.autoRelease(
-      und.select(col("a").as("node"), col("b").as("nbr"))
-        .unionByName(und.select(col("b").as("node"), col("a").as("nbr"))))
+    val und = undirectedSimple(edges)
+    val sym = graft.CacheScope.autoRelease(symmetric(und))
     val common = sym.alias("x").join(sym.alias("y"),
         col("x.nbr") === col("y.nbr") && col("x.node") < col("y.node"))
       .select(col("x.node").as("a"), col("y.node").as("b"))
@@ -453,13 +432,9 @@ object GraphOps {
     */
   def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, "k and rounds must be >= 1")
-    val und = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = undirectedSimple(edges)
     graft.CacheScope.pinned { p =>
-      var sym = p.checkpoint(und.select(col("a").as("node"), col("b").as("nbr"))
-        .unionByName(und.select(col("b").as("node"), col("a").as("nbr"))))
+      var sym = p.checkpoint(symmetric(und))
       var r = 0
       while (r < rounds) {
         val kept = sym.groupBy("node").agg(count(lit(1)).as("deg"))
@@ -473,6 +448,20 @@ object GraphOps {
       sym.groupBy("node").agg(count(lit(1)).as("deg"))
     }
   }
+
+  /** The undirected SIMPLE projection of a directed edge list:
+    * self-loops dropped, each edge normalized to (a < b), deduplicated.
+    */
+  private def undirectedSimple(edges: DataFrame): DataFrame =
+    edges.filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .distinct()
+
+  /** Both orientations (node, nbr) of each undirected (a, b) edge. */
+  private def symmetric(und: DataFrame): DataFrame =
+    und.select(col("a").as("node"), col("b").as("nbr"))
+      .unionByName(und.select(col("b").as("node"), col("a").as("nbr")))
 
   private def pow60(base: Long, k: Int): Long = {
     var r = 1L

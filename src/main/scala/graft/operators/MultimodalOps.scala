@@ -273,34 +273,49 @@ object MultimodalOps {
     RawMedia(w, h, Array(r, g, b))
   }
 
-  /** The real PNG codec (lossless) through JDK `javax.imageio`. One
-    * writer/reader per session; disk cache OFF (a file-backed image
-    * stream per row would dominate at thumbnail sizes).
+  /** The session shape every `javax.imageio` codec shares: one writer
+    * and one (lazy) reader for `format` per session, disk cache OFF (a
+    * file-backed image stream per row would dominate at thumbnail
+    * sizes), and in-memory stream plumbing around each encode/decode.
+    */
+  private abstract class ImageIOSession(format: String) extends MediaCodec.Session {
+    javax.imageio.ImageIO.setUseCache(false)
+    protected val writer: javax.imageio.ImageWriter =
+      javax.imageio.ImageIO.getImageWritersByFormatName(format).next()
+    protected lazy val reader: javax.imageio.ImageReader =
+      javax.imageio.ImageIO.getImageReadersByFormatName(format).next()
+
+    /** The bytes `write` puts through [[writer]] into a fresh buffer. */
+    protected def written(write: => Unit): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
+      writer.setOutput(ios)
+      write
+      ios.close()
+      bos.toByteArray
+    }
+
+    /** `decode`'s result with [[reader]] set on `bytes`. */
+    protected def read[T](bytes: Array[Byte])(decode: => T): T = {
+      val iis = javax.imageio.ImageIO.createImageInputStream(
+        new java.io.ByteArrayInputStream(bytes))
+      reader.setInput(iis)
+      val out = decode
+      iis.close()
+      out
+    }
+  }
+
+  /** The real PNG codec (lossless) through JDK `javax.imageio`, one
+    * [[ImageIOSession]] per partition.
     */
   object PngCodec extends MediaCodec {
     val name = "png"
-    def open(): MediaCodec.Session = new MediaCodec.Session {
-      javax.imageio.ImageIO.setUseCache(false)
-      private val writer =
-        javax.imageio.ImageIO.getImageWritersByFormatName("png").next()
-      private lazy val reader =
-        javax.imageio.ImageIO.getImageReadersByFormatName("png").next()
-      def encode(raw: RawMedia): Array[Byte] = {
-        val bos = new java.io.ByteArrayOutputStream()
-        val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-        writer.setOutput(ios)
-        writer.write(rgbImage(raw))
-        ios.close()
-        bos.toByteArray
-      }
-      def decode(bytes: Array[Byte]): RawMedia = {
-        val iis = javax.imageio.ImageIO.createImageInputStream(
-          new java.io.ByteArrayInputStream(bytes))
-        reader.setInput(iis)
-        val img = reader.read(0)
-        iis.close()
-        rgbPlanes(img)
-      }
+    def open(): MediaCodec.Session = new ImageIOSession("png") {
+      def encode(raw: RawMedia): Array[Byte] =
+        written(writer.write(rgbImage(raw)))
+      def decode(bytes: Array[Byte]): RawMedia =
+        rgbPlanes(read(bytes)(reader.read(0)))
     }
   }
 
@@ -437,6 +452,27 @@ object MultimodalOps {
   case class JpegFidelity(media_id: Long, n_px: Long, r_sum: Long,
     g_sum: Long, b_sum: Long, within_tol: Boolean)
 
+  /** The real JPEG codec (LOSSY) through JDK `javax.imageio`, baseline
+    * mode at an explicit `quality` (deterministic — pure software, no
+    * platform codec). Same session shape as [[PngCodec]].
+    */
+  case class JpegCodec(quality: Float = 0.9f) extends MediaCodec {
+    val name = "jpeg"
+    def open(): MediaCodec.Session = new ImageIOSession("jpeg") {
+      private val param = {
+        val p = writer.getDefaultWriteParam
+        p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
+        p.setCompressionQuality(quality)
+        p
+      }
+      def encode(raw: RawMedia): Array[Byte] =
+        written(writer.write(null,
+          new javax.imageio.IIOImage(rgbImage(raw), null, null), param))
+      def decode(bytes: Array[Byte]): RawMedia =
+        rgbPlanes(read(bytes)(reader.read(0)))
+    }
+  }
+
   /** ENCODE through the real lossy codec: the same deterministic pixel
     * pattern as the PNG tier, written as baseline JPEG via the
     * JDK-bundled writer with MODE_EXPLICIT quality (deterministic —
@@ -444,44 +480,6 @@ object MultimodalOps {
     * writer per partition, disk cache off — the PNG tier's batch-shape
     * contract unchanged.
     */
-  /** The real JPEG codec (LOSSY) through JDK `javax.imageio`, baseline
-    * mode at an explicit `quality` (deterministic — pure software, no
-    * platform codec). Same session shape as [[PngCodec]].
-    */
-  case class JpegCodec(quality: Float = 0.9f) extends MediaCodec {
-    val name = "jpeg"
-    def open(): MediaCodec.Session = new MediaCodec.Session {
-      javax.imageio.ImageIO.setUseCache(false)
-      private val writer =
-        javax.imageio.ImageIO.getImageWritersByFormatName("jpeg").next()
-      private val param = {
-        val p = writer.getDefaultWriteParam
-        p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-        p.setCompressionQuality(quality)
-        p
-      }
-      private lazy val reader =
-        javax.imageio.ImageIO.getImageReadersByFormatName("jpeg").next()
-      def encode(raw: RawMedia): Array[Byte] = {
-        val bos = new java.io.ByteArrayOutputStream()
-        val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-        writer.setOutput(ios)
-        writer.write(null,
-          new javax.imageio.IIOImage(rgbImage(raw), null, null), param)
-        ios.close()
-        bos.toByteArray
-      }
-      def decode(bytes: Array[Byte]): RawMedia = {
-        val iis = javax.imageio.ImageIO.createImageInputStream(
-          new java.io.ByteArrayInputStream(bytes))
-        reader.setInput(iis)
-        val img = reader.read(0)
-        iis.close()
-        rgbPlanes(img)
-      }
-    }
-  }
-
   def encodeJpeg(meta: DataFrame, quality: Float = 0.9f,
       codec: MediaCodec = null): Dataset[EncodedJpeg] = {
     val c = if (codec != null) codec else JpegCodec(quality)
@@ -773,18 +771,10 @@ object MultimodalOps {
     */
   object GifCodec extends MediaCodec {
     val name = "gif"
-    def open(): MediaCodec.Session = new MediaCodec.Session {
-      javax.imageio.ImageIO.setUseCache(false)
-      private val writer =
-        javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-      private lazy val reader =
-        javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
+    def open(): MediaCodec.Session = new ImageIOSession("gif") {
       private val icm = grayPalette
-      def encode(raw: RawMedia): Array[Byte] = {
+      def encode(raw: RawMedia): Array[Byte] = written {
         val w = raw.width; val h = raw.height
-        val bos = new java.io.ByteArrayOutputStream()
-        val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-        writer.setOutput(ios)
         writer.prepareWriteSequence(null)
         raw.planes.foreach { plane =>
           val img = new java.awt.image.BufferedImage(
@@ -797,13 +787,8 @@ object MultimodalOps {
             new javax.imageio.IIOImage(img, null, null), null)
         }
         writer.endWriteSequence()
-        ios.close()
-        bos.toByteArray
       }
-      def decode(bytes: Array[Byte]): RawMedia = {
-        val iis = javax.imageio.ImageIO.createImageInputStream(
-          new java.io.ByteArrayInputStream(bytes))
-        reader.setInput(iis)
+      def decode(bytes: Array[Byte]): RawMedia = read(bytes) {
         val n = reader.getNumImages(true)
         var w = -1; var h = -1
         val planes = Array.tabulate(n) { f =>
@@ -831,7 +816,6 @@ object MultimodalOps {
           }
           plane
         }
-        iis.close()
         RawMedia(w, h, planes)
       }
     }

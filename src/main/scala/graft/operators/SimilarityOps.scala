@@ -742,10 +742,6 @@ object SimilarityOps {
           .as("z"))
   }
 
-  /** Embedding-cosine near-duplicate pairs above `minSim` among a
-    * bounded id range — brute force (quadratic in the bounded slice;
-    * [[cosineNearDupsLsh]] is the scale variant).
-    */
   /** Top principal component of the embedding covariance by fixed-round
     * power iteration — the "fit small, transform distributed" pattern:
     * the corpus-sized work per round is ONE pass computing a matvec of
@@ -776,45 +772,10 @@ object SimilarityOps {
       iters: Int = 5): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val dec = "decimal(38,12)"
-    graft.CacheScope.pinned { p =>
-      val base = p(embeddings.select(col(vecCol).cast("array<double>").as("e")))
-      val n = base.count()
-      require(n > 0, "powerIterationPC needs a non-empty corpus")
-      val dims = base.select(size(col("e"))).head().getInt(0)
-      // exact decimal fold mirroring the engines' CAST(x AS DECIMAL(38,12))
-      // sums (valueOf = shortest-repr digits, which agree with the exact
-      // expansion through scale 12 at these magnitudes)
-      def decSum12(xs: Seq[Double]): Double =
-        xs.map(java.math.BigDecimal.valueOf(_)
-            .setScale(12, java.math.RoundingMode.HALF_UP))
-          .foldLeft(java.math.BigDecimal.ZERO)(_.add(_)).doubleValue
-      val mu: Array[Double] = base
-        .select(posexplode(col("e")).as(Seq("dim", "x")))
-        .groupBy("dim")
-        .agg((sum(col("x").cast(dec)).cast("double") / n).as("mu"))
-        .orderBy("dim").collect().map(_.getDouble(1))
-      var v = Array.fill(dims)(1.0)
-      for (_ <- 1 to iters) {
-        val vLit = array(v.toSeq.map(lit(_)): _*)
-        val dot = aggregate(
-          zip_with(col("e"), vLit, (a, b) => (a * b).cast(dec)),
-          lit(0).cast(dec), (acc, y) => (acc + y).cast(dec)).cast("double")
-        val wSum = base.select(dot.as("d"), col("e"))
-          .select(col("d"), posexplode(col("e")).as(Seq("dim", "x")))
-          .groupBy("dim")
-          .agg(sum((col("x") * col("d")).cast(dec)).cast("double").as("s"))
-          .orderBy("dim").collect().map(_.getDouble(1))
-        val dotMu = decSum12(mu.zip(v).map { case (m, w) => m * w }.toSeq)
-        val w = Array.tabulate(dims)(j => wSum(j) - n.toDouble * mu(j) * dotMu)
-        val mx = w.map(math.abs).max
-        v = w.map(_ / mx)
-      }
+    powerIteration(embeddings, vecCol, iters, "powerIterationPC") { (v, _) =>
       val norm = math.sqrt(decSum12(v.map(w => w * w).toSeq))
-      v.zipWithIndex.map { case (w, j) =>
-        (j, BigDecimal(w / norm)
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-      }.toSeq.toDF("dim", "loading")
+      v.zipWithIndex.map { case (w, j) => (j, r6(w / norm)) }.toSeq
+        .toDF("dim", "loading")
     }
   }
 
@@ -841,16 +802,38 @@ object SimilarityOps {
       iters: Int = 5): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
+    powerIteration(embeddings, vecCol, iters, "powerIterationPC2") { (v, matvec) =>
+      val n1 = math.sqrt(decSum12(v.map(w => w * w).toSeq))
+      val u1 = v.map(_ / n1)
+      val cu = matvec(u1)
+      val lambda = decSum12(u1.zip(cu).map { case (a, b) => a * b }.toSeq)
+      val v2 = normalizedRounds(v.length, iters) { v2 =>
+        val w0 = matvec(v2)
+        val uv = decSum12(u1.zip(v2).map { case (a, b) => a * b }.toSeq)
+        Array.tabulate(v.length)(j => w0(j) - lambda * u1(j) * uv)
+      }
+      val n2 = math.sqrt(decSum12(v2.map(w => w * w).toSeq))
+      v.indices.map(j => (j, r6(u1(j)), r6(v2(j) / n2)))
+        .toDF("dim", "pc1", "pc2")
+    }
+  }
+
+  /** The shared core of [[powerIterationPC]] and [[powerIterationPC2]]:
+    * pins the corpus, folds μ, and runs `iters` max-normalized rounds of
+    * the covariance action from v = 1. `finish` gets the final iterate
+    * and the action itself (one corpus pass per call) and builds the
+    * driver-side output rows while the pin is still held.
+    */
+  private def powerIteration(embeddings: DataFrame, vecCol: String, iters: Int,
+      who: String)(
+      finish: (Array[Double], Array[Double] => Array[Double]) => DataFrame)
+      : DataFrame = {
     val dec = "decimal(38,12)"
     graft.CacheScope.pinned { p =>
       val base = p(embeddings.select(col(vecCol).cast("array<double>").as("e")))
       val n = base.count()
-      require(n > 0, "powerIterationPC2 needs a non-empty corpus")
+      require(n > 0, s"$who needs a non-empty corpus")
       val dims = base.select(size(col("e"))).head().getInt(0)
-      def decSum12(xs: Seq[Double]): Double =
-        xs.map(java.math.BigDecimal.valueOf(_)
-            .setScale(12, java.math.RoundingMode.HALF_UP))
-          .foldLeft(java.math.BigDecimal.ZERO)(_.add(_)).doubleValue
       val mu: Array[Double] = base
         .select(posexplode(col("e")).as(Seq("dim", "x")))
         .groupBy("dim")
@@ -870,31 +853,34 @@ object SimilarityOps {
         val dotMu = decSum12(mu.zip(v).map { case (m, w) => m * w }.toSeq)
         Array.tabulate(dims)(j => wSum(j) - n.toDouble * mu(j) * dotMu)
       }
-      var v = Array.fill(dims)(1.0)
-      for (_ <- 1 to iters) {
-        val w = matvec(v)
-        val mx = w.map(math.abs).max
-        v = w.map(_ / mx)
-      }
-      val n1 = math.sqrt(decSum12(v.map(w => w * w).toSeq))
-      val u1 = v.map(_ / n1)
-      val cu = matvec(u1)
-      val lambda = decSum12(u1.zip(cu).map { case (a, b) => a * b }.toSeq)
-      var v2 = Array.fill(dims)(1.0)
-      for (_ <- 1 to iters) {
-        val w0 = matvec(v2)
-        val uv = decSum12(u1.zip(v2).map { case (a, b) => a * b }.toSeq)
-        val w = Array.tabulate(dims)(j => w0(j) - lambda * u1(j) * uv)
-        val mx = w.map(math.abs).max
-        v2 = w.map(_ / mx)
-      }
-      val n2 = math.sqrt(decSum12(v2.map(w => w * w).toSeq))
-      def r6(x: Double) = BigDecimal(x)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
-      (0 until dims).map(j => (j, r6(u1(j)), r6(v2(j) / n2)))
-        .toDF("dim", "pc1", "pc2")
+      finish(normalizedRounds(dims, iters)(matvec), matvec)
     }
   }
+
+  /** `iters` rounds of v ← action(v) / max|action(v)| from v = 1. */
+  private def normalizedRounds(dims: Int, iters: Int)(
+      action: Array[Double] => Array[Double]): Array[Double] = {
+    var v = Array.fill(dims)(1.0)
+    for (_ <- 1 to iters) {
+      val w = action(v)
+      val mx = w.map(math.abs).max
+      v = w.map(_ / mx)
+    }
+    v
+  }
+
+  /** Exact decimal fold mirroring the engines' CAST(x AS DECIMAL(38,12))
+    * sums (valueOf = shortest-repr digits, which agree with the exact
+    * expansion through scale 12 at these magnitudes).
+    */
+  private def decSum12(xs: Seq[Double]): Double =
+    xs.map(java.math.BigDecimal.valueOf(_)
+        .setScale(12, java.math.RoundingMode.HALF_UP))
+      .foldLeft(java.math.BigDecimal.ZERO)(_.add(_)).doubleValue
+
+  /** Half-up at 6 dp; `+ 0.0` absorbs negative zero on near-zero loadings. */
+  private def r6(x: Double): Double = BigDecimal(x)
+    .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
 
   /** Product-quantization ANN (Jégou et al., "Product Quantization for
     * Nearest Neighbor Search", TPAMI 2011) — the COMPRESSION tier of
@@ -1174,6 +1160,10 @@ object SimilarityOps {
     }
   }
 
+  /** Embedding-cosine near-duplicate pairs above `minSim` among a
+    * bounded id range — brute force (quadratic in the bounded slice;
+    * [[cosineNearDupsLsh]] is the scale variant).
+    */
   def cosineNearDups(embeddings: DataFrame, minSim: Double): DataFrame = {
     val vecs = embeddings.select(col("vec_id"), col("embedding"),
       norm(col("embedding")).as("nrm"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -905,6 +905,19 @@ object TemporalOps {
           .as("significant"))
   }
 
+  /** The caller's integer grid `xGrid` as (grp, day, x) rows grouped by
+    * (grp, day), day = event micros `div` `dayUs`: the corpus-sized
+    * prelude of every daily-grid test. `div`, not `/`: integer division
+    * (the Tables.normalizeEventsTs lesson — double division can round
+    * one unit high before a cast).
+    */
+  private def byDay(events: DataFrame, group: Column, tsCol: Column,
+      xGrid: Column, dayUs: Long): RelationalGroupedDataset =
+    events.select(group.as("grp"), unix_micros(tsCol).as("__us"),
+        xGrid.cast("long").as("x"))
+      .select(col("grp"), expr(s"__us div ${dayUs}L").as("day"), col("x"))
+      .groupBy("grp", "day")
+
   /** Day-of-week seasonal profile + deseasonalized residual peaks per
     * group — the "is Monday always low, and which day broke its own
     * pattern" decomposition behind seasonal-aware alerting (a raw
@@ -926,10 +939,7 @@ object TemporalOps {
   def seasonalProfile(events: DataFrame, group: Column, tsCol: Column,
       xGrid: Column, dayUs: Long = 86400000000L): DataFrame = {
     val dec = "decimal(38,0)"
-    val daily = events.select(group.as("grp"), unix_micros(tsCol).as("__us"),
-        xGrid.cast("long").as("x"))
-      .select(col("grp"), expr(s"__us div ${dayUs}L").as("day"), col("x"))
-      .groupBy("grp", "day")
+    val daily = byDay(events, group, tsCol, xGrid, dayUs)
       .agg(sum(col("x").cast(dec)).as("s"), count(lit(1)).as("cnt"))
       .withColumn("dow", pmod(col("day"), lit(7L)))
     val tot = daily.groupBy("grp")
@@ -988,12 +998,7 @@ object TemporalOps {
   def cusumShift(events: DataFrame, group: Column, tsCol: Column,
       xGrid: Column, dayUs: Long = 86400000000L): DataFrame = {
     val dec = "decimal(38,0)"
-    // `div`, not `/`: integer division (the Tables.normalizeEventsTs
-    // lesson — double division can round one unit high before a cast)
-    val daily = events.select(group.as("grp"), unix_micros(tsCol).as("__us"),
-        xGrid.cast("long").as("x"))
-      .select(col("grp"), expr(s"__us div ${dayUs}L").as("day"), col("x"))
-      .groupBy("grp", "day")
+    val daily = byDay(events, group, tsCol, xGrid, dayUs)
       .agg(sum(col("x").cast(dec)).as("s"), count(lit(1)).as("cnt"))
     val tot = daily.groupBy("grp")
       .agg(sum(col("s")).as("t"), sum(col("cnt")).as("n"))
@@ -1052,10 +1057,7 @@ object TemporalOps {
       maxLag: Int = 7, dayUs: Long = 86400000000L): DataFrame = {
     require(maxLag >= 1, "maxLag must be >= 1")
     val dec = "decimal(38,0)"
-    val daily = events.select(group.as("grp"), unix_micros(tsCol).as("__us"),
-        xGrid.cast("long").as("x"))
-      .select(col("grp"), expr(s"__us div ${dayUs}L").as("day"), col("x"))
-      .groupBy("grp", "day")
+    val daily = byDay(events, group, tsCol, xGrid, dayUs)
       .agg(sum(col("x").cast(dec)).as("sRaw"))
     val span = daily.groupBy("grp")
       .agg(min("day").as("d0"), max("day").as("d1"))
@@ -1168,10 +1170,7 @@ object TemporalOps {
   def trendRobust(events: DataFrame, group: Column, tsCol: Column,
       xGrid: Column, dayUs: Long = 86400000000L): DataFrame = {
     val dec = "decimal(38,0)"
-    val daily = events.select(group.as("grp"), unix_micros(tsCol).as("__us"),
-        xGrid.cast("long").as("x"))
-      .select(col("grp"), expr(s"__us div ${dayUs}L").as("day"), col("x"))
-      .groupBy("grp", "day")
+    val daily = byDay(events, group, tsCol, xGrid, dayUs)
       .agg(sum(col("x").cast(dec)).as("s"))
     val pinned = graft.CacheScope.autoRelease(daily)
     val pairs = pinned.as("a").join(pinned.as("b"),

@@ -1171,27 +1171,15 @@ object TextOps {
     */
   def zipfFit(docs: DataFrame, topN: Int = 100,
       textCol: String = "text"): DataFrame = {
-    val dec = "decimal(38,12)"
     val ranked = topKWords(docs, topN, textCol)
       .withColumn("rank", row_number().over(
         Window.orderBy(col("cnt").desc, col("word"))))
     val t = ranked.select(
       round(log(col("rank").cast("double")), 9).as("x"),
       round(log(col("cnt").cast("double")), 9).as("y"))
-    val s = t.agg(
-      count(lit(1)).as("n"),
-      sum(col("x").cast(dec)).cast("double").as("sx"),
-      sum(col("y").cast(dec)).cast("double").as("sy"),
-      sum(round(col("x") * col("x"), 9).cast(dec)).cast("double").as("sxx"),
-      sum(round(col("x") * col("y"), 9).cast(dec)).cast("double").as("sxy"),
-      sum(round(col("y") * col("y"), 9).cast(dec)).cast("double").as("syy"))
-    val num = col("n") * col("sxy") - col("sx") * col("sy")
-    val den = col("n") * col("sxx") - col("sx") * col("sx")
-    s.select(col("n"),
-      round(num / den, 6).as("slope"),
-      round((col("sy") - num / den * col("sx")) / col("n"), 6).as("intercept"),
-      round(num * num
-        / (den * (col("n") * col("syy") - col("sy") * col("sy"))), 6).as("r2"))
+    val (slope, intercept, r2) = lnLnFit
+    lnLnSums(t).select(col("n"), slope.as("slope"), intercept.as("intercept"),
+      r2.as("r2"))
   }
 
   /** Heaps' law fit — the OTHER corpus-health diagnostic, dual to
@@ -1217,7 +1205,6 @@ object TextOps {
     */
   def heapsFit(docs: DataFrame, nCheckpoints: Int = 16,
       textCol: String = "text"): DataFrame = {
-    val dec = "decimal(38,12)"
     val k = nCheckpoints.toLong
     val base = graft.CacheScope.autoRelease(
       graft.PlanUtils.spread(docs.select(col("doc_id"), col(textCol)))
@@ -1246,25 +1233,40 @@ object TextOps {
         .select(col("ck"), col("n_tok"), col("vocab"),
           round(log(col("n_tok").cast("double")), 9).as("x"),
           round(log(col("vocab").cast("double")), 9).as("y")))
-    val s = pts.agg(
+    val (slope, intercept, r2) = lnLnFit
+    // + 0.0 strips IEEE -0.0 (saturated-vocab fits round to ±0 — the
+    // engines disagree on the sign; -0.0 + 0.0 = +0.0 in both)
+    pts.select(col("ck"), col("n_tok"), col("vocab"))
+      .crossJoin(broadcast(lnLnSums(pts).select(
+        (slope + lit(0.0)).as("beta"), (intercept + lit(0.0)).as("lnk"),
+        (r2 + lit(0.0)).as("r2"))))
+      .orderBy("ck")
+  }
+
+  /** One row (n, sx, sy, sxx, sxy, syy) of least-squares sums over the
+    * 9-dp (x, y) points of `pts`: the cross terms are single IEEE
+    * products re-rounded to 9 dp, and every sum is DECIMAL(38,12).
+    */
+  private def lnLnSums(pts: DataFrame): DataFrame = {
+    val dec = "decimal(38,12)"
+    pts.agg(
       count(lit(1)).as("n"),
       sum(col("x").cast(dec)).cast("double").as("sx"),
       sum(col("y").cast(dec)).cast("double").as("sy"),
       sum(round(col("x") * col("x"), 9).cast(dec)).cast("double").as("sxx"),
       sum(round(col("x") * col("y"), 9).cast(dec)).cast("double").as("sxy"),
       sum(round(col("y") * col("y"), 9).cast(dec)).cast("double").as("syy"))
+  }
+
+  /** (slope, intercept, r²) of the OLS fit over [[lnLnSums]]' row, each
+    * one fixed IEEE dag rounded to 6 dp.
+    */
+  private def lnLnFit: (Column, Column, Column) = {
     val num = col("n") * col("sxy") - col("sx") * col("sy")
     val den = col("n") * col("sxx") - col("sx") * col("sx")
-    // + 0.0 strips IEEE -0.0 (saturated-vocab fits round to ±0 — the
-    // engines disagree on the sign; -0.0 + 0.0 = +0.0 in both)
-    pts.select(col("ck"), col("n_tok"), col("vocab"))
-      .crossJoin(broadcast(s.select(
-        (round(num / den, 6) + lit(0.0)).as("beta"),
-        (round((col("sy") - num / den * col("sx")) / col("n"), 6) + lit(0.0))
-          .as("lnk"),
-        (round(num * num
-          / (den * (col("n") * col("syy") - col("sy") * col("sy"))), 6)
-          + lit(0.0)).as("r2"))))
-      .orderBy("ck")
+    (round(num / den, 6),
+      round((col("sy") - num / den * col("sx")) / col("n"), 6),
+      round(num * num
+        / (den * (col("n") * col("syy") - col("sy") * col("sy"))), 6))
   }
 }

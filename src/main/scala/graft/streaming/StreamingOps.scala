@@ -158,16 +158,9 @@ object StreamingOps {
     */
   def intervalJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
       leftTs: String, rightTs: String, lookback: String,
-      watermark: String): DataFrame = {
-    val l = left.withWatermark(leftTs, watermark)
-    val r = right.withWatermark(rightTs, watermark)
-    val keyCond = keys.map(k => l(k) === r(k)).reduce(_ && _)
-    val range = col(rightTs) >= col(leftTs) - expr(s"INTERVAL $lookback") &&
-      col(rightTs) <= col(leftTs)
-    l.join(r, keyCond && range)
-      .select((keys.map(l(_)) ++ left.columns.filterNot(keys.contains).map(l(_))
-        ++ right.columns.filterNot(keys.contains).map(r(_))): _*)
-  }
+      watermark: String): DataFrame =
+    watermarkedIntervalJoin(left, right, keys, leftTs, rightTs, lookback,
+      watermark, "inner")
 
   /** LEFT OUTER stream-stream interval join — the enrichment shape
     * where an unmatched left row must still be emitted (a purchase
@@ -189,13 +182,20 @@ object StreamingOps {
     */
   def intervalJoinLeftOuter(left: DataFrame, right: DataFrame,
       keys: Seq[String], leftTs: String, rightTs: String, lookback: String,
-      watermark: String): DataFrame = {
+      watermark: String): DataFrame =
+    watermarkedIntervalJoin(left, right, keys, leftTs, rightTs, lookback,
+      watermark, "leftOuter")
+
+  /** The interval join of [[intervalJoin]] as a `joinType` join. */
+  private def watermarkedIntervalJoin(left: DataFrame, right: DataFrame,
+      keys: Seq[String], leftTs: String, rightTs: String, lookback: String,
+      watermark: String, joinType: String): DataFrame = {
     val l = left.withWatermark(leftTs, watermark)
     val r = right.withWatermark(rightTs, watermark)
     val keyCond = keys.map(k => l(k) === r(k)).reduce(_ && _)
     val range = col(rightTs) >= col(leftTs) - expr(s"INTERVAL $lookback") &&
       col(rightTs) <= col(leftTs)
-    l.join(r, keyCond && range, "leftOuter")
+    l.join(r, keyCond && range, joinType)
       .select((keys.map(l(_)) ++ left.columns.filterNot(keys.contains).map(l(_))
         ++ right.columns.filterNot(keys.contains).map(r(_))): _*)
   }

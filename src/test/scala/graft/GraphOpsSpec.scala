@@ -290,4 +290,20 @@ class GraphOpsSpec extends SparkSpec {
     }
     got.zip(r).foreach { case (g, e) => assert(math.abs(g - e) < 1e-9) }
   }
+
+  test("pageRank equals personalizedPageRank with every node seeded") {
+    // the identity the shared rank walk relies on: seeding every node
+    // makes PPR's start and teleport terms PageRank's, and |S| = N
+    val n = 11L
+    val nodes = spark.range(0, n).select(col("id").as("node"), lit(true).as("seed"))
+    val e = GraphOps.syntheticEdges(nodes, n)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("node").as[(Long, Long, Double)].collect().toSeq
+    val pr = rows(GraphOps.pageRank(nodes.select("node"), e, outDeg = 3,
+      iters = 5, nNodes = n))
+    val ppr = rows(GraphOps.personalizedPageRank(nodes, e, outDeg = 3,
+      iters = 5, nSeeds = n))
+    assert(pr.size == n)
+    assert(pr == ppr)
+  }
 }

@@ -777,7 +777,13 @@ class PlanShapeSpec extends SparkSpec {
       df.sparkSession.catalog.clearCache()
       out
     }
+    // each compared query is built only after every release queued by
+    // earlier actions has run: Spark's unpersist matches cache entries by
+    // sameResult, so a late release could drop (or leave) the other
+    // query's same-result pin mid-build
+    awaitListenerBus()
     val auto = shape(SparkEntry.queries("q_neardup_auto")(spark, sf0))
+    awaitListenerBus()
     val fixed = shape(SparkEntry.queries("q_neardup_minhash")(spark, sf0))
     assert(auto === fixed,
       s"auto plan shape diverged from q_neardup_minhash:\nauto:  $auto\nfixed: $fixed")

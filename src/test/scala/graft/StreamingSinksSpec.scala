@@ -110,6 +110,21 @@ class StreamingSinksSpec extends SparkSpec {
     * gate uses its classified sink; a NEW streaming gate fails the
     * completeness check until it is classified here.
     */
+  test("memorySinkRun drops its view at return; the frame keeps the sink's rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_memsink").toString
+    Seq((1L, 2.0), (1L, 4.0), (2L, 8.0)).toDF("k", "v").write.parquet(s"$dir/in")
+    val stream = spark.readStream.schema("k LONG, v DOUBLE").parquet(s"$dir/in")
+    val out = EntryHelpers.memorySinkRun(
+      stream.groupBy("k").agg(sum("v").as("s")), "sinks_spec", "complete")
+    // no action has run on `out` yet: the view is gone all the same
+    val views = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_stream_"))
+    assert(views.isEmpty, s"memory-sink view outlived memorySinkRun: ${views.mkString(", ")}")
+    val first = out.orderBy("k").as[(Long, Double)].collect().toSeq
+    assert(first == Seq(1L -> 6.0, 2L -> 8.0))
+    assert(out.orderBy("k").as[(Long, Double)].collect().toSeq == first)
+  }
+
   test("gate→sink contract: data-sized gates file-sink, memory gates are state-bounded") {
     // append-mode, data-sized output → parquet file sink
     val fileGates = Set(
