@@ -9,264 +9,29 @@ import graft.EntryHelpers._
 
 /** text stats, sampling, ratings/regression, CF/ALS — the reference's core pipelines.
   *
-  * One registry slice of [[SparkEntry]] (split r8 for reviewability —
-  * purely mechanical, maps concatenate unchanged): `queries` holds the
-  * gated Spark pipelines, `oracleSql` the matching DuckDB replays the
-  * driver hash-compares them against.
+  * One registry slice of [[SparkEntry]]: `queries` declares each gated
+  * Spark pipeline once, as a [[Query]] beside the DuckDB replay the
+  * driver hash-compares it against.
   */
 private[graft] object EntryCore {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[Query] = Seq(
     // §2.6 T1 + §2.4 A1/A2 + §2.8 F1/F2: tokenize → count → top-k.
-    "q_topk_words" -> ((s, dir) => TextOps.topKWords(Tables.documents(s, dir), 100)),
-    // Zipf rank–frequency fit over the top-100 tokens: OLS of ln(freq)
-    // on ln(rank) — the whole-corpus health diagnostic (natural text
-    // sits near slope −1; template spam bends away). Corpus-sized work
-    // is ONE partial-combined word count; the fit runs on 100 rows.
-    "q_zipf" -> ((s, dir) =>
-      TextOps.zipfFit(Tables.documents(s, dir), topN = 100)),
-    // Heaps' law vocabulary-growth fit — q_zipf's dual: V(n) ≈ K·n^β
-    // along 16 doc-id checkpoints. Publishes the growth curve AND the
-    // ln–ln OLS coefficients; corpus work is two partial aggregates.
-    "q_heaps" -> ((s, dir) =>
-      TextOps.heapsFit(Tables.documents(s, dir), nCheckpoints = 16)),
-    // Text relevance scoring — TF-IDF and Okapi BM25 top-3 terms per
-    // doc. Both ride the native TopKPerKey operator for the per-doc
-    // ranking; ranking keys are rounded to 9 decimals so ln()'s libm
-    // ulp can never decide membership cross-engine.
-    "q_tfidf" -> ((s, dir) =>
-      TextOps.tfidfTopTerms(Tables.documents(s, dir), 3)
-        .select(col("doc_id"), col("word"), col("tf"),
-          round(col("tfidf"), 6).as("tfidf"))
-        .orderBy("doc_id", "word")),
-    "q_bm25" -> ((s, dir) =>
-      TextOps.bm25TopTerms(Tables.documents(s, dir), 3)
-        .select(col("doc_id"), col("word"), col("tf"), col("dl"),
-          round(col("score"), 6).as("score"))
-        .orderBy("doc_id", "word")),
-    // Beyond the reference: Count-Min-Sketch heavy hitters (relative
-    // frequency ≥ 2%) — sampled candidate discovery, one mergeable
-    // fixed-size sketch aggregation as the no-false-negative screen,
-    // then an exact confirm count over the screened words (publication
-    // is estimator-free; the open-vocab audit corpus showed CMS
-    // collision drift the closed-vocab corpora masked).
-    "q_heavy_hitters" -> ((s, dir) =>
-      TextOps.heavyHitters(Tables.documents(s, dir), minFreq = 0.02)
-        .orderBy("word")),
-    // §2.4 A3 + §2.8 F3: per-letter mean/std-dev over dense per-doc counts.
-    "q_char_hist" -> ((s, dir) => TextOps.charHistogram(Tables.documents(s, dir))),
-    // §2.3 J4: set difference (custkeys with orders − high-balance custkeys).
-    "q_set_diff" -> ((s, dir) => RelationalOps.setDifference(
-      Tables.orders(s, dir).select(col("o_custkey").as("custkey")),
-      Tables.customer(s, dir).filter(col("c_acctbal") > 5000)
-        .select(col("c_custkey").as("custkey")),
-      "custkey").orderBy("custkey")),
-    // §2.2 P5: one-pass hash-bucket sample + streaming-shaped agg.
-    "q_hash_sample" -> ((s, dir) =>
-      RelationalOps.hashBucketSample(Tables.events(s, dir), "user_id", 16, 3)
-        .agg(count(lit(1)).as("n"),
-          decMean(col("value")).as("mean_value"),
-          round(stddev_pop(col("value")), 4).as("std_value"))),
-    // §2.3 J5 + §2.2 P6: two-pass sampler as a semi-join.
-    "q_semi_sample" -> ((s, dir) =>
-      RelationalOps.semiJoinSample(Tables.events(s, dir), "user_id", 16, 3)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_tx"), decMean(col("value")).as("mean_value"))
-        .orderBy("user_id")),
-    // §2.6 T5: seeded exact-size-k uniform sample — the reference's
-    // shuffle-and-take-prefix sampler as a distributed top-k by
-    // engine-portable hash order (TakeOrderedAndProject, no full sort).
-    "q_uniform_sample" -> ((s, dir) =>
-      RelationalOps.uniformSampleExact(Tables.events(s, dir), col("event_id"), 1000, "graft")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          round(col("value"), 4).as("value"))
-        .orderBy("event_id")),
-    // Streaming exact-size-k uniform sample through a REAL
-    // AvailableNow stream: per-shard bounded k-smallest-hash state
-    // (flatMapGroupsWithState, Update mode), shard snapshots reduced
-    // to the global k at the sink. Seed 'stream' (its own draw, not
-    // the batch sampler's); the oracle is the batch sampler's SQL —
-    // streaming/batch parity is the tested property.
-    "q_stream_sample" -> ((s, dir) => {
-      import s.implicits._
-      val src = Tables.eventsStream(s, dir)
-        .withColumn("h", md5(concat_ws("|",
-          col("event_id").cast("string"), lit("stream")).cast("binary")))
-        .withColumn("shard",
-          pmod(conv(substring(col("h"), 1, 6), 16, 10).cast("long"), lit(8L)))
-        .select(col("shard"), col("h"), col("event_id"), col("user_id"),
-          col("event_type"), col("value"))
-        .as[(Long, String, Long, Long, String, Double)]
-      val out = graft.streaming.StreamingOps.streamingUniformSample(src, 1000)
-      // latest snapshot per shard via a window (a groupBy+self-join on
-      // a memory-sink view hits conflicting attribute ids); the table
-      // is shards·k·batches rows — sink-side work constant in stream
-      // length
-      val t = memorySinkRun(out.toDF(), "sample", "update")
-        .withColumn("__mx", max("seq").over(Window.partitionBy("shard")))
-        .filter(col("seq") === col("__mx"))
-      t.orderBy(col("h"), col("event_id")).limit(1000)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          round(col("value"), 4).as("value"))
-        .orderBy("event_id")
-    }),
-    // Deterministic epoch-shuffle training order: seeded md5 shuffle
-    // key → shard (mod 16) → per-shard dense position → round-robin
-    // interleaved global_pos. No global sort: the only wide op is the
-    // 16-way shard window.
-    "q_train_order" -> ((s, dir) =>
-      RelationalOps.trainingOrder(
-          Tables.documents(s, dir).select("doc_id"), col("doc_id"), "ep1", 16)
-        .select(col("doc_id"), col("shard"), col("pos_in_shard"), col("global_pos"))
-        .orderBy("doc_id")),
-    // §2.6 T5 (fraction form): seeded ~1% scan-local uniform sample +
-    // running stats — the one-pass stream-sampler shape.
-    "q_sample_frac" -> ((s, dir) =>
-      RelationalOps.uniformSampleFraction(Tables.events(s, dir), col("event_id"), 0.01, "graft")
-        .agg(count(lit(1)).as("n"), decMean(col("value")).as("mean_value"))),
-    // Stratified (balanced) sampling: exactly 50 events per event_type
-    // by seeded hash order — the per-language/per-label balanced draw
-    // of training-data curation, planned via the native bounded-heap
-    // top-k-per-key operator.
-    "q_stratified_sample" -> ((s, dir) =>
-      RelationalOps.stratifiedSampleExact(
-        Tables.events(s, dir).select("event_id", "user_id", "event_type", "value"),
-        Seq("event_type"), col("event_id"), 50, "strat")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          round(col("value"), 4).as("value"))
-        .orderBy("event_type", "event_id")),
-    // §2.4 A5: deterministic last-rating-wins dedup.
-    "q_dedup_last" -> ((s, dir) => Ratings.deduped(s, dir).orderBy("user_id", "item_id")),
-    // Streaming CDC upsert-apply: the latest event per user maintained
-    // across micro-batches (one struct of state per key, late-older
-    // rows rejected by the (ts, id) guard); sink keeps each key's
-    // newest emission. Oracle = the batch latest-row query —
-    // stream/batch parity is the tested property.
-    "q_stream_upsert" -> ((s, dir) => {
-      import s.implicits._
-      val src = Tables.eventsStream(s, dir)
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("event_id"), col("event_type"), col("value"))
-        .as[(Long, Long, Long, String, Double)]
-      val out = graft.streaming.StreamingOps.upsertLatestByKey(src)
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("last_ts_us").desc, col("last_event_id").desc)
-      memorySinkRun(out.toDF(), "upsert", "update").withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-        .orderBy("user_id")
-    }),
-    // §2.2 P3 + §2.4 A8: support filter (items with ≥25 distinct raters).
-    "q_support_items" -> ((s, dir) => RelationalOps.supportFilter(
-      Ratings.deduped(s, dir), "item_id", "user_id", 25).orderBy("item_id")),
-    // §2.4 A7: distinct key collection.
-    "q_distinct_users" -> ((s, dir) =>
-      Tables.events(s, dir).select("user_id").distinct().orderBy("user_id")),
-    // §2.4 A4: single-pass Welford mean/std as a custom Aggregator (UDAF).
-    "q_welford" -> ((s, dir) => {
-      val welford = udaf(WelfordAgg)
-      Tables.events(s, dir).groupBy("event_type")
-        .agg(welford(col("value")).as("w"))
-        .select(col("event_type"), col("w.n").as("n"),
-          round(col("w.mean"), 4).as("mean_value"),
-          round(col("w.std"), 4).as("std_value"))
-        .orderBy("event_type")
-    }),
-    // §2.3 J3 + §2.4 A13: COO matrix multiply (equi-join on the inner
-    // dim + hash agg). M = label<5 slice, N = transposed label>=5 slice;
-    // vec_id bounded so the oracle output stays O(10^4) at every sf.
-    "q_matmul" -> ((s, dir) => {
-      // One parquet scan for both operands: explode to COO once, then
-      // split by label in memory (the naive two-branch form scans and
-      // explodes the embeddings twice).
-      val coo = CacheScope.autoRelease(
-        Tables.embeddings(s, dir).filter(col("vec_id") < 100)
-          .select(col("vec_id"), col("label"), posexplode(col("embedding")))
-          .select(col("vec_id"), col("label"), col("pos").cast("long").as("j"),
-            col("col").cast("double").as("v")))
-      val m = coo.filter(col("label") < 5).select(col("vec_id").as("i"), col("j"), col("v"))
-      val n = coo.filter(col("label") >= 5).select(col("j"), col("vec_id").as("k"), col("v"))
-      MatrixOps.multiply(m, n)
-        .select(col("i"), col("k"), round(col("v"), 6).as("v"))
-        .orderBy("i", "k")
-    }),
-    // §2.3 J1 + §2.8 F8/F9 + §2.6 T2: flagship a3_p1 pipeline — dense
-    // rel-freqs, per-word standardized OLS via corr sufficient stats.
-    "q_reg_simple" -> ((s, dir) =>
-      RegressionOps.simpleRegression(regObs(s, dir), Some(RegK))
-        .select(col("word"), col("n"), round(col("beta"), 6).as("beta"),
-          round(col("t"), 6).as("t"))
-        .orderBy(col("beta").desc, col("word"))),
-    "q_reg_multi" -> ((s, dir) =>
-      RegressionOps.multiRegression(regObs(s, dir), Some(RegK))
-        .select(col("word"), col("n"), round(col("beta1"), 6).as("beta1"),
-          round(col("beta2"), 6).as("beta2"), round(col("t1"), 6).as("t1"))
-        .orderBy(col("beta1").desc, col("word"))),
-    // p-values (Student-t sf via commons-math), oracle-checked against
-    // the exact elementary t-CDF series evaluated by a DuckDB recursive
-    // CTE (see oracleSql) and Breeze-pinned in RegressionOpsSpec.
-    "q_reg_pvalues" -> ((s, dir) =>
-      RegressionOps.multiRegression(regObs(s, dir), Some(RegK))
-        .select(col("word"), round(col("t1"), 6).as("t1"),
-          round(col("p1"), 6).as("p1"), round(col("p1_bonf"), 6).as("p1_bonf"))
-        .orderBy(col("word"))),
-    // §2.3 J2 + §2.4 A10/A11 + §2.6: a3_p2 recommender — capped
-    // neighbor lists per target item.
-    "q_cf_sims" -> ((s, dir) =>
-      CFOps.topNeighbors(CFOps.itemSimilarities(
-        CFOps.meanCentered(CFOps.supportFiltered(Ratings.dedupedByItem(s, dir))), CfTargets))
-        .select(col("t_item"), col("item_id"), round(col("sim"), 6).as("sim"),
-          col("n_common"))
-        .orderBy("t_item", "item_id")),
-    // The SAME similarity pipeline through the Zipf-head escape hatch
-    // (Params.saltedSupport: two-level salted counts + join-back
-    // instead of partition-frame windows — bounded tasks under a
-    // dominant key, CFOps scaladoc). Output is bit-identical to the
-    // window form, so it shares q_cf_sims' ORACLE: the driver proves
-    // plan-form equivalence end to end, not just the EdgeCasesSpec
-    // corpus.
-    "q_cf_sims_salted" -> ((s, dir) => {
-      val p = CFOps.Params(saltedSupport = true)
-      CFOps.topNeighbors(CFOps.itemSimilarities(
-        CFOps.meanCentered(CFOps.supportFiltered(Ratings.dedupedByItem(s, dir), p), p),
-        CfTargets, p), p)
-        .select(col("t_item"), col("item_id"), round(col("sim"), 6).as("sim"),
-          col("n_common"))
-        .orderBy("t_item", "item_id")
-    }),
-    // §2.4 A12: weighted-average predictions with pass-through.
-    "q_cf_recommend" -> ((s, dir) =>
-      CFOps.recommend(Ratings.dedupedByItem(s, dir), CfTargets)
-        .select(col("t_item"), col("user_id"), round(col("pred"), 4).as("pred"))
-        .orderBy("t_item", "user_id")),
-    // One ALS alternation at rank 2 (MLlib's recsys inner step):
-    // deterministic item-factor seed grid, per-user ridge normal
-    // equations solved closed-form. Int64-exact accumulators make the
-    // pre-rounding doubles bit-identical across engines.
-    "q_als_round" -> ((s, dir) =>
-      CFOps.alsUserFactors(Ratings.deduped(s, dir), lambda = 0.1)
-        .orderBy("user_id")),
-    // The ITEM half-step closing the alternation: user factors join
-    // back into ratings (the real ALS iteration's factor join), one
-    // item-keyed aggregate of decimal-cast double products, same
-    // closed-form solve.
-    "q_als_item" -> ((s, dir) => {
-      val r = Ratings.deduped(s, dir)
-      CFOps.alsItemFactors(r, CFOps.alsUserFactors(r, lambda = 0.1))
-        .orderBy("item_id")
-    }),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_topk_words" ->
+    Query("q_topk_words", (s, dir) => TextOps.topKWords(Tables.documents(s, dir), 100),
       """SELECT word, count(*) AS cnt FROM (
         |  SELECT unnest(regexp_extract_all(lower(text), '((?:[\.,!?;"])|(?:(?:\#|\@)?[A-Za-z0-9_\-]+(?:''[a-z]{1,3})?))', 1)) AS word
         |  FROM documents
         |) t GROUP BY word
-        |ORDER BY cnt DESC, word ASC LIMIT 100""".stripMargin,
+        |ORDER BY cnt DESC, word ASC LIMIT 100""".stripMargin),
+    // Zipf rank–frequency fit over the top-100 tokens: OLS of ln(freq)
+    // on ln(rank) — the whole-corpus health diagnostic (natural text
+    // sits near slope −1; template spam bends away). Corpus-sized work
+    // is ONE partial-combined word count; the fit runs on 100 rows.
     // Zipf fit replay: same tokenizer + top-100 rank order, each ln at
     // 9 dp, cross terms single-rounded, DECIMAL sums, one IEEE dag for
     // slope/intercept/r² at 6 dp
-    "q_zipf" ->
+    Query("q_zipf", (s, dir) =>
+      TextOps.zipfFit(Tables.documents(s, dir), topN = 100),
       """WITH wc AS MATERIALIZED (
         |  SELECT word, count(*) AS cnt FROM (
         |    SELECT unnest(regexp_extract_all(lower(text), '((?:[\.,!?;"])|(?:(?:\#|\@)?[A-Za-z0-9_\-]+(?:''[a-z]{1,3})?))', 1)) AS word
@@ -295,11 +60,15 @@ private[graft] object EntryCore {
         |SELECT n, round(num / den, 6) AS slope,
         |       round((sy - num / den * sx) / n, 6) AS intercept,
         |       round(num * num / (den * (n * syy - sy * sy)), 6) AS r2
-        |FROM f""".stripMargin,
+        |FROM f""".stripMargin),
+    // Heaps' law vocabulary-growth fit — q_zipf's dual: V(n) ≈ K·n^β
+    // along 16 doc-id checkpoints. Publishes the growth curve AND the
+    // ln–ln OLS coefficients; corpus work is two partial aggregates.
     // Heaps replay: first-occurrence doc per word, exact-int checkpoint
     // buckets (⌈d·K/maxId⌉ via (d*K+mid-1)//mid), K-row cumsum, then
     // the same 9-dp ln / decimal-sum / round-6 OLS idiom as q_zipf
-    "q_heaps" ->
+    Query("q_heaps", (s, dir) =>
+      TextOps.heapsFit(Tables.documents(s, dir), nCheckpoints = 16),
       """WITH base AS MATERIALIZED (
         |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ws
         |  FROM documents
@@ -345,12 +114,20 @@ private[graft] object EntryCore {
         |       round(num / den, 6) + 0.0 AS beta,
         |       round((sy - num / den * sx) / n, 6) + 0.0 AS lnk,
         |       round(num * num / (den * (n * syy - sy * sy)), 6) + 0.0 AS r2
-        |FROM pts p CROSS JOIN f ORDER BY p.ck""".stripMargin,
+        |FROM pts p CROSS JOIN f ORDER BY p.ck""".stripMargin),
+    // Text relevance scoring — TF-IDF and Okapi BM25 top-3 terms per
+    // doc. Both ride the native TopKPerKey operator for the per-doc
+    // ranking; ranking keys are rounded to 9 decimals so ln()'s libm
+    // ulp can never decide membership cross-engine.
     // tf/df/N recomputed relationally; rank key round(s,9)+word mirrors
     // the engine's TopKPerKey ordering; constants written as the same
     // double EXPRESSIONS ((1.2+1.0), (1.0-0.75)) the Scala side
     // computes, so both engines derive identical IEEE values
-    "q_tfidf" ->
+    Query("q_tfidf", (s, dir) =>
+      TextOps.tfidfTopTerms(Tables.documents(s, dir), 3)
+        .select(col("doc_id"), col("word"), col("tf"),
+          round(col("tfidf"), 6).as("tfidf"))
+        .orderBy("doc_id", "word"),
       """WITH toks AS (
         |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '((?:[\.,!?;"])|(?:(?:\#|\@)?[A-Za-z0-9_\-]+(?:''[a-z]{1,3})?))', 1)) AS word
         |  FROM documents
@@ -370,8 +147,12 @@ private[graft] object EntryCore {
         |  FROM scored
         |)
         |SELECT doc_id, word, tf, round(s, 6) AS tfidf
-        |FROM ranked WHERE rn <= 3 ORDER BY doc_id, word""".stripMargin,
-    "q_bm25" ->
+        |FROM ranked WHERE rn <= 3 ORDER BY doc_id, word""".stripMargin),
+    Query("q_bm25", (s, dir) =>
+      TextOps.bm25TopTerms(Tables.documents(s, dir), 3)
+        .select(col("doc_id"), col("word"), col("tf"), col("dl"),
+          round(col("score"), 6).as("score"))
+        .orderBy("doc_id", "word"),
       """WITH toks AS (
         |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '((?:[\.,!?;"])|(?:(?:\#|\@)?[A-Za-z0-9_\-]+(?:''[a-z]{1,3})?))', 1)) AS word
         |  FROM documents
@@ -397,8 +178,16 @@ private[graft] object EntryCore {
         |  FROM scored
         |)
         |SELECT doc_id, word, tf, dl, round(s, 6) AS score
-        |FROM ranked WHERE rn <= 3 ORDER BY doc_id, word""".stripMargin,
-    "q_heavy_hitters" ->
+        |FROM ranked WHERE rn <= 3 ORDER BY doc_id, word""".stripMargin),
+    // Beyond the reference: Count-Min-Sketch heavy hitters (relative
+    // frequency ≥ 2%) — sampled candidate discovery, one mergeable
+    // fixed-size sketch aggregation as the no-false-negative screen,
+    // then an exact confirm count over the screened words (publication
+    // is estimator-free; the open-vocab audit corpus showed CMS
+    // collision drift the closed-vocab corpora masked).
+    Query("q_heavy_hitters", (s, dir) =>
+      TextOps.heavyHitters(Tables.documents(s, dir), minFreq = 0.02)
+        .orderBy("word"),
       """WITH toks AS (
         |  SELECT unnest(regexp_extract_all(lower(text), '((?:[\.,!?;"])|(?:(?:\#|\@)?[A-Za-z0-9_\-]+(?:''[a-z]{1,3})?))', 1)) AS word
         |  FROM documents
@@ -406,8 +195,9 @@ private[graft] object EntryCore {
         |SELECT word, count(*) AS cnt
         |FROM toks, tot GROUP BY word, tot.n
         |HAVING count(*) >= 0.02 * n
-        |ORDER BY word""".stripMargin,
-    "q_char_hist" ->
+        |ORDER BY word""".stripMargin),
+    // §2.4 A3 + §2.8 F3: per-letter mean/std-dev over dense per-doc counts.
+    Query("q_char_hist", (s, dir) => TextOps.charHistogram(Tables.documents(s, dir)),
       """WITH perdoc AS (
         |  SELECT doc_id, ch, count(*) AS n FROM (
         |    SELECT doc_id, unnest(string_split(regexp_replace(lower(text), '[^a-z]', '', 'g'), '')) AS ch
@@ -422,42 +212,95 @@ private[graft] object EntryCore {
         |  LEFT JOIN perdoc p ON p.doc_id = d.doc_id AND p.ch = a.ch
         |)
         |SELECT ch, round(avg(n), 4) AS mean_n, round(stddev_pop(n), 4) AS std_n
-        |FROM dense GROUP BY ch ORDER BY ch""".stripMargin,
-    "q_set_diff" ->
+        |FROM dense GROUP BY ch ORDER BY ch""".stripMargin),
+    // §2.3 J4: set difference (custkeys with orders − high-balance custkeys).
+    Query("q_set_diff", (s, dir) => RelationalOps.setDifference(
+      Tables.orders(s, dir).select(col("o_custkey").as("custkey")),
+      Tables.customer(s, dir).filter(col("c_acctbal") > 5000)
+        .select(col("c_custkey").as("custkey")),
+      "custkey").orderBy("custkey"),
       """SELECT custkey FROM (
         |  (SELECT DISTINCT o_custkey AS custkey FROM orders)
         |  EXCEPT
         |  (SELECT DISTINCT c_custkey AS custkey FROM customer WHERE c_acctbal > 5000)
-        |) t ORDER BY custkey""".stripMargin,
-    "q_hash_sample" ->
+        |) t ORDER BY custkey""".stripMargin),
+    // §2.2 P5: one-pass hash-bucket sample + streaming-shaped agg.
+    Query("q_hash_sample", (s, dir) =>
+      RelationalOps.hashBucketSample(Tables.events(s, dir), "user_id", 16, 3)
+        .agg(count(lit(1)).as("n"),
+          decMean(col("value")).as("mean_value"),
+          round(stddev_pop(col("value")), 4).as("std_value")),
       s"""SELECT count(*) AS n, ${decMeanSql("value")} AS mean_value,
          |       round(stddev_pop(value), 4) AS std_value
-         |FROM events WHERE (user_id * 2654435761) % 16 = 3""".stripMargin,
-    "q_semi_sample" ->
+         |FROM events WHERE (user_id * 2654435761) % 16 = 3""".stripMargin),
+    // §2.3 J5 + §2.2 P6: two-pass sampler as a semi-join.
+    Query("q_semi_sample", (s, dir) =>
+      RelationalOps.semiJoinSample(Tables.events(s, dir), "user_id", 16, 3)
+        .groupBy("user_id")
+        .agg(count(lit(1)).as("n_tx"), decMean(col("value")).as("mean_value"))
+        .orderBy("user_id"),
       s"""SELECT user_id, count(*) AS n_tx, ${decMeanSql("value")} AS mean_value
          |FROM events WHERE user_id IN (
          |  SELECT DISTINCT user_id FROM events WHERE (user_id * 2654435761) % 16 = 3)
-         |GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_uniform_sample" ->
+         |GROUP BY user_id ORDER BY user_id""".stripMargin),
+    // §2.6 T5: seeded exact-size-k uniform sample — the reference's
+    // shuffle-and-take-prefix sampler as a distributed top-k by
+    // engine-portable hash order (TakeOrderedAndProject, no full sort).
+    Query("q_uniform_sample", (s, dir) =>
+      RelationalOps.uniformSampleExact(Tables.events(s, dir), col("event_id"), 1000, "graft")
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          round(col("value"), 4).as("value"))
+        .orderBy("event_id"),
       """SELECT event_id, user_id, event_type, round(value, 4) AS value FROM (
         |  SELECT * FROM events
         |  ORDER BY md5(CAST(event_id AS VARCHAR) || '|graft') LIMIT 1000
-        |) t ORDER BY event_id""".stripMargin,
+        |) t ORDER BY event_id""".stripMargin),
+    // Streaming exact-size-k uniform sample through a REAL
+    // AvailableNow stream: per-shard bounded k-smallest-hash state
+    // (flatMapGroupsWithState, Update mode), shard snapshots reduced
+    // to the global k at the sink. Seed 'stream' (its own draw, not
+    // the batch sampler's); the oracle is the batch sampler's SQL —
+    // streaming/batch parity is the tested property.
     // the batch sampler's replay at the streaming gate's seed:
     // stream/batch parity is the tested property
-    "q_stream_sample" ->
+    Query("q_stream_sample", (s, dir) => {
+      import s.implicits._
+      val src = Tables.eventsStream(s, dir)
+        .withColumn("h", md5(concat_ws("|",
+          col("event_id").cast("string"), lit("stream")).cast("binary")))
+        .withColumn("shard",
+          pmod(conv(substring(col("h"), 1, 6), 16, 10).cast("long"), lit(8L)))
+        .select(col("shard"), col("h"), col("event_id"), col("user_id"),
+          col("event_type"), col("value"))
+        .as[(Long, String, Long, Long, String, Double)]
+      val out = graft.streaming.StreamingOps.streamingUniformSample(src, 1000)
+      // latest snapshot per shard via a window (a groupBy+self-join on
+      // a memory-sink view hits conflicting attribute ids); the table
+      // is shards·k·batches rows — sink-side work constant in stream
+      // length
+      val t = memorySinkRun(out.toDF(), "sample", "update")
+        .withColumn("__mx", max("seq").over(Window.partitionBy("shard")))
+        .filter(col("seq") === col("__mx"))
+      t.orderBy(col("h"), col("event_id")).limit(1000)
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          round(col("value"), 4).as("value"))
+        .orderBy("event_id")
+    },
       """SELECT event_id, user_id, event_type, round(value, 4) AS value FROM (
         |  SELECT * FROM events
         |  ORDER BY md5(CAST(event_id AS VARCHAR) || '|stream') LIMIT 1000
-        |) t ORDER BY event_id""".stripMargin,
-    "q_sample_frac" ->
-      s"""SELECT count(*) AS n, ${decMeanSql("value")} AS mean_value
-         |FROM events
-         |WHERE ('0x' || substring(md5(CAST(event_id AS VARCHAR) || '|graft'), 1, 6))::BIGINT
-         |      / 16777216.0 < 0.01""".stripMargin,
+        |) t ORDER BY event_id""".stripMargin),
+    // Deterministic epoch-shuffle training order: seeded md5 shuffle
+    // key → shard (mod 16) → per-shard dense position → round-robin
+    // interleaved global_pos. No global sort: the only wide op is the
+    // 16-way shard window.
     // same md5 shuffle key + 24-bit shard draw; row_number replays the
     // per-shard order with the key as tiebreak
-    "q_train_order" ->
+    Query("q_train_order", (s, dir) =>
+      RelationalOps.trainingOrder(
+          Tables.documents(s, dir).select("doc_id"), col("doc_id"), "ep1", 16)
+        .select(col("doc_id"), col("shard"), col("pos_in_shard"), col("global_pos"))
+        .orderBy("doc_id"),
       """WITH h AS (
         |  SELECT doc_id, md5(CAST(doc_id AS VARCHAR) || '|ep1') AS skey
         |  FROM documents
@@ -473,35 +316,102 @@ private[graft] object EntryCore {
         |)
         |SELECT doc_id, shard, pos_in_shard,
         |       pos_in_shard * 16 + shard AS global_pos
-        |FROM p ORDER BY doc_id""".stripMargin,
-    "q_stratified_sample" ->
+        |FROM p ORDER BY doc_id""".stripMargin),
+    // §2.6 T5 (fraction form): seeded ~1% scan-local uniform sample +
+    // running stats — the one-pass stream-sampler shape.
+    Query("q_sample_frac", (s, dir) =>
+      RelationalOps.uniformSampleFraction(Tables.events(s, dir), col("event_id"), 0.01, "graft")
+        .agg(count(lit(1)).as("n"), decMean(col("value")).as("mean_value")),
+      s"""SELECT count(*) AS n, ${decMeanSql("value")} AS mean_value
+         |FROM events
+         |WHERE ('0x' || substring(md5(CAST(event_id AS VARCHAR) || '|graft'), 1, 6))::BIGINT
+         |      / 16777216.0 < 0.01""".stripMargin),
+    // Stratified (balanced) sampling: exactly 50 events per event_type
+    // by seeded hash order — the per-language/per-label balanced draw
+    // of training-data curation, planned via the native bounded-heap
+    // top-k-per-key operator.
+    Query("q_stratified_sample", (s, dir) =>
+      RelationalOps.stratifiedSampleExact(
+        Tables.events(s, dir).select("event_id", "user_id", "event_type", "value"),
+        Seq("event_type"), col("event_id"), 50, "strat")
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          round(col("value"), 4).as("value"))
+        .orderBy("event_type", "event_id"),
       """SELECT event_id, user_id, event_type, round(value, 4) AS value FROM (
         |  SELECT *, row_number() OVER (PARTITION BY event_type
         |           ORDER BY md5(CAST(event_id AS VARCHAR) || '|strat')) AS rn
         |  FROM events) t
-        |WHERE rn <= 50 ORDER BY event_type, event_id""".stripMargin,
-    "q_dedup_last" ->
+        |WHERE rn <= 50 ORDER BY event_type, event_id""".stripMargin),
+    // §2.4 A5: deterministic last-rating-wins dedup.
+    Query("q_dedup_last", (s, dir) => Ratings.deduped(s, dir).orderBy("user_id", "item_id"),
       s"""WITH ${Ratings.OracleDedupCte}
          |SELECT user_id, item_id, rating FROM ratings
-         |ORDER BY user_id, item_id""".stripMargin,
+         |ORDER BY user_id, item_id""".stripMargin),
+    // Streaming CDC upsert-apply: the latest event per user maintained
+    // across micro-batches (one struct of state per key, late-older
+    // rows rejected by the (ts, id) guard); sink keeps each key's
+    // newest emission. Oracle = the batch latest-row query —
+    // stream/batch parity is the tested property.
     // the batch latest-row replay under the same (ts, id) total order
-    "q_stream_upsert" ->
+    Query("q_stream_upsert", (s, dir) => {
+      import s.implicits._
+      val src = Tables.eventsStream(s, dir)
+        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+          col("event_id"), col("event_type"), col("value"))
+        .as[(Long, Long, Long, String, Double)]
+      val out = graft.streaming.StreamingOps.upsertLatestByKey(src)
+      val w = Window.partitionBy("user_id")
+        .orderBy(col("last_ts_us").desc, col("last_event_id").desc)
+      memorySinkRun(out.toDF(), "upsert", "update").withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn")
+        .orderBy("user_id")
+    },
       """SELECT user_id, epoch_us(ts) AS last_ts_us, event_id AS last_event_id,
         |       event_type AS last_type, value AS last_value
         |FROM (SELECT *, row_number() OVER (PARTITION BY user_id
         |                                   ORDER BY ts DESC, event_id DESC) AS rn
         |      FROM events) x
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    "q_support_items" ->
+        |WHERE rn = 1 ORDER BY user_id""".stripMargin),
+    // §2.2 P3 + §2.4 A8: support filter (items with ≥25 distinct raters).
+    Query("q_support_items", (s, dir) => RelationalOps.supportFilter(
+      Ratings.deduped(s, dir), "item_id", "user_id", 25).orderBy("item_id"),
       s"""WITH ${Ratings.OracleDedupCte}
          |SELECT item_id, count(DISTINCT user_id) AS n_support
          |FROM ratings GROUP BY item_id
          |HAVING count(DISTINCT user_id) >= 25
-         |ORDER BY item_id""".stripMargin,
-    "q_distinct_users" ->
-      "SELECT DISTINCT user_id FROM events ORDER BY user_id",
-    "q_welford" -> WelfordOracle,
-    "q_matmul" ->
+         |ORDER BY item_id""".stripMargin),
+    // §2.4 A7: distinct key collection.
+    Query("q_distinct_users", (s, dir) =>
+      Tables.events(s, dir).select("user_id").distinct().orderBy("user_id"),
+      "SELECT DISTINCT user_id FROM events ORDER BY user_id"),
+    // §2.4 A4: single-pass Welford mean/std as a custom Aggregator (UDAF).
+    Query("q_welford", (s, dir) => {
+      val welford = udaf(WelfordAgg)
+      Tables.events(s, dir).groupBy("event_type")
+        .agg(welford(col("value")).as("w"))
+        .select(col("event_type"), col("w.n").as("n"),
+          round(col("w.mean"), 4).as("mean_value"),
+          round(col("w.std"), 4).as("std_value"))
+        .orderBy("event_type")
+    }, WelfordOracle),
+    // §2.3 J3 + §2.4 A13: COO matrix multiply (equi-join on the inner
+    // dim + hash agg). M = label<5 slice, N = transposed label>=5 slice;
+    // vec_id bounded so the oracle output stays O(10^4) at every sf.
+    Query("q_matmul", (s, dir) => {
+      // One parquet scan for both operands: explode to COO once, then
+      // split by label in memory (the naive two-branch form scans and
+      // explodes the embeddings twice).
+      val coo = CacheScope.autoRelease(
+        Tables.embeddings(s, dir).filter(col("vec_id") < 100)
+          .select(col("vec_id"), col("label"), posexplode(col("embedding")))
+          .select(col("vec_id"), col("label"), col("pos").cast("long").as("j"),
+            col("col").cast("double").as("v")))
+      val m = coo.filter(col("label") < 5).select(col("vec_id").as("i"), col("j"), col("v"))
+      val n = coo.filter(col("label") >= 5).select(col("j"), col("vec_id").as("k"), col("v"))
+      MatrixOps.multiply(m, n)
+        .select(col("i"), col("k"), round(col("v"), 6).as("v"))
+        .orderBy("i", "k")
+    },
       """WITH m AS (
         |  SELECT vec_id AS i, t.j, CAST(embedding[t.j + 1] AS DOUBLE) AS v
         |  FROM embeddings, range(64) t(j) WHERE label < 5 AND vec_id < 100
@@ -511,15 +421,25 @@ private[graft] object EntryCore {
         |)
         |SELECT m.i, n.k, round(sum(m.v * n.v), 6) AS v
         |FROM m JOIN n ON m.j = n.j
-        |GROUP BY m.i, n.k ORDER BY i, k""".stripMargin,
-    "q_reg_simple" ->
+        |GROUP BY m.i, n.k ORDER BY i, k""".stripMargin),
+    // §2.3 J1 + §2.8 F8/F9 + §2.6 T2: flagship a3_p1 pipeline — dense
+    // rel-freqs, per-word standardized OLS via corr sufficient stats.
+    Query("q_reg_simple", (s, dir) =>
+      RegressionOps.simpleRegression(regObs(s, dir), Some(RegK))
+        .select(col("word"), col("n"), round(col("beta"), 6).as("beta"),
+          round(col("t"), 6).as("t"))
+        .orderBy(col("beta").desc, col("word")),
       s"""$RegObsCte
          |SELECT word, count(*) AS n, round(corr(x, y), 6) AS beta,
          |       round(corr(x, y) * sqrt((count(*) - 2)
          |             / (1 - corr(x, y) * corr(x, y))), 6) AS t
          |FROM dense GROUP BY word
-         |ORDER BY beta DESC, word""".stripMargin,
-    "q_reg_multi" ->
+         |ORDER BY beta DESC, word""".stripMargin),
+    Query("q_reg_multi", (s, dir) =>
+      RegressionOps.multiRegression(regObs(s, dir), Some(RegK))
+        .select(col("word"), col("n"), round(col("beta1"), 6).as("beta1"),
+          round(col("beta2"), 6).as("beta2"), round(col("t1"), 6).as("t1"))
+        .orderBy(col("beta1").desc, col("word")),
       s"""$RegObsCte,
          |st AS (
          |  SELECT word, count(*) AS n, corr(x, y) AS ry1, corr(c, y) AS ry2,
@@ -532,26 +452,104 @@ private[graft] object EntryCore {
          |       round(((ry1 - ry2 * r12) / (1 - r12 * r12))
          |             * sqrt((n - 3) * (1 - r12 * r12)
          |                    / (1 - (ry1*ry1 + ry2*ry2 - 2*ry1*ry2*r12) / (1 - r12*r12))), 6) AS t1
-         |FROM st ORDER BY beta1 DESC, word""".stripMargin,
-    "q_cf_sims" ->
+         |FROM st ORDER BY beta1 DESC, word""".stripMargin),
+    // p-values (Student-t sf via commons-math), oracle-checked against
+    // the exact elementary t-CDF series evaluated by a DuckDB recursive
+    // CTE (below) and Breeze-pinned in RegressionOpsSpec.
+    // Student-t two-sided p-values, fully SQL: for INTEGER df the t-CDF
+    // is an elementary finite sum (Abramowitz & Stegun 26.7.3/4), so a
+    // recursive CTE evaluates it EXACTLY — same quantity commons-math
+    // computes via the regularized incomplete beta, agreeing to ~1e-12.
+    // θ = atan(|t|/√ν); odd ν: A = 2/π·(θ + sinθ·Σ c_j cos^{2j+1}θ);
+    // even ν: A = sinθ·Σ d_j cos^{2j}θ; p = 1 − A. The shared term
+    // recurrence is term *= cos²θ·(e−1)/e stepping the exponent e by 2.
+    Query("q_reg_pvalues", (s, dir) =>
+      RegressionOps.multiRegression(regObs(s, dir), Some(RegK))
+        .select(col("word"), round(col("t1"), 6).as("t1"),
+          round(col("p1"), 6).as("p1"), round(col("p1_bonf"), 6).as("p1_bonf"))
+        .orderBy(col("word")),
+      s"""${RegObsCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
+         |$PvalCtes
+         |SELECT word, round(t1, 6) AS t1, round(p1, 6) AS p1,
+         |       round(least(p1 * 20, 1.0), 6) AS p1_bonf
+         |FROM pfin ORDER BY word""".stripMargin),
+    // §2.3 J2 + §2.4 A10/A11 + §2.6: a3_p2 recommender — capped
+    // neighbor lists per target item.
+    Query("q_cf_sims", (s, dir) =>
+      CFOps.topNeighbors(CFOps.itemSimilarities(
+        CFOps.meanCentered(CFOps.supportFiltered(Ratings.dedupedByItem(s, dir))), CfTargets))
+        .select(col("t_item"), col("item_id"), round(col("sim"), 6).as("sim"),
+          col("n_common"))
+        .orderBy("t_item", "item_id"),
       s"""WITH ${Ratings.OracleDedupCteMat},
          |$CfCte
          |SELECT t_item, item_id, round(sim, 6) AS sim, n_common
-         |FROM nbrs ORDER BY t_item, item_id""".stripMargin,
+         |FROM nbrs ORDER BY t_item, item_id""".stripMargin),
+    // The SAME similarity pipeline through the Zipf-head escape hatch
+    // (Params.saltedSupport: two-level salted counts + join-back
+    // instead of partition-frame windows — bounded tasks under a
+    // dominant key, CFOps scaladoc). Output is bit-identical to the
+    // window form, so it shares q_cf_sims' ORACLE: the driver proves
+    // plan-form equivalence end to end, not just the EdgeCasesSpec
+    // corpus.
     // the salted plan form is output-identical by construction — the
     // SAME oracle gates both (hash equality across plan forms)
-    "q_cf_sims_salted" ->
+    Query("q_cf_sims_salted", (s, dir) => {
+      val p = CFOps.Params(saltedSupport = true)
+      CFOps.topNeighbors(CFOps.itemSimilarities(
+        CFOps.meanCentered(CFOps.supportFiltered(Ratings.dedupedByItem(s, dir), p), p),
+        CfTargets, p), p)
+        .select(col("t_item"), col("item_id"), round(col("sim"), 6).as("sim"),
+          col("n_common"))
+        .orderBy("t_item", "item_id")
+    },
       s"""WITH ${Ratings.OracleDedupCteMat},
          |$CfCte
          |SELECT t_item, item_id, round(sim, 6) AS sim, n_common
-         |FROM nbrs ORDER BY t_item, item_id""".stripMargin,
+         |FROM nbrs ORDER BY t_item, item_id""".stripMargin),
+    // §2.4 A12: weighted-average predictions with pass-through.
+    Query("q_cf_recommend", (s, dir) =>
+      CFOps.recommend(Ratings.dedupedByItem(s, dir), CfTargets)
+        .select(col("t_item"), col("user_id"), round(col("pred"), 4).as("pred"))
+        .orderBy("t_item", "user_id"),
+      s"""WITH ${Ratings.OracleDedupCteMat},
+         |$CfCte,
+         |cand AS (
+         |  SELECT r2.user_id, n.t_item,
+         |         CAST(sum(CAST(r2.rating * n.sim AS DECIMAL(30,15))) AS DOUBLE)
+         |           / CAST(sum(CAST(n.sim AS DECIMAL(30,15))) AS DOUBLE) AS wavg,
+         |         count(*) AS n_nbrs
+         |  FROM r2 JOIN nbrs n ON r2.item_id = n.item_id
+         |  GROUP BY r2.user_id, n.t_item
+         |), own AS (
+         |  SELECT user_id, item_id AS t_item, rating FROM r2 WHERE item_id IN (3, 7)
+         |)
+         |SELECT c.t_item, c.user_id, round(coalesce(CAST(o.rating AS DOUBLE), c.wavg), 4) AS pred
+         |FROM cand c LEFT JOIN own o ON o.user_id = c.user_id AND o.t_item = c.t_item
+         |WHERE c.n_nbrs >= 2 AND coalesce(CAST(o.rating AS DOUBLE), c.wavg) > 0
+         |ORDER BY c.t_item, c.user_id""".stripMargin),
+    // One ALS alternation at rank 2 (MLlib's recsys inner step):
+    // deterministic item-factor seed grid, per-user ridge normal
+    // equations solved closed-form. Int64-exact accumulators make the
+    // pre-rounding doubles bit-identical across engines.
     // ALS: same int64 normal-equation sums (DuckDB sum → HUGEINT, so
     // CAST to BIGINT), same double Cramer solve, 6-dp publish
-    "q_als_round" -> AlsUserOracle,
+    Query("q_als_round", (s, dir) =>
+      CFOps.alsUserFactors(Ratings.deduped(s, dir), lambda = 0.1)
+        .orderBy("user_id"),
+      AlsUserOracle),
+    // The ITEM half-step closing the alternation: user factors join
+    // back into ratings (the real ALS iteration's factor join), one
+    // item-keyed aggregate of decimal-cast double products, same
+    // closed-form solve.
     // item half-step: the published (rounded, hence engine-identical)
     // user factors feed per-item ridge solves; decimal sums of the
     // double products, same Cramer dag
-    "q_als_item" ->
+    Query("q_als_item", (s, dir) => {
+      val r = Ratings.deduped(s, dir)
+      CFOps.alsItemFactors(r, CFOps.alsUserFactors(r, lambda = 0.1))
+        .orderBy("item_id")
+    },
       s"""WITH uf AS ($AlsUserOracle),
          |${Ratings.OracleDedupCte},
          |j AS (
@@ -575,36 +573,6 @@ private[graft] object EntryCore {
          |SELECT item_id, n_users,
          |       round((a22 * b1 - a12 * b2) / (a11 * a22 - a12 * a12), 6) + 0.0 AS y1,
          |       round((a11 * b2 - a12 * b1) / (a11 * a22 - a12 * a12), 6) + 0.0 AS y2
-         |FROM m ORDER BY item_id""".stripMargin,
-    "q_cf_recommend" ->
-      s"""WITH ${Ratings.OracleDedupCteMat},
-         |$CfCte,
-         |cand AS (
-         |  SELECT r2.user_id, n.t_item,
-         |         CAST(sum(CAST(r2.rating * n.sim AS DECIMAL(30,15))) AS DOUBLE)
-         |           / CAST(sum(CAST(n.sim AS DECIMAL(30,15))) AS DOUBLE) AS wavg,
-         |         count(*) AS n_nbrs
-         |  FROM r2 JOIN nbrs n ON r2.item_id = n.item_id
-         |  GROUP BY r2.user_id, n.t_item
-         |), own AS (
-         |  SELECT user_id, item_id AS t_item, rating FROM r2 WHERE item_id IN (3, 7)
-         |)
-         |SELECT c.t_item, c.user_id, round(coalesce(CAST(o.rating AS DOUBLE), c.wavg), 4) AS pred
-         |FROM cand c LEFT JOIN own o ON o.user_id = c.user_id AND o.t_item = c.t_item
-         |WHERE c.n_nbrs >= 2 AND coalesce(CAST(o.rating AS DOUBLE), c.wavg) > 0
-         |ORDER BY c.t_item, c.user_id""".stripMargin,
-    // Student-t two-sided p-values, fully SQL: for INTEGER df the t-CDF
-    // is an elementary finite sum (Abramowitz & Stegun 26.7.3/4), so a
-    // recursive CTE evaluates it EXACTLY — same quantity commons-math
-    // computes via the regularized incomplete beta, agreeing to ~1e-12.
-    // θ = atan(|t|/√ν); odd ν: A = 2/π·(θ + sinθ·Σ c_j cos^{2j+1}θ);
-    // even ν: A = sinθ·Σ d_j cos^{2j}θ; p = 1 − A. The shared term
-    // recurrence is term *= cos²θ·(e−1)/e stepping the exponent e by 2.
-    "q_reg_pvalues" ->
-      s"""${RegObsCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |$PvalCtes
-         |SELECT word, round(t1, 6) AS t1, round(p1, 6) AS p1,
-         |       round(least(p1 * 20, 1.0), 6) AS p1_bonf
-         |FROM pfin ORDER BY word""".stripMargin,
+         |FROM m ORDER BY item_id""".stripMargin),
   )
 }

@@ -617,9 +617,9 @@ private[graft] object EntryHelpers {
     * the redundancy max over 6-dp pair sims and picks the score
     * argmax with the nn_id tie-break — the engine's loop replayed.
     */
-  private[graft] def mmrRoundsSql(select: Int): String = {
-    val score = "CAST(0.7 AS DOUBLE) * r.rel - (CAST(1 AS DOUBLE) " +
-      "- CAST(0.7 AS DOUBLE)) * coalesce(m.mxs, CAST(0 AS DOUBLE))"
+  private[graft] def mmrRoundsSql(select: Int, lambda: Double): String = {
+    val score = s"CAST($lambda AS DOUBLE) * r.rel - (CAST(1 AS DOUBLE) " +
+      s"- CAST($lambda AS DOUBLE)) * coalesce(m.mxs, CAST(0 AS DOUBLE))"
     (2 to select).map { t =>
       s"""rem$t AS (
          |  SELECT c.q_id, c.nn_id, c.rel FROM cand c
@@ -647,7 +647,7 @@ private[graft] object EntryHelpers {
   /** Unrolled TextRank rounds for the q_textrank oracle: 9-dp
     * contribution terms decimal-summed per node, damped update
     * re-rounded 9dp — the engine's fixpoint path replayed. */
-  private[graft] def trRoundsSql(rounds: Int): String =
+  private[graft] def trRoundsSql(rounds: Int, damping: Double): String =
     (1 to rounds).map { t =>
       s"""tc$t AS MATERIALIZED (
          |  SELECT e.dst AS word,
@@ -655,9 +655,9 @@ private[graft] object EntryHelpers {
          |  FROM tre e JOIN tr${t - 1} r ON r.word = e.src GROUP BY e.dst
          |), tr$t AS MATERIALIZED (
          |  SELECT n.word,
-         |    round((CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE))
+         |    round((CAST(1 AS DOUBLE) - CAST($damping AS DOUBLE))
          |            / CAST((SELECT nn FROM trcnt) AS DOUBLE)
-         |          + CAST(0.85 AS DOUBLE) * coalesce(c.s, CAST(0 AS DOUBLE)), 9) AS r
+         |          + CAST($damping AS DOUBLE) * coalesce(c.s, CAST(0 AS DOUBLE)), 9) AS r
          |  FROM trnodes n LEFT JOIN tc$t c USING (word)
          |)""".stripMargin
     }.mkString(",\n")
@@ -786,6 +786,47 @@ private[graft] object EntryHelpers {
       |       coalesce(abs(z) > 3.0, FALSE) AS is_anomaly
       |FROM c ORDER BY user_id, seq""".stripMargin
 
+  /** Shared DuckDB CTE chain for the exact-integer ACF lanes —
+    * consumed by the q_acf oracle (publication) and the q_ljung_box
+    * oracle (portmanteau aggregation on the same lanes).
+    */
+  private[graft] val AcfCtes: String =
+    """WITH daily AS (
+      |  SELECT event_type AS grp, epoch_us(ts) // 86400000000 AS day,
+      |         sum(CAST(CAST(floor(value * 10) AS BIGINT) AS HUGEINT)) AS s
+      |  FROM events GROUP BY 1, 2
+      |), span AS (SELECT grp, min(day) AS d0, max(day) AS d1
+      |            FROM daily GROUP BY grp),
+      |grid AS (SELECT grp, unnest(generate_series(d0, d1)) AS day FROM span),
+      |dense AS (
+      |  SELECT g.grp, g.day, coalesce(d.s, CAST(0 AS HUGEINT)) AS s
+      |  FROM grid g LEFT JOIN daily d ON g.grp = d.grp AND g.day = d.day
+      |), lagged AS (
+      |  SELECT grp, s,
+      |         lag(s, 1) OVER w AS l1, lag(s, 2) OVER w AS l2,
+      |         lag(s, 3) OVER w AS l3, lag(s, 4) OVER w AS l4,
+      |         lag(s, 5) OVER w AS l5, lag(s, 6) OVER w AS l6,
+      |         lag(s, 7) OVER w AS l7
+      |  FROM dense WINDOW w AS (PARTITION BY grp ORDER BY day)
+      |), pairs AS (
+      |  SELECT grp, k, s, xl FROM (
+      |    SELECT grp, s, r.k AS k,
+      |           CASE r.k WHEN 1 THEN l1 WHEN 2 THEN l2 WHEN 3 THEN l3
+      |                    WHEN 4 THEN l4 WHEN 5 THEN l5 WHEN 6 THEN l6
+      |                    WHEN 7 THEN l7 END AS xl
+      |    FROM lagged
+      |    CROSS JOIN (SELECT unnest(generate_series(1, 7)) AS k) r
+      |  ) WHERE xl IS NOT NULL
+      |), perk AS (
+      |  SELECT grp, k, sum(s * xl) AS p_k, sum(xl) AS a_k, sum(s) AS b_k,
+      |         CAST(count(*) AS BIGINT) AS n_pairs
+      |  FROM pairs GROUP BY 1, 2
+      |), tot AS (
+      |  SELECT grp, CAST(count(*) AS HUGEINT) AS n, sum(s) AS t,
+      |         sum(s * s) AS q
+      |  FROM dense GROUP BY grp
+      |)""".stripMargin
+
   private[graft] val WelfordOracle: String =
     """SELECT event_type, count(value) AS n, round(avg(value), 4) AS mean_value,
       |       round(stddev_pop(value), 4) AS std_value
@@ -863,40 +904,6 @@ private[graft] object EntryHelpers {
   /** Shared oracle for q_simhash / q_sql_simhash. */
   private[graft] val SimhashOracle: String =
     s"WITH $SimhashSigsCte\nSELECT doc_id, sig FROM sigs ORDER BY doc_id"
-
-  /** Oracle for q_simhash_pairs: the QUADRATIC all-pairs Hamming scan
-    * the pigeonhole block join replaces — equality is a recall proof
-    * (pigeonhole completeness is structural, so any missing pair
-    * would hash-mismatch).
-    */
-  private[graft] val SimhashPairsOracle: String =
-    // Banded rewrite of the all-pairs theta join — LOSSLESS by
-    // pigeonhole: the 60-bit signature splits into 4 disjoint 15-bit
-    // bands, and hamming(a,b) <= 3 means the (at most 3) differing
-    // bits touch at most 3 bands, so at least one band is bit-equal —
-    // every qualifying pair survives the band equi-join, and the
-    // explicit hamming predicate re-verifies each candidate. The naive
-    // a.doc_id < b.doc_id form is 1.25e11 comparisons at zipf_sf10
-    // (> 900 s in DuckDB); banding makes the oracle O(pairs-per-
-    // bucket), the standard Hamming-join dual of the engine's own
-    // banded plan. sigsm is MATERIALIZED (three references).
-    s"""WITH $SimhashSigsCte,
-       |sigsm AS MATERIALIZED (SELECT doc_id, sig FROM sigs),
-       |bands AS (
-       |  SELECT doc_id, i AS band,
-       |         (sig >> CAST(15 * i AS INTEGER)) & 32767 AS bv
-       |  FROM sigsm, range(4) r(i)
-       |), cand AS (
-       |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
-       |)
-       |SELECT c.id_a, c.id_b, bit_count(xor(x.sig, y.sig)) AS hamming
-       |FROM cand c
-       |JOIN sigsm x ON x.doc_id = c.id_a
-       |JOIN sigsm y ON y.doc_id = c.id_b
-       |WHERE bit_count(xor(x.sig, y.sig)) <= 3
-       |ORDER BY id_a, id_b""".stripMargin
 
   /** Shared oracle for q_sessionize / q_stream_sessionize: the
     * gaps-and-islands mirror of `session_window` (split strictly

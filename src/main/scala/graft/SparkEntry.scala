@@ -24,12 +24,11 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_reg_multi")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2 — composed
-    * from the per-family registry slices (Entry*.scala; split r8,
-    * purely mechanical).
+  /** Every registered query, declared once in its family slice
+    * (Entry*.scala). Fails at init, naming the name, if any is declared
+    * twice.
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-
+  private val registry: Map[String, Query] = Query.byName(
     EntryCore.queries ++
     EntryDedup.queries ++
     EntrySimilarity.queries ++
@@ -37,16 +36,29 @@ object SparkEntry {
     EntryRelational.queries ++
     EntryTextModels.queries ++
     EntryFormats.queries ++
-    EntryEval.queries
+    EntryEval.queries)
 
-  def oracleSql: Map[String, String] =
+  /** One entry per implemented operator from SURVEY.md §2. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.view.mapValues(_.run).toMap
 
-    EntryCore.oracleSql ++
-    EntryDedup.oracleSql ++
-    EntrySimilarity.oracleSql ++
-    EntryCuration.oracleSql ++
-    EntryRelational.oracleSql ++
-    EntryTextModels.oracleSql ++
-    EntryFormats.oracleSql ++
-    EntryEval.oracleSql
+  /** The DuckDB replay each query is hash-compared against. */
+  val oracleSql: Map[String, String] = registry.view.mapValues(_.oracle).toMap
+}
+
+/** One registered query: the Spark pipeline the driver runs over an sf
+  * directory, and the DuckDB SQL whose result it must hash-equal.
+  */
+private[graft] final case class Query(
+    name: String,
+    run: (SparkSession, String) => DataFrame,
+    oracle: String)
+
+private[graft] object Query {
+  /** Index `all` by name; a name declared twice throws, naming it. */
+  def byName(all: Seq[Query]): Map[String, Query] = {
+    val dups = all.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    require(dups.isEmpty, s"query declared more than once: ${dups.toSeq.sorted.mkString(", ")}")
+    all.map(q => q.name -> q).toMap
+  }
 }

@@ -34,13 +34,4 @@ object MatrixOps {
       .agg(sum(col("m.v") * col("n.v")).as("v"))
       .select("i", "k", "v")
   }
-
-  /** embeddings table → COO triples (vec_id, dim, value). `posexplode`
-    * stays inside whole-stage codegen; the float→double cast happens
-    * once at the scan.
-    */
-  def embeddingsToCoo(embeddings: DataFrame): DataFrame =
-    embeddings.select(col("vec_id"), posexplode(col("embedding")))
-      .select(col("vec_id").as("i"), col("pos").cast("long").as("j"),
-        col("col").cast("double").as("v"))
 }

@@ -106,7 +106,8 @@ object SimilarityOps {
     * to k rows per query FIRST (map-side partial, ≤ k rows per
     * partition cross the exchange, no full sort), then the rank window
     * runs over only queries×k rows. The row_number-over-everything
-    * formulation sorts the entire similarity table per query.
+    * formulation also prunes before its exchange (a partial
+    * `WindowGroupLimit`), but only after sorting every similarity row.
     */
   private def rankTopK(sims: DataFrame, k: Int): DataFrame = {
     val top = graft.plans.TopKOps.topKPerKey(

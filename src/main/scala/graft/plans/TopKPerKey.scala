@@ -16,8 +16,12 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   * to the expression-level kernels.
   *
   * Why not `row_number() OVER (PARTITION BY key ORDER BY …) <= k`?
-  * The window form SORTS every input row of every key and shuffles ALL
-  * rows. This operator keeps a bounded k-row heap per key:
+  * Spark 4.1 plans that window form with a partial `WindowGroupLimit`
+  * before the exchange, so it too shuffles at most k rows per (key,
+  * partition); its costs are a local SORT of every input row ahead of
+  * that partial limit, and a rank window on both sides of the
+  * exchange. This operator needs no input sort — it keeps a bounded
+  * k-row heap per key:
   *
   *   partial TopKPerKeyExec        ← per input partition, map-side
   *   → Exchange hash(keys)         ← shuffles ≤ k rows per (key, partition)

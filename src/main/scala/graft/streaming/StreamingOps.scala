@@ -8,15 +8,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * semantics is the ONE-PASS constraint of the stream sampler
   * (`Assignment 1/sampler_v02.py:63-87`, SURVEY.md §2.10): no second
   * scan, no driver-resident id set, state bounded by the aggregate.
-  * Here that becomes `readStream → hash-bucket filter → streaming agg`:
-  * Spark's incremental HashAggregate maintains exactly the (n, mean,
-  * M2)-equivalent state per key, updated once per micro-batch.
-  *
-  * [[welfordByKey]] is the explicit `flatMapGroupsWithState` mirror of
-  * the reference's Welford recurrence — same update algebra
+  * Here that becomes [[streamingUniformSample]] (bounded per-shard
+  * k-smallest-hash state) for the sample, and [[welfordByKey]] for the
+  * running stats: the explicit `flatMapGroupsWithState` mirror of the
+  * reference's Welford recurrence — same update algebra
   * (`new_mean = mean + (x−mean)/n; M2 += (x−new_mean)·(x−mean)`), kept
-  * as typed per-key state, for when the built-in agg's semantics are
-  * not enough (custom state, custom emission policy).
+  * as typed per-key state.
   *
   * Scale notes: both paths shuffle once, keyed by the group column;
   * state lives in the state store (RocksDB-able), sized by distinct
@@ -24,21 +21,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * one-pass rules are really about.
   */
 object StreamingOps {
-
-  /** One-pass stream sampler + running mean/std: keep rows whose
-    * `pmod(hash(keyCol), buckets) == chosen` (the reference's
-    * user-bucket sample, P5) and maintain count/mean/stddev_pop per
-    * `groupCol` incrementally. Works on any streaming OR batch
-    * DataFrame with the same plan — the single-scan shape is identical.
-    */
-  def sampledRunningStats(events: DataFrame, keyCol: String, buckets: Int,
-      chosen: Int, groupCol: String, valueCol: String): DataFrame =
-    events
-      .filter(pmod(hash(col(keyCol)), lit(buckets)) === lit(chosen))
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n"),
-        avg(col(valueCol)).as("mean_value"),
-        stddev_pop(col(valueCol)).as("std_value"))
 
   /** Per-key Welford state: the exact triple the reference carries. */
   case class WelfordState(n: Long, mean: Double, m2: Double)

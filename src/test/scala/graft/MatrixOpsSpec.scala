@@ -18,10 +18,4 @@ class MatrixOpsSpec extends SparkSpec {
     val n = Seq((1L, 0L, 7.0)).toDF("j", "k", "v")            // only j=1 present
     assert(MatrixOps.multiply(m, n).count() == 0)              // inner dim never matches
   }
-
-  test("embeddingsToCoo emits one triple per dimension") {
-    val coo = MatrixOps.embeddingsToCoo(Tables.embeddings(spark, sf0))
-    val dims = coo.groupBy("i").count().select("count").distinct().as[Long].collect()
-    assert(dims.toSeq == Seq(64L))
-  }
 }

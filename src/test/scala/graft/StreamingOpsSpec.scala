@@ -11,32 +11,6 @@ import scala.concurrent.duration._
 class StreamingOpsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("streaming sampled stats equal the batch plan on the same data (one-pass parity)") {
-    val batch = Tables.events(spark, sf0)
-    val expect = StreamingOps.sampledRunningStats(batch, "user_id", 16, 3,
-      "event_type", "value")
-      .orderBy("event_type").collect()
-
-    val schema = spark.read.parquet(s"$sf0/events.parquet").schema
-    // file-stream source wants a directory; glob down to the one table
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(sf0)
-    val q = StreamingOps.sampledRunningStats(stream, "user_id", 16, 3,
-      "event_type", "value")
-      .writeStream.format("memory").queryName("stream_stats_test")
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val got = spark.table("stream_stats_test").orderBy("event_type").collect()
-
-    assert(got.length == expect.length && got.nonEmpty)
-    got.zip(expect).foreach { case (g, e) =>
-      assert(g.getString(0) == e.getString(0))
-      assert(g.getLong(1) == e.getLong(1))
-      assert(math.abs(g.getDouble(2) - e.getDouble(2)) < 1e-9)
-      assert(math.abs(g.getDouble(3) - e.getDouble(3)) < 1e-9)
-    }
-  }
-
   test("stream-static join enriches a stream with a dimension table (batch parity)") {
     val dim = Tables.customer(spark, sf0)
       .select($"c_custkey".as("user_id"), $"c_mktsegment")

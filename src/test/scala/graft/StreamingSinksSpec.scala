@@ -154,9 +154,9 @@ class StreamingSinksSpec extends SparkSpec {
       .filter(p => p.matches(".*/Entry[A-Za-z]+\\.scala"))
       .map(p => new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(p)), "UTF-8"))
-    // gate definition blocks: from `"q_stream_x" -> ((s, dir)` to the
-    // next `"q_` key (oracleSql entries don't match the arrow form)
-    val gateDef = """"(q_stream_[a-z_]+)" -> \(\(s, dir\)""".r
+    // gate definition blocks: from `Query("q_stream_x", (s, dir)` to the
+    // next `"q_` name (the block ends with the query's own oracle)
+    val gateDef = """Query\("(q_stream_[a-z_]+)", \(s, dir\)""".r
     val blocks: Map[String, String] = sources.flatMap { text =>
       val starts = gateDef.findAllMatchIn(text).toList
       starts.map { m =>
