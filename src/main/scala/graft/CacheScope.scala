@@ -168,11 +168,6 @@ object CacheScope {
     } finally if (!settled) p.releaseAll()
   }
 
-  /** Persist `df` until the first query execution that reads it
-    * completes, then unpersist — [[pinned]]'s one-pin case.
-    */
-  def autoRelease(df: DataFrame): DataFrame = pinned(p => p(df))
-
   /** Run `body` once, when the FIRST query execution whose analyzed
     * plan contains `df`'s subtree completes (success or failure), then
     * unregister: the consumption trigger behind [[pinned]].

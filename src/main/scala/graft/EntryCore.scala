@@ -397,11 +397,11 @@ private[graft] object EntryCore {
     // §2.3 J3 + §2.4 A13: COO matrix multiply (equi-join on the inner
     // dim + hash agg). M = label<5 slice, N = transposed label>=5 slice;
     // vec_id bounded so the oracle output stays O(10^4) at every sf.
-    Query("q_matmul", (s, dir) => {
+    Query("q_matmul", (s, dir) => CacheScope.pinned { p =>
       // One parquet scan for both operands: explode to COO once, then
       // split by label in memory (the naive two-branch form scans and
       // explodes the embeddings twice).
-      val coo = CacheScope.autoRelease(
+      val coo = p(
         Tables.embeddings(s, dir).filter(col("vec_id") < 100)
           .select(col("vec_id"), col("label"), posexplode(col("embedding")))
           .select(col("vec_id"), col("label"), col("pos").cast("long").as("j"),

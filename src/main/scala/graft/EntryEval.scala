@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.WelfordAgg
 import graft.operators._
 import graft.EntryHelpers._
 
@@ -1019,10 +1018,9 @@ private[graft] object EntryEval {
     // eval split — gold, the NB classifier, and the langId heuristic.
     // Fleiss replay: exact-int P̄, 9-dp decimal-summed P̄e, one IEEE
     // dag for kappa; raters = gold + NB replay + langId replay
-    Query("q_fleiss", (s, dir) => {
+    Query("q_fleiss", (s, dir) => CacheScope.pinned { p =>
       val docs = Tables.documents(s, dir)
-      val nb = graft.CacheScope.autoRelease(
-        TextOps.naiveBayes(docs, labelCol = "lang", evalMod = 5))
+      val nb = p(TextOps.naiveBayes(docs, labelCol = "lang", evalMod = 5))
       val lid = TextAnalysisOps.langId(docs.filter(col("doc_id") % 5 === 0))
       val ratings = nb.select(col("doc_id"), col("true_label").as("label"))
         .unionByName(nb.select(col("doc_id"), col("pred_label").as("label")))
@@ -1170,10 +1168,9 @@ private[graft] object EntryEval {
     // totals and the expected mass are exact ints (HUGEINT lanes for
     // the squares), the observed-disagreement mass is 9-dp per-item
     // terms decimal-summed, alpha one IEEE dag
-    Query("q_krippendorff", (s, dir) => {
+    Query("q_krippendorff", (s, dir) => CacheScope.pinned { p =>
       val docs = Tables.documents(s, dir)
-      val nb = graft.CacheScope.autoRelease(
-        TextOps.naiveBayes(docs, labelCol = "lang", evalMod = 5))
+      val nb = p(TextOps.naiveBayes(docs, labelCol = "lang", evalMod = 5))
       val lid = TextAnalysisOps.langId(docs.filter(col("doc_id") % 10 === 0))
       val ratings = nb.select(col("doc_id"), col("true_label").as("label"))
         .unionByName(nb.select(col("doc_id"), col("pred_label").as("label")))
@@ -1552,10 +1549,9 @@ private[graft] object EntryEval {
     // relevance side (one scope-cached computation).
     // NDCG replay: the q_rrf_fusion ranking chain + graded gains from
     // the exact cosine ranks; 9-dp discounts, decimal per-query sums
-    Query("q_ndcg", (s, dir) => {
+    Query("q_ndcg", (s, dir) => CacheScope.pinned { p =>
       val emb = Tables.embeddings(s, dir)
-      val cos = graft.CacheScope.autoRelease(
-        SimilarityOps.bruteForceTopK(emb, col("vec_id") < 10, 10))
+      val cos = p(SimilarityOps.bruteForceTopK(emb, col("vec_id") < 10, 10))
       val l2 = SimilarityOps.bruteForceTopKL2(emb, col("vec_id") < 10, 10)
       val fused = SimilarityOps.rrfFuse(Seq(cos, l2), topK = 10)
         .select(col("q_id"), col("nn_id"), col("fused_rank").as("pos"))

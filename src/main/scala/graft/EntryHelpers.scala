@@ -133,11 +133,6 @@ private[graft] object EntryHelpers {
     spark.read.schema(df.schema).parquet(s"$dir/out")
   }
 
-  /** Order-insensitive mean: exact decimal sum, then one double divide.
-    * Plain `round(avg(double),4)` can flip the last digit between Spark
-    * and DuckDB because partial-sum order differs; the decimal sum is
-    * exact in both engines so the quotient is bit-identical.
-    */
   /** DuckDB replay of [[SimilarityOps.powerIterationPC]]: the same
     * recurrence unrolled as chained CTEs (the q_pagerank oracle
     * pattern). Every CTE is MATERIALIZED — DuckDB inlines plain CTEs,

@@ -69,7 +69,7 @@ object Verify {
         // NPE surfacing as a bare message) is undebuggable otherwise
         e.printStackTrace()
       }
-      // operator-internal caches are query-scoped (CacheScope.autoRelease
+      // operator-internal caches are query-scoped (CacheScope.pinned
       // releases them when the consuming query finishes); clearCache is
       // belt-and-braces for the async release window and for any
       // evaluation path that bypasses the listener bus

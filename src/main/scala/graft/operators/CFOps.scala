@@ -196,11 +196,11 @@ object CFOps {
     * sim, n_common) for pairs with ≥ minCommonUsers and sim > 0.
     */
   def itemSimilarities(centered0: DataFrame, targets: Seq[Long],
-      p: Params = Params()): DataFrame = {
+      p: Params = Params()): DataFrame = graft.CacheScope.pinned { pins =>
     // `centered` feeds three branches (norms, target slice, dot join);
     // its lineage includes the dedup window + both support joins —
     // persist (query-scoped) so that chain runs once instead of three.
-    val centered = graft.CacheScope.autoRelease(centered0)
+    val centered = pins(centered0)
     val norms = centered.groupBy("item_id")
       .agg(sqrt(decSum(col("rc") * col("rc"))).as("nrm"))
     val tvec = centered.filter(col("item_id").isin(targets: _*))

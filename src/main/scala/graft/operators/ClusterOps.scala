@@ -237,12 +237,12 @@ object ClusterOps {
     */
   def gridDensityClusters(emb: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding", eps: Double = 0.25,
-      minPts: Long = 8): DataFrame = {
+      minPts: Long = 8): DataFrame = graft.CacheScope.pinned { p =>
     require(eps > 0 && minPts >= 1, "eps must be positive, minPts >= 1")
-    val pts = graft.CacheScope.autoRelease(emb.select(col(idCol).as("vec_id"),
+    val pts = p(emb.select(col(idCol).as("vec_id"),
       floor(element_at(col(vecCol), 1).cast("double") / eps).cast("long").as("cx"),
       floor(element_at(col(vecCol), 2).cast("double") / eps).cast("long").as("cy")))
-    val dense = graft.CacheScope.autoRelease(
+    val dense = p(
       pts.groupBy("cx", "cy").agg(count(lit(1)).as("__n"))
         .filter(col("__n") >= minPts)
         .withColumn("cid", (col("cx") + 4096L) * 8192L + col("cy") + 4096L))

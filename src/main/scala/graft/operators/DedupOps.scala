@@ -228,7 +228,7 @@ object DedupOps {
   def verifiedNearDups(docs: DataFrame, nGram: Int = 3, sigLen: Int = 128,
       r: Int = 4, bands: Int = 32, minJac: Double = 0.8,
       textCol: String = "text", rowPrefixMod: Option[Long] = None,
-      sigBase: Option[DataFrame] = None): DataFrame = {
+      sigBase: Option[DataFrame] = None): DataFrame = graft.CacheScope.pinned { p =>
     // The shingle+signature base feeds three plan branches (banding,
     // left verify, right verify); persist so the CPU-heavy tokenize →
     // shingle → hash → minhash work runs once. MEMORY_AND_DISK: at
@@ -250,7 +250,7 @@ object DedupOps {
               .filter(size(col("hs_sig")) > 0),
             sigLen, "hs_sig").drop("hs_sig")
       }
-      graft.CacheScope.autoRelease(withSig)
+      p(withSig)
     }
     val cand = lshCandidates(base.select("doc_id", "sig"), r, bands)
     verifiedPairs(cand, base, minJac)
@@ -282,14 +282,14 @@ object DedupOps {
   def incrementalNearDups(oldDocs: DataFrame, newDocs: DataFrame,
       nGram: Int = 3, sigLen: Int = 128, r: Int = 4, bands: Int = 32,
       minJac: Double = 0.8, textCol: String = "text",
-      sigBase: Option[DataFrame] = None): DataFrame = {
+      sigBase: Option[DataFrame] = None): DataFrame = graft.CacheScope.pinned { p =>
     // `sigBase`: caller-provided (doc_id, hs, sig) frame covering
     // old ∪ new — shares the corpus minhash pass with a sibling pair
     // pass (see [[verifiedNearDups]]); caller owns caching/release.
     val base = sigBase.getOrElse {
       val all = oldDocs.select(col("doc_id"), col(textCol))
         .unionByName(newDocs.select(col("doc_id"), col(textCol)))
-      graft.CacheScope.autoRelease(
+      p(
         minhashSignatures(hashedShingled(all, nGram, textCol), sigLen, "hs"))
     }
     val allBands = lshBands(base.select("doc_id", "sig"), r, bands)
@@ -365,10 +365,10 @@ object DedupOps {
     * uninformative hot shingles to bound it (and the per-row skew).
     */
   private def pairIntersections(docs: DataFrame, nGram: Int,
-      maxShingleDf: Option[Long], textCol: String): DataFrame = {
+      maxShingleDf: Option[Long], textCol: String): DataFrame = graft.CacheScope.pinned { p =>
     // two consumers (posting build + set sizes) → persist one tokenize
-    // (query-scoped: auto-released when the consuming query finishes)
-    val sh = graft.CacheScope.autoRelease(hashedShingled(docs, nGram, textCol))
+    // (query-scoped: released when the consuming query finishes)
+    val sh = p(hashedShingled(docs, nGram, textCol))
     val posts = sh.select(col("doc_id"), explode(col("hs")).as("h"))
       .groupBy("h").agg(sort_array(collect_list(col("doc_id"))).as("ds"))
       .filter(size(col("ds")) >= 2)
@@ -410,19 +410,14 @@ object DedupOps {
     * in [[hashedShingled]] (collision odds documented there).
     */
   def contaminatedPairs(train: DataFrame, eval: DataFrame, nGram: Int = 3,
-      minFrac: Double = 0.5, textCol: String = "text",
-      broadcastEval: Boolean = true): DataFrame = {
+      minFrac: Double = 0.5, textCol: String = "text"): DataFrame = graft.CacheScope.pinned { p =>
     // two consumers of the train shingles (postings + sizes) → persist
-    // the tokenize→shingle→hash scan once (query-scoped auto-release)
-    val tr = graft.CacheScope.autoRelease(hashedShingled(train, nGram, textCol))
+    // the tokenize→shingle→hash scan once (query-scoped)
+    val tr = p(hashedShingled(train, nGram, textCol))
     val ev = hashedShingled(eval, nGram, textCol)
     val trPost = tr.select(col("doc_id").as("train_id"), explode(col("hs")).as("h"))
-    val evPost0 = ev.select(col("doc_id").as("eval_id"), explode(col("hs")).as("h"))
-    // benchmark-sized eval sets broadcast (the default); pass false for
-    // an eval side too big to ship whole — the join then shuffles both
-    // sides on the shingle key like ngramJaccardPairs
-    val evPost = if (broadcastEval) broadcast(evPost0) else evPost0
-    val inter = trPost.join(evPost, "h")
+    val evPost = ev.select(col("doc_id").as("eval_id"), explode(col("hs")).as("h"))
+    val inter = trPost.join(broadcast(evPost), "h")
       .groupBy("train_id", "eval_id").agg(count(lit(1)).as("inter"))
     val trSz = tr.select(col("doc_id").as("train_id"), size(col("hs")).cast("long").as("n"))
     inter.join(trSz, "train_id")
@@ -457,14 +452,13 @@ object DedupOps {
     */
   def bloomContaminatedPairs(train: DataFrame, eval: DataFrame, nGram: Int = 3,
       minFrac: Double = 0.5, textCol: String = "text", fpp: Double = 0.01,
-      evalDfCap: Long = 0L): DataFrame = {
+      evalDfCap: Long = 0L): DataFrame = graft.CacheScope.pinned { p =>
     val spark = train.sparkSession
-    val tr = graft.CacheScope.autoRelease(hashedShingled(train, nGram, textCol))
+    val tr = p(hashedShingled(train, nGram, textCol))
     // The eval postings are scanned three times (sizing count, bloom
-    // build, confirm join) and deliberately NOT cached: CacheScope
-    // releases on the FIRST consuming execution (the count here — the
-    // confirm join would recompute anyway), and three passes over the
-    // benchmark-sized side is the honest cost of building the filter.
+    // build, confirm join) and deliberately NOT cached: three passes
+    // over the benchmark-sized side is the honest cost of building the
+    // filter, and whether a pin across them pays has not been measured.
     // At real scale the sizing count comes from blocklist metadata, not
     // a scan.
     val ev0 = hashedShingled(eval, nGram, textCol)
@@ -541,9 +535,9 @@ object DedupOps {
     * gate's string-side oracle bounds the realized risk.
     */
   def sharedSubstringStats(docs: DataFrame, window: Int = 32, stride: Int = 16,
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = graft.CacheScope.pinned { p =>
     val eligible = docs.filter(length(col(textCol)) >= window)
-    val wins = graft.CacheScope.autoRelease(
+    val wins = p(
       graft.PlanUtils.spread(eligible.select(col("doc_id"), col(textCol)))
         .select(col("doc_id"),
           array_distinct(transform(
@@ -587,15 +581,14 @@ object DedupOps {
     * pigeonhole blocking, same as the ANN recall gates.
     */
   def editDistancePairs(docs: DataFrame, maxDist: Int, keyLen: Int,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+      textCol: String = "text", idCol: String = "doc_id"): DataFrame = graft.CacheScope.pinned { p =>
     require(maxDist >= 0 && keyLen > 0, "need maxDist >= 0 and keyLen > 0")
     val d = maxDist
     val nSeg = d + 1
     val keyed = docs.select(col(idCol).as("__id"),
         substring(col(textCol), 1, keyLen).as("__k"))
       .withColumn("__len", length(col("__k")))
-    val long = graft.CacheScope.autoRelease(
-      keyed.filter(col("__len") >= nSeg))
+    val long = p(keyed.filter(col("__len") >= nSeg))
     // Even partition of a length-LB key into nSeg segments: the first
     // nSeg−rem get base chars, the last rem get base+1 (deterministic;
     // any fixed scheme works — both sides must just agree on it).
@@ -704,7 +697,7 @@ object DedupOps {
     * (blk, bval); emits (id_a, id_b, hamming) with hamming ≤
     * `maxHamming`, complete by the pigeonhole principle.
     */
-  def hammingPairs(sigs: DataFrame, maxHamming: Int, bits: Int): DataFrame = {
+  def hammingPairs(sigs: DataFrame, maxHamming: Int, bits: Int): DataFrame = graft.CacheScope.pinned { p =>
     val nBlocks = maxHamming + 1
     require(bits > 0 && bits < 64, s"bits=$bits must fit a positive BIGINT")
     require(bits % nBlocks == 0, s"bits=$bits must split into $nBlocks equal blocks")
@@ -713,7 +706,7 @@ object DedupOps {
     // pin the banded signature table: the self-join would otherwise
     // evaluate the signature kernel (tokenize + md5 per doc for
     // simhash; a full codec decode for image hashes) TWICE
-    val banded = graft.CacheScope.autoRelease(
+    val banded = p(
       sigs.select(col("id"), col("sig"),
           explode(sequence(lit(0), lit(nBlocks - 1))).as("blk"))
         .withColumn("bval",
@@ -743,6 +736,13 @@ object DedupOps {
       .filter(col("hamming") <= maxHamming && firstMatch)
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
+
+  /** Plain-propagation rounds before pointer jumping engages: tiny-
+    * clique graphs (the near-dup norm) converge inside this budget and
+    * never pay the jump join; anything still moving after it is a
+    * long-diameter component that needs the O(log d) path.
+    */
+  private val JumpAfter = 3
 
   /** Connected components over a near-dup PAIR graph — the step that
     * turns pairwise `(da, db)` output ([[verifiedNearDups]],
@@ -780,13 +780,6 @@ object DedupOps {
     * Fail-fast: refuses (IllegalStateException) if `maxIter` rounds
     * don't converge rather than returning half-merged clusters.
     */
-  /** Plain-propagation rounds before pointer jumping engages: tiny-
-    * clique graphs (the near-dup norm) converge inside this budget and
-    * never pay the jump join; anything still moving after it is a
-    * long-diameter component that needs the O(log d) path.
-    */
-  private val JumpAfter = 3
-
   def nearDupClusters(pairs: DataFrame, maxIter: Int = 30): DataFrame =
     graft.CacheScope.pinned { p =>
       // pin the edge list for the LOOP's lifetime: every round joins
@@ -866,12 +859,11 @@ object DedupOps {
     * recompute by hash equality (the q_incr_agg construction).
     */
   def incrementalClusters(oldClusters: DataFrame, batchPairs: DataFrame,
-      maxIter: Int = 30): DataFrame = {
+      maxIter: Int = 30): DataFrame = graft.CacheScope.pinned { p =>
     // endpoints of batch pairs → supernode: an old doc is represented
     // by its cluster label; a doc without an old cluster (new, or old
     // but previously pairless) represents itself
-    val oc = graft.CacheScope.autoRelease(
-      oldClusters.select(col("doc_id"), col("cluster")))
+    val oc = p(oldClusters.select(col("doc_id"), col("cluster")))
     val sup = batchPairs
       .join(oc.select(col("doc_id").as("da"), col("cluster").as("ca")),
         Seq("da"), "left")
@@ -881,7 +873,7 @@ object DedupOps {
         coalesce(col("cb"), col("db")).as("db"))
       .filter(col("da") =!= col("db"))
     // CC over the supernode graph: batch-bounded, not corpus-bounded
-    val cc = graft.CacheScope.autoRelease(
+    val cc = p(
       nearDupClusters(sup, maxIter)
         .select(col("doc_id").as("supernode"), col("cluster").as("merged")))
     // old docs: relabel if their cluster's rep merged; else pass through

@@ -539,8 +539,8 @@ object EvalOps {
     * precision/F1.
     */
   def confusionReport(scored: DataFrame, trueCol: Column,
-      predCol: Column): DataFrame = {
-    val cm = graft.CacheScope.autoRelease(
+      predCol: Column): DataFrame = graft.CacheScope.pinned { p =>
+    val cm = p(
       scored.select(trueCol.as("t"), predCol.as("p"))
         .groupBy("t", "p").agg(count(lit(1)).as("n")))
     val byTrue = cm.groupBy(col("t")).agg(sum("n").as("support"))
@@ -652,9 +652,9 @@ object EvalOps {
     * d_pairs, tau_b).
     */
   def kendallTauB(df: DataFrame, group: Column, xBin: Column,
-      yBin: Column): DataFrame = {
+      yBin: Column): DataFrame = graft.CacheScope.pinned { p =>
     val dec = "decimal(38,0)"
-    val cells = graft.CacheScope.autoRelease(
+    val cells = p(
       df.select(group.as("grp"), xBin.cast("long").as("x"),
           yBin.cast("long").as("y"))
         .groupBy("grp", "x", "y").agg(count(lit(1)).as("f")))
@@ -722,12 +722,12 @@ object EvalOps {
     * (grp, n_units, mean, ci_lo, ci_hi).
     */
   def poissonBootstrapCI(df: DataFrame, group: Column, unit: Column,
-      metric: Column, bReps: Int = 63): DataFrame = {
+      metric: Column, bReps: Int = 63): DataFrame = graft.CacheScope.pinned { p =>
     require(bReps >= 3, "bReps must be >= 3")
     val dec = "decimal(38,0)"
     // Poisson(1) CDF cutoffs quantized into [0, AmsPrime) hash space
     val cuts = Seq(385748L, 771496L, 964371L, 1028662L, 1044735L, 1047949L)
-    val units = graft.CacheScope.autoRelease(
+    val units = p(
       df.select(group.as("grp"), unit.as("u"), metric.cast("long").as("x"))
         .groupBy("grp", "u")
         .agg(count(lit(1)).as("n"), sum(col("x").cast(dec)).as("s")))
@@ -869,10 +869,10 @@ object EvalOps {
     * reduction. Output: (grp, n_units, d_obs, n_exceed, p_value).
     */
   def permutationTest(df: DataFrame, group: Column, unit: Column,
-      metric: Column, bReps: Int = 63): DataFrame = {
+      metric: Column, bReps: Int = 63): DataFrame = graft.CacheScope.pinned { p =>
     require(bReps >= 1, "bReps must be >= 1")
     val dec = "decimal(38,0)"
-    val units = graft.CacheScope.autoRelease(
+    val units = p(
       df.select(group.as("grp"), unit.as("u"), metric.cast("long").as("x"))
         .groupBy("grp", "u")
         .agg(count(lit(1)).as("n"), sum(col("x").cast(dec)).as("s")))
@@ -936,9 +936,9 @@ object EvalOps {
     * broadcasts back. Output: (key, n, x, p_hat, p_shrunk, alpha,
     * beta) ranked by the shrunk rate.
     */
-  def ebShrink(df: DataFrame, key: Column, success: Column): DataFrame = {
+  def ebShrink(df: DataFrame, key: Column, success: Column): DataFrame = graft.CacheScope.pinned { p =>
     val dec = "decimal(38,0)"
-    val perKey = graft.CacheScope.autoRelease(
+    val perKey = p(
       df.select(key.as("key"), success.cast("long").as("__s"))
         .groupBy("key")
         .agg(count(lit(1)).as("n"), sum("__s").as("x")))
@@ -1049,9 +1049,9 @@ object EvalOps {
     * cardinality.
     */
   def cupedAdjust(df: DataFrame, unit: Column, metric: Column,
-      preFlag: Column): DataFrame = {
+      preFlag: Column): DataFrame = graft.CacheScope.pinned { p =>
     val dec0 = "decimal(38,0)"
-    val perUnit = graft.CacheScope.autoRelease(
+    val perUnit = p(
       df.select(unit.as("u"), preFlag.cast("boolean").as("__pre"),
           metric.cast("long").as("__m"))
         .groupBy("u")

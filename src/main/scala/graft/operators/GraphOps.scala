@@ -259,8 +259,8 @@ object GraphOps {
     * oracle expressible while the join shape — where all the Spark
     * machinery lives — is identical.
     */
-  def triangleCounts(edges: DataFrame): DataFrame = {
-    val e = graft.CacheScope.autoRelease(undirectedSimple(edges))
+  def triangleCounts(edges: DataFrame): DataFrame = graft.CacheScope.pinned { p =>
+    val e = p(undirectedSimple(edges))
     val wedges = e.select(col("a").as("x"), col("b").as("y"))
       .join(e.select(col("a").as("y"), col("b").as("z")), "y")
     wedges
@@ -390,9 +390,9 @@ object GraphOps {
     * — no set materialization. Jaccard is one exact-int64 IEEE
     * division, published at 6 dp.
     */
-  def linkPrediction(edges: DataFrame, minCommon: Long = 2): DataFrame = {
+  def linkPrediction(edges: DataFrame, minCommon: Long = 2): DataFrame = graft.CacheScope.pinned { p =>
     val und = undirectedSimple(edges)
-    val sym = graft.CacheScope.autoRelease(symmetric(und))
+    val sym = p(symmetric(und))
     val common = sym.alias("x").join(sym.alias("y"),
         col("x.nbr") === col("y.nbr") && col("x.node") < col("y.node"))
       .select(col("x.node").as("a"), col("y.node").as("b"))

@@ -70,11 +70,10 @@ object RegressionOps {
     */
   def denseWordObservations(docs: DataFrame, k: Int,
       outcome: Column, control: Column,
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = graft.CacheScope.pinned { p =>
     // three consumers (doc lengths, term frequencies, top-k) → tokenize
-    // once and persist the token stream (query-scoped auto-release)
-    val toks = graft.CacheScope.autoRelease(
-      TextOps.tokenize(docs, "doc_id", textCol))
+    // once and pin the token stream for the query
+    val toks = p(TextOps.tokenize(docs, "doc_id", textCol))
     val docLen = toks.groupBy("doc_id").agg(count(lit(1)).as("total"))
     val tf = toks.groupBy("doc_id", "word").agg(count(lit(1)).as("cnt"))
     val top = TextOps.topKFromTokens(toks, k).select("word")

@@ -239,10 +239,10 @@ object RelationalOps {
     * like [[uniformSampleExact]] (same key contract: non-null, unique).
     *
     * Inherits [[graft.plans.TopKPerKey]]'s state bound: per-partition
-    * heap state is O(groups in that partition × k) with no spill path —
-    * right for bounded group counts (languages, labels, event types);
-    * for millions of groups per partition use the window row_number
-    * form, which spills.
+    * heap state is O(groups in that partition × k), reserved from the
+    * task's memory pool; under memory pressure the partial heap flushes
+    * its rows downstream (a weaker map-side prune, never a wrong
+    * answer), and the final side reads a spillable external sort.
     */
   def stratifiedSampleExact(df: DataFrame, groupCols: Seq[String], key: Column,
       k: Int, seed: String): DataFrame = {
@@ -274,11 +274,6 @@ object RelationalOps {
       .drop("__draw")
   }
 
-  /** Groups of `groupCol` supported by at least `minDistinct` distinct
-    * `byCol` values (a3_p2.py:26,31's ≥25-raters / ≥5-items filters).
-    * Partial-aggregated count-distinct (exact); swap in
-    * `approx_count_distinct` at extreme cardinalities.
-    */
   /** Winsorized (percentile-clipped) per-group statistics — the
     * outlier-robust cleaning step a feature/curation pipeline applies
     * before averaging anything users can game. Per group: exact
@@ -356,6 +351,11 @@ object RelationalOps {
       .withColumn("is_outlier", abs(col("z")) > cutoff)
   }
 
+  /** Groups of `groupCol` supported by at least `minDistinct` distinct
+    * `byCol` values (a3_p2.py:26,31's ≥25-raters / ≥5-items filters).
+    * Partial-aggregated count-distinct (exact); swap in
+    * `approx_count_distinct` at extreme cardinalities.
+    */
   def supportFilter(df: DataFrame, groupCol: String, byCol: String, minDistinct: Long): DataFrame =
     df.groupBy(groupCol)
       .agg(countDistinct(col(byCol)).as("n_support"))
@@ -395,11 +395,10 @@ object RelationalOps {
     * itself — runs twice).
     */
   def skyline2D(df: DataFrame, xCol: String, yCol: String,
-      bucketWidth: Long): DataFrame = {
+      bucketWidth: Long): DataFrame = graft.CacheScope.pinned { p =>
     import org.apache.spark.sql.expressions.Window
     require(bucketWidth > 0, "bucketWidth must be positive")
-    val pts = graft.CacheScope.autoRelease(
-      df.withColumn("__bkt", expr(s"$xCol div ${bucketWidth}L")))
+    val pts = p(df.withColumn("__bkt", expr(s"$xCol div ${bucketWidth}L")))
     val bucketMax = pts.groupBy(col("__bkt"))
       .agg(max(col(yCol)).as("__bmax"))
     // suffix max over strictly higher buckets: the table is bucket-
@@ -727,11 +726,11 @@ object RelationalOps {
     * once; counts are single aggregates.
     */
   def cascadeDeleteReport(customer: DataFrame, orders: DataFrame,
-      lineitem: DataFrame, events: DataFrame, delKeys: DataFrame): DataFrame = {
+      lineitem: DataFrame, events: DataFrame, delKeys: DataFrame): DataFrame = graft.CacheScope.pinned { p =>
     val spark = customer.sparkSession
     import spark.implicits._
     val keys = broadcast(delKeys.select(col("custkey")).distinct())
-    val delOrders = broadcast(graft.CacheScope.autoRelease(
+    val delOrders = broadcast(p(
       orders.join(keys, orders("o_custkey") === keys("custkey"), "left_semi")
         .select(col("o_orderkey"))))
     def report(name: String, df: DataFrame, deleted: DataFrame): DataFrame = {
@@ -766,7 +765,7 @@ object RelationalOps {
     * the corpus; everything after is customer- or value-sized, with
     * the boundary tables broadcast.
     */
-  def rfmSegments(orders: DataFrame, nTiles: Int = 5): DataFrame = {
+  def rfmSegments(orders: DataFrame, nTiles: Int = 5): DataFrame = graft.CacheScope.pinned { p =>
     val stats0 = orders.groupBy(col("o_custkey").as("cust"))
       .agg(max(col("o_orderdate").cast("date")).as("__last"),
         count(lit(1)).as("frequency"),
@@ -774,7 +773,7 @@ object RelationalOps {
         // rounding the cast double ties at the 4th dp under hot-key sums
         round(sum(col("o_totalprice").cast("decimal(28,12)")), 4)
           .cast("double").as("monetary"))
-    val st = graft.CacheScope.autoRelease(stats0
+    val st = p(stats0
       .crossJoin(broadcast(
         orders.agg(max(col("o_orderdate").cast("date")).as("__anchor"))))
       .select(col("cust"),
@@ -885,12 +884,12 @@ object RelationalOps {
     * squared, metric-sized, never the corpus. Output: one row per
     * (grp, v): n, the group and pooled cumulative counts, and `mapped`.
     */
-  def quantileNormalize(df: DataFrame, group: Column, vGrid: Column): DataFrame = {
+  def quantileNormalize(df: DataFrame, group: Column, vGrid: Column): DataFrame = graft.CacheScope.pinned { p =>
     val dec0 = "decimal(38,0)"
     // pinned: the (grp, v) grid feeds BOTH the group ECDF and the
     // pooled grid — unpinned, the corpus aggregates twice (bench: 2×
     // scan cost at sf0.1)
-    val gv = graft.CacheScope.autoRelease(
+    val gv = p(
       df.select(group.as("grp"), vGrid.cast("long").as("v"))
         .groupBy("grp", "v").agg(count(lit(1)).as("n")))
     val wG = Window.partitionBy("grp").orderBy("v")

@@ -142,9 +142,9 @@ object SimilarityOps {
     * mean_dot, mean_norm2, anisotropy); single-vector or all-zero
     * labels null the ratio columns.
     */
-  def anisotropyReport(embeddings: DataFrame, dims: Int = 64): DataFrame = {
+  def anisotropyReport(embeddings: DataFrame, dims: Int = 64): DataFrame = graft.CacheScope.pinned { pins =>
     val dec = "decimal(38,0)"
-    val comps = graft.CacheScope.autoRelease(
+    val comps = pins(
       embeddings.select(col("label"), col("vec_id"),
           posexplode(col("embedding")).as(Seq("d", "x")))
         .select(col("label"), col("vec_id"), col("d"),
@@ -229,8 +229,8 @@ object SimilarityOps {
     * mutual-join shape and output contract are unchanged, recall
     * follows the ANN certificates.
     */
-  def mutualKnnGraph(embeddings: DataFrame, k: Int): DataFrame = {
-    val top = graft.CacheScope.autoRelease(knnLists(embeddings, k))
+  def mutualKnnGraph(embeddings: DataFrame, k: Int): DataFrame = graft.CacheScope.pinned { p =>
+    val top = p(knnLists(embeddings, k))
     val e1 = top.filter(col("q_id") < col("nn_id"))
       .select(col("q_id").as("va"), col("nn_id").as("vb"),
         col("sim"), col("rank").as("rank_ab"))
@@ -345,8 +345,8 @@ object SimilarityOps {
     * Zero original distance → null ratio/flag, never ±∞.
     */
   def jlDistortionPairs(embeddings: DataFrame, inDims: Int = 64, outDims: Int = 16,
-      lo: Double = 0.15, hi: Double = 3.0): DataFrame = {
-    val ex = graft.CacheScope.autoRelease(
+      lo: Double = 0.15, hi: Double = 3.0): DataFrame = graft.CacheScope.pinned { pins =>
+    val ex = pins(
       graft.PlanUtils.spread(embeddings.select(col("vec_id"), col("embedding")))
         .select(col("vec_id"), posexplode(col("embedding")).as(Seq("j", "x")))
         .select(col("vec_id"), col("j"), col("x").cast("double").as("x")))
@@ -357,7 +357,7 @@ object SimilarityOps {
       .agg(sum(((col("a.x") - col("b.x")) * (col("a.x") - col("b.x")))
         .cast("decimal(38,18)")).as("__s"))
       .select(col("va"), col("__s").cast("double").as("d2o"))
-    val p = graft.CacheScope.autoRelease(jlProject(embeddings, inDims, outDims))
+    val p = pins(jlProject(embeddings, inDims, outDims))
     val d2p = p.filter(col("vec_id") % 2 === 0).as("pa")
       .join(p.as("pb"), (col("pb.vec_id") === col("pa.vec_id") + 1)
         && (col("pb.d") === col("pa.d")))
@@ -1281,9 +1281,9 @@ object SimilarityOps {
     * over a supplied (vec_id, cluster) assignment.
     */
   private def semDedupWith(embeddings: DataFrame, asg: DataFrame,
-      tau: Double): DataFrame = {
+      tau: Double): DataFrame = graft.CacheScope.pinned { p =>
     // pinned: both self-join sides + the cluster-size aggregate read it
-    val vecs = graft.CacheScope.autoRelease(
+    val vecs = p(
       embeddings.select(col("vec_id"), col("embedding"))
         .join(asg, Seq("vec_id"))
         .select(col("cluster"), col("vec_id"), col("embedding"),
@@ -1291,7 +1291,7 @@ object SimilarityOps {
     // pinned: the qualifying-pair table feeds the drop set, the detail
     // sim lookup AND the per-cluster drop count — tiny after the tau
     // filter, but its computation is the quadratic term
-    val pairs = graft.CacheScope.autoRelease(
+    val pairs = p(
       vecs.select(col("cluster"), col("vec_id").as("va"),
           col("embedding").as("ea"), col("nrm").as("na"))
         .join(vecs.select(col("cluster"), col("vec_id").as("vb"),

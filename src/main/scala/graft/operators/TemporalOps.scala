@@ -146,9 +146,9 @@ object TemporalOps {
     * boundaries; `div` truncates exactly like the oracle's `//`).
     */
   def fillGaps(events: DataFrame, keys: Seq[String], tsCol: String,
-      bucketSeconds: Long = 21600): DataFrame = {
+      bucketSeconds: Long = 21600): DataFrame = graft.CacheScope.pinned { p =>
     val w = bucketSeconds * 1000000L
-    val counted = graft.CacheScope.autoRelease(
+    val counted = p(
       events.groupBy(keys.map(col) :+
           expr(s"unix_micros($tsCol) div ${w}L").as("bucket"): _*)
         .agg(count(lit(1)).as("n")))
@@ -216,7 +216,7 @@ object TemporalOps {
     * pass count (3-5 in practice).
     */
   def funnel(events: DataFrame, keys: Seq[String], tsCol: String,
-      typeCol: String, steps: Seq[String]): DataFrame = {
+      typeCol: String, steps: Seq[String]): DataFrame = graft.CacheScope.pinned { p =>
     require(steps.nonEmpty, "funnel needs at least one step")
     val ts = unix_micros(col(tsCol))
     val kCols = keys.map(col)
@@ -227,7 +227,7 @@ object TemporalOps {
     // resolved every earlier step. Each is built from the PERSISTED
     // previous resolution, so lineage stays linear.
     val resolutions = steps.zipWithIndex.tail
-      .foldLeft(List(graft.CacheScope.autoRelease(first))) {
+      .foldLeft(List(p(first))) {
         case (prev :: done, (step, i)) =>
           val prevCol = s"step${i}_us"
           val stepCol = s"step${i + 1}_us"
@@ -236,7 +236,7 @@ object TemporalOps {
             .join(prev, keys)
             .filter(col("__ts") >= col(prevCol))
             .groupBy(kCols: _*).agg(min(col("__ts")).as(stepCol))
-          graft.CacheScope.autoRelease(nxt) :: prev :: done
+          p(nxt) :: prev :: done
         case (Nil, _) => Nil // unreachable: seeded non-empty
       }.reverse
     val resolved = resolutions.tail.foldLeft(resolutions.head) {
@@ -586,12 +586,11 @@ object TemporalOps {
     * two keyed exchanges.
     */
   def cohortRetention(events: DataFrame, keyCol: String, tsCol: String,
-      periodDays: Int): DataFrame = {
+      periodDays: Int): DataFrame = graft.CacheScope.pinned { p =>
     require(periodDays > 0, "periodDays must be positive")
     val usPerPeriod = periodDays * 86400000000L
     val period = expr(s"unix_micros($tsCol) div $usPerPeriod")
-    val firstPeriod = graft.CacheScope.autoRelease(
-      events.groupBy(col(keyCol)).agg(min(period).as("cohort")))
+    val firstPeriod = p(events.groupBy(col(keyCol)).agg(min(period).as("cohort")))
     val active = events.select(col(keyCol), period.as("p")).distinct()
     val cohortSizes = firstPeriod.groupBy(col("cohort"))
       .agg(count(lit(1)).as("cohort_size"))
@@ -1168,11 +1167,11 @@ object TemporalOps {
     * sen_slope).
     */
   def trendRobust(events: DataFrame, group: Column, tsCol: Column,
-      xGrid: Column, dayUs: Long = 86400000000L): DataFrame = {
+      xGrid: Column, dayUs: Long = 86400000000L): DataFrame = graft.CacheScope.pinned { p =>
     val dec = "decimal(38,0)"
     val daily = byDay(events, group, tsCol, xGrid, dayUs)
       .agg(sum(col("x").cast(dec)).as("s"))
-    val pinned = graft.CacheScope.autoRelease(daily)
+    val pinned = p(daily)
     val pairs = pinned.as("a").join(pinned.as("b"),
         col("a.grp") === col("b.grp") && col("a.day") < col("b.day"))
       .select(col("a.grp").as("grp"),
@@ -1252,21 +1251,20 @@ object TemporalOps {
     */
   def sequentialPatterns(events: DataFrame, keyCol: String, tsCol: String,
       typeCol: String, idCol: String, supNum: Int = 1, supDen: Int = 4)
-      : DataFrame = {
+      : DataFrame = graft.CacheScope.pinned { p =>
     require(supNum > 0 && supDen >= supNum, "support must be in (0, 1]")
-    val e = graft.CacheScope.autoRelease(
+    val e = p(
       events.select(col(keyCol).as("k"), col(typeCol).as("sym"),
         row_number().over(Window.partitionBy(keyCol)
           .orderBy(col(tsCol), col(idCol))).as("pos")))
     val nu = e.agg(count_distinct(col("k")).as("n_keys"))
     def frequent(sup: Column) = sup * lit(supDen.toLong) >=
       col("n_keys") * lit(supNum.toLong)
-    val p1 = graft.CacheScope.autoRelease(
-      e.groupBy(col("k"), col("sym").as("a")).agg(min("pos").as("p1")))
+    val p1 = p(e.groupBy(col("k"), col("sym").as("a")).agg(min("pos").as("p1")))
     val f1 = p1.groupBy("a").agg(count(lit(1)).as("sup"))
       .crossJoin(broadcast(nu)).filter(frequent(col("sup")))
       .select("a", "sup")
-    val p2 = graft.CacheScope.autoRelease(
+    val p2 = p(
       p1.join(broadcast(f1.select("a")), "a")
         .join(e, Seq("k")).filter(col("pos") > col("p1"))
         .join(broadcast(f1.select(col("a").as("sym"))), "sym")

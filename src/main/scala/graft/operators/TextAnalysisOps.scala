@@ -217,7 +217,7 @@ object TextAnalysisOps {
     * start_in_chunk, n_toks), totally ordered and engine-recomputable.
     */
   def packSequences(docs: DataFrame, chunkLen: Int = 256, nBuckets: Int = 32,
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = graft.CacheScope.pinned { p =>
     require(chunkLen > 0 && nBuckets > 0, "chunkLen and nBuckets must be positive")
     val spark = docs.sparkSession
     val counts = graft.PlanUtils.spread(docs.select(col("doc_id"), col(textCol)))
@@ -227,8 +227,7 @@ object TextAnalysisOps {
     val maxRow = counts.agg(max("doc_id")).head()
     val maxId = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
     val width = math.max(1L, maxId / nBuckets + 1)
-    val bucketed = graft.CacheScope.autoRelease(
-      counts.withColumn("bucket", (col("doc_id") / width).cast("long")))
+    val bucketed = p(counts.withColumn("bucket", (col("doc_id") / width).cast("long")))
     val localW = org.apache.spark.sql.expressions.Window
       .partitionBy("bucket").orderBy("doc_id")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
@@ -319,8 +318,8 @@ object TextAnalysisOps {
     * aggregate and the posting side of the join.
     */
   def rareBigramStats(docs: DataFrame, rareMax: Long = 2, keepMax: Double = 0.4,
-      textCol: String = "text"): DataFrame = {
-    val sh = graft.CacheScope.autoRelease(DedupOps.hashedShingled(docs, 2, textCol))
+      textCol: String = "text"): DataFrame = graft.CacheScope.pinned { p =>
+    val sh = p(DedupOps.hashedShingled(docs, 2, textCol))
     val post = sh.select(col("doc_id"), explode(col("hs")).as("h"))
     val dfreq = post.groupBy("h").agg(count(lit(1)).as("df"))
     post.join(dfreq, "h")
@@ -456,7 +455,7 @@ object TextAnalysisOps {
     * across engines (rounding them could land on a half-boundary).
     */
   def dsirSelect(docs: DataFrame, isTarget: Column, nBuckets: Int = 256,
-      k: Int = 100, textCol: String = "text"): DataFrame = {
+      k: Int = 100, textCol: String = "text"): DataFrame = graft.CacheScope.pinned { p =>
     val base = graft.PlanUtils.spread(
       docs.select(col("doc_id"), isTarget.as("__t"), col(textCol)))
       .select(col("doc_id"), col("__t"), DedupOps.words(col(textCol)).as("__ws"))
@@ -468,7 +467,7 @@ object TextAnalysisOps {
           element_at(col("__ws"), i + 1)))).as("f"))
     val h = conv(substring(md5(concat_ws("|", col("f"), lit("ds"))
       .cast("binary")), 1, 6), 16, 10).cast("long")
-    val db = graft.CacheScope.autoRelease(
+    val db = p(
       unis.unionByName(bis)
         .withColumn("bucket", h % lit(nBuckets.toLong))
         .groupBy("doc_id", "__t", "bucket").agg(count(lit(1)).as("c")))

@@ -316,8 +316,8 @@ object TextOps {
     * partial-aggregates. Nothing corpus-sized touches the driver.
     */
   def bigramNll(docs: DataFrame, keepBelow: Double = 6.0,
-      textCol: String = "text"): DataFrame = {
-    val ws = graft.CacheScope.autoRelease(
+      textCol: String = "text"): DataFrame = graft.CacheScope.pinned { p =>
+    val ws = p(
       graft.PlanUtils.spread(docs.select(col("doc_id"), col(textCol)))
         .select(col("doc_id"), DedupOps.words(col(textCol)).as("__ws")))
     def bigrams: DataFrame = ws.filter(size(col("__ws")) >= 2)
@@ -331,7 +331,7 @@ object TextOps {
     // cached: feeds the scoring join AND the vocab-size aggregate below
     // (V = |c1| — derived from the count table instead of a second
     // corpus-wide explode + count_distinct exchange; guide §6)
-    val c1 = graft.CacheScope.autoRelease(
+    val c1 = p(
       uni.groupBy("w").agg(count(lit(1)).as("__c1"))
         .withColumnRenamed("w", "w1"))
     val v = c1.agg(count(lit(1)).as("__v"))
@@ -373,8 +373,8 @@ object TextOps {
     * shuffle-join rendering of Brants' distributed LM server lookups.
     */
   def trigramBackoffNll(train: DataFrame, eval: DataFrame,
-      alpha: Double = 0.4, textCol: String = "text"): DataFrame = {
-    val trainWs = graft.CacheScope.autoRelease(
+      alpha: Double = 0.4, textCol: String = "text"): DataFrame = graft.CacheScope.pinned { p =>
+    val trainWs = p(
       graft.PlanUtils.spread(train.select(col("doc_id"), col(textCol)))
         .select(col("doc_id"), DedupOps.words(col(textCol)).as("__ws")))
     def ngrams(ws: DataFrame, n: Int, names: Seq[String]): DataFrame =
@@ -386,10 +386,10 @@ object TextOps {
         .select(col("doc_id") +: names.map(nm => col(s"__g.$nm").as(nm)): _*)
     val c3 = ngrams(trainWs, 3, Seq("w1", "w2", "w3"))
       .groupBy("w1", "w2", "w3").agg(count(lit(1)).as("c3"))
-    val c2 = graft.CacheScope.autoRelease(
+    val c2 = p(
       ngrams(trainWs, 2, Seq("wa", "wb"))
         .groupBy("wa", "wb").agg(count(lit(1)).as("c2")))
-    val c1 = graft.CacheScope.autoRelease(
+    val c1 = p(
       trainWs.select(explode(col("__ws")).as("w"))
         .groupBy("w").agg(count(lit(1)).as("c1")))
     // T = Σ c1 (token occurrences), V = |c1| (vocab size): derived from
@@ -472,10 +472,10 @@ object TextOps {
     * replacing stupid backoff's.
     */
   def kneserNeyBigrams(docs: DataFrame, k: Int = 50, d: Double = 0.75,
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = graft.CacheScope.pinned { p =>
     val ws = graft.PlanUtils.spread(docs.select(col("doc_id"), col(textCol)))
       .select(DedupOps.words(col(textCol)).as("__ws"))
-    val c2 = graft.CacheScope.autoRelease(
+    val c2 = p(
       ws.filter(size(col("__ws")) >= 2)
         .select(explode(transform(
           sequence(lit(1), size(col("__ws")) - 1),
@@ -523,12 +523,11 @@ object TextOps {
     * TakeOrderedAndProject.
     */
   def goodTuring(docs: DataFrame, maxR: Int = 10,
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = graft.CacheScope.pinned { p =>
     val wc = graft.PlanUtils.spread(docs.select(col(textCol)))
       .select(explode(DedupOps.words(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
-    val cof = graft.CacheScope.autoRelease(
-      wc.groupBy(col("c").as("r")).agg(count(lit(1)).as("n_r")))
+    val cof = p(wc.groupBy(col("c").as("r")).agg(count(lit(1)).as("n_r")))
     val tot = cof.agg(
       sum(col("r") * col("n_r")).as("t_toks"),
       sum(when(col("r") === 1, col("n_r")).otherwise(0L)).as("n1"))
@@ -651,8 +650,8 @@ object TextOps {
     * `round(tfidf, 9)` with a word tiebreak: the ln() libm ulp must
     * never decide membership (engine-portability rule).
     */
-  def tfidfTopTerms(docs: DataFrame, k: Int, textCol: String = "text"): DataFrame = {
-    val tf = graft.CacheScope.autoRelease(
+  def tfidfTopTerms(docs: DataFrame, k: Int, textCol: String = "text"): DataFrame = graft.CacheScope.pinned { p =>
+    val tf = p(
       tokenize(docs, textCol = textCol)
         .groupBy("doc_id", "word").agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy("word").agg(count(lit(1)).as("df"))
@@ -678,8 +677,8 @@ object TextOps {
     * which the `round(score, 9)` ranking key absorbs.
     */
   def bm25TopTerms(docs: DataFrame, k: Int, k1: Double = 1.2, b: Double = 0.75,
-      textCol: String = "text"): DataFrame = {
-    val tf = graft.CacheScope.autoRelease(
+      textCol: String = "text"): DataFrame = graft.CacheScope.pinned { p =>
+    val tf = p(
       tokenize(docs, textCol = textCol)
         .groupBy("doc_id", "word").agg(count(lit(1)).as("tf")))
     val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
@@ -734,10 +733,10 @@ object TextOps {
   def heavyHitters(docs: DataFrame, minFreq: Double = 0.02,
       sampleRate: Double = 0.1, eps: Double = 1e-4,
       confidence: Double = 0.999, seed: Int = 42,
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = graft.CacheScope.pinned { p =>
     val spark = docs.sparkSession
     import spark.implicits._
-    val toks = graft.CacheScope.autoRelease(docs
+    val toks = p(docs
       .select(col("doc_id"), posexplode(tokens(col(textCol))))
       .select(col("doc_id"), col("pos"), col("col").as("word")))
     // the (count, sketch) pass runs first so `total` can size both
@@ -748,35 +747,36 @@ object TextOps {
     // an empty token stream aggregates to a NULL sketch — empty
     // result, not an NPE
     val sketchBytes = agg.getAs[Array[Byte]](1)
-    if (total == 0L || sketchBytes == null)
-      return Seq.empty[(String, Long)].toDF("word", "cnt")
-    val cms = org.apache.spark.util.sketch.CountMinSketch.readFrom(
-      new java.io.ByteArrayInputStream(sketchBytes))
-    // Candidate discovery: the occurrence-sampled aggregation only
-    // concentrates when the expected sample is big enough; on a small
-    // corpus (or tiny sampleRate) fall back to exact counts — which
-    // are cheap precisely because the corpus is small. Without the
-    // fallback, a corpus whose every (doc,pos) hash lands above
-    // sampleRate returns NOTHING while the oracle returns rows.
-    val candidates: Array[String] =
-      if (total * sampleRate >= 1000.0) {
-        toks.filter(
-          RelationalOps.hashUniform(concat_ws("#", col("doc_id"), col("pos")), s"hh$seed")
-            < lit(sampleRate))
-          .groupBy("word").agg(count(lit(1)).as("c"))
-          .filter(col("c") >= lit(0.5 * minFreq * sampleRate * total))
-          .select("word").as[String].collect()
-      } else {
-        toks.groupBy("word").agg(count(lit(1)).as("c"))
-          .filter(col("c") >= lit(minFreq * total))
-          .select("word").as[String].collect()
-      }
-    val screened = candidates.toSeq
-      .filter(w => cms.estimateCount(w) >= minFreq * total)
-    if (screened.isEmpty) Seq.empty[(String, Long)].toDF("word", "cnt")
-    else toks.filter(col("word").isin(screened: _*))
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= lit(minFreq * total))
+    if (total == 0L || sketchBytes == null) Seq.empty[(String, Long)].toDF("word", "cnt")
+    else {
+      val cms = org.apache.spark.util.sketch.CountMinSketch.readFrom(
+        new java.io.ByteArrayInputStream(sketchBytes))
+      // Candidate discovery: the occurrence-sampled aggregation only
+      // concentrates when the expected sample is big enough; on a small
+      // corpus (or tiny sampleRate) fall back to exact counts — which
+      // are cheap precisely because the corpus is small. Without the
+      // fallback, a corpus whose every (doc,pos) hash lands above
+      // sampleRate returns NOTHING while the oracle returns rows.
+      val candidates: Array[String] =
+        if (total * sampleRate >= 1000.0) {
+          toks.filter(
+            RelationalOps.hashUniform(concat_ws("#", col("doc_id"), col("pos")), s"hh$seed")
+              < lit(sampleRate))
+            .groupBy("word").agg(count(lit(1)).as("c"))
+            .filter(col("c") >= lit(0.5 * minFreq * sampleRate * total))
+            .select("word").as[String].collect()
+        } else {
+          toks.groupBy("word").agg(count(lit(1)).as("c"))
+            .filter(col("c") >= lit(minFreq * total))
+            .select("word").as[String].collect()
+        }
+      val screened = candidates.toSeq
+        .filter(w => cms.estimateCount(w) >= minFreq * total)
+      if (screened.isEmpty) Seq.empty[(String, Long)].toDF("word", "cnt")
+      else toks.filter(col("word").isin(screened: _*))
+        .groupBy("word").agg(count(lit(1)).as("cnt"))
+        .filter(col("cnt") >= lit(minFreq * total))
+    }
   }
 
   /** Per-letter mean and population std-dev of per-document counts,
@@ -831,9 +831,9 @@ object TextOps {
     * with a deterministic (w1, w2) tie-break.
     */
   def collocations(docs: DataFrame, minCount: Long = 5, k: Int = 50,
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = graft.CacheScope.pinned { p =>
     val toks = docs.select(tokens(col(textCol)).as("t"))
-    val uni = graft.CacheScope.autoRelease(
+    val uni = p(
       toks.select(explode(col("t")).as("word"))
         .groupBy("word").agg(count(lit(1)).as("c")))
     val nTokens = uni.agg(sum(col("c")).as("n"))
@@ -882,8 +882,8 @@ object TextOps {
     * fan-out is the textbook NB scoring shape.
     */
   def naiveBayes(docs: DataFrame, labelCol: String = "lang",
-      evalMod: Int = 5, textCol: String = "text"): DataFrame = {
-    val ws = graft.CacheScope.autoRelease(
+      evalMod: Int = 5, textCol: String = "text"): DataFrame = graft.CacheScope.pinned { p =>
+    val ws = p(
       graft.PlanUtils.spread(docs.select(col("doc_id"), col(labelCol).as("label"),
           col(textCol)))
         .select(col("doc_id"), col("label"), DedupOps.words(col(textCol)).as("__ws")))
@@ -893,8 +893,7 @@ object TextOps {
     // other model tables derive from its vocabulary-sized output
     // (n_c = Σ_w c_wc and V = |distinct w| by definition) instead of
     // re-exploding the corpus once per table — 3 explode passes → 1
-    val cwc = graft.CacheScope.autoRelease(
-      trainTok.groupBy("label", "w").agg(count(lit(1)).as("__cwc")))
+    val cwc = p(trainTok.groupBy("label", "w").agg(count(lit(1)).as("__cwc")))
     val cls = cwc.groupBy("label").agg(sum(col("__cwc")).as("__nc"))
     val nd = ws.filter(col("doc_id") % evalMod =!= 0)
       .groupBy("label").agg(count(lit(1)).as("__ndc"))
@@ -1061,14 +1060,13 @@ object TextOps {
       .select(col("__p.w1").as("w1"), col("__p.w2").as("w2"))
 
   def windowedCooccur(docs: DataFrame, window: Int = 3, minCount: Int = 5,
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = graft.CacheScope.pinned { p =>
     require(window >= 1, "window must be >= 1")
     val pairs = cooccurPairs(docs, window, textCol)
     // pin the pair-count table: it feeds the totals, BOTH marginal
     // sides and the published rows — unpinned, the zip_with pair
     // explode re-ran per consumer (plan-audited: 3 Generates)
-    val cab = graft.CacheScope.autoRelease(
-      pairs.groupBy("w1", "w2").agg(count(lit(1)).as("n_ab")))
+    val cab = p(pairs.groupBy("w1", "w2").agg(count(lit(1)).as("n_ab")))
     val tot = cab.agg(sum("n_ab").as("__t"))
     val marg = cab.select(col("w1").as("w"), col("n_ab"))
       .unionByName(cab.select(col("w2").as("w"), col("n_ab")))
@@ -1114,7 +1112,7 @@ object TextOps {
     */
   def textRank(docs: DataFrame, window: Int = 3, minCount: Int = 5,
       damping: Double = 0.85, rounds: Int = 5,
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = graft.CacheScope.pinned { p =>
     require(rounds >= 1 && window >= 1, "rounds and window must be >= 1")
     val dec = "decimal(38,12)"
     // pin the pair counts: the edge symmetrization references cab
@@ -1122,7 +1120,7 @@ object TextOps {
     // once per branch (the windowedCooccur lesson). coalesce(1):
     // everything downstream is vocab-sized, so the rank rounds run as
     // 1-task stages.
-    val cab = graft.CacheScope.autoRelease(
+    val cab = p(
       cooccurPairs(docs, window, textCol)
         .groupBy("w1", "w2").agg(count(lit(1)).as("n"))
         .filter(col("n") >= minCount)
@@ -1130,12 +1128,11 @@ object TextOps {
     val ed = cab.select(col("w1").as("src"), col("w2").as("dst"), col("n"))
       .unionByName(cab.select(col("w2").as("src"), col("w1").as("dst"), col("n")))
     val wsrc = ed.groupBy("src").agg(sum("n").as("w_out"))
-    val e = graft.CacheScope.autoRelease(
+    val e = p(
       ed.join(wsrc, "src")
         .select(col("src"), col("dst"),
           col("n").cast("double") / col("w_out").cast("double") as "frac"))
-    val nodes = graft.CacheScope.autoRelease(
-      wsrc.select(col("src").as("word"), col("w_out")))
+    val nodes = p(wsrc.select(col("src").as("word"), col("w_out")))
     val cnt = nodes.agg(count(lit(1)).as("nn"))
     var r = nodes.crossJoin(broadcast(cnt))
       .select(col("word"),
@@ -1204,9 +1201,9 @@ object TextOps {
     * three rounded coefficients.
     */
   def heapsFit(docs: DataFrame, nCheckpoints: Int = 16,
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = graft.CacheScope.pinned { p =>
     val k = nCheckpoints.toLong
-    val base = graft.CacheScope.autoRelease(
+    val base = p(
       graft.PlanUtils.spread(docs.select(col("doc_id"), col(textCol)))
         .select(col("doc_id"), DedupOps.words(col(textCol)).as("__ws")))
     val mid = base.agg(max("doc_id").as("mid"))
@@ -1223,7 +1220,7 @@ object TextOps {
     val cumW = Window.orderBy("ck")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // K rows from here on — the single-partition window is metric-sized
-    val pts = graft.CacheScope.autoRelease(
+    val pts = p(
       grid.join(nd, Seq("ck"), "left").join(vd, Seq("ck"), "left")
         .select(col("ck"), coalesce(col("tok"), lit(0L)).as("tok"),
           coalesce(col("nv"), lit(0L)).as("nv"))

@@ -1,9 +1,15 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+
+import graft.operators.{ClusterOps, TextAnalysisOps, TextOps}
 
 /** The persist-ownership contract: operator-internal caches are
   * query-scoped — automatically released once the consuming query
@@ -36,6 +42,24 @@ class CacheScopeSpec extends SparkSpec {
     spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith("graft_stream_")).toSet
 
+  test("one pin path: no persist, cache, checkpoint or unpersist call outside CacheScope") {
+    // every pin goes through CacheScope.pinned, whose release rules
+    // come from the operator's returned frame; a direct call elsewhere
+    // would bring back a second lifetime rule
+    val banned = Seq("autoRelease(", ".persist(", ".cache()", "localCheckpoint(", "unpersist(")
+    def comment(line: String) = Seq("//", "/*", "*").exists(line.trim.startsWith)
+    val scope = Paths.get("src/main/scala/graft/CacheScope.scala")
+    assert(Files.exists(scope), "source tree not found")
+    val sources = Files.walk(Paths.get("src/main/scala")).iterator().asScala.toList
+      .filter(f => f.toString.endsWith(".scala") && f != scope)
+    val hits = sources.flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if !comment(line) && banned.exists(line.contains) => s"$f:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("the leak check catches an RDD the test persists and never releases") {
     val before = persistentRddIds
     val leak = spark.sparkContext.parallelize(1 to 3).persist()
@@ -45,22 +69,23 @@ class CacheScopeSpec extends SparkSpec {
     } finally { leak.unpersist(blocking = true); () }
   }
 
-  test("autoRelease drops the cache after the consuming action") {
+  test("pinned: a one-pin scope drops its cache after the consuming action") {
     spark.catalog.clearCache()
     val before = persistentRddIds
-    val base = CacheScope.autoRelease(
-      Seq(1, 2, 3).toDF("x").select(col("x"), (col("x") * 2).as("y")))
-    // two branches of one query share the materialized cache ...
-    val n = base.filter(col("y") > 2).union(base.filter(col("x") === 1)).count()
-    assert(n == 3)
+    val out = CacheScope.pinned { p =>
+      val base = p(Seq(1, 2, 3).toDF("x").select(col("x"), (col("x") * 2).as("y")))
+      // two branches of one query share the materialized cache ...
+      base.filter(col("y") > 2).union(base.filter(col("x") === 1))
+    }
+    assert(out.count() == 3)
     // ... and nothing survives the action
     assert(awaitNoCachedRdds(before), "cache block outlived its query")
   }
 
-  test("an unconsumed autoRelease frame never materializes storage") {
+  test("an unconsumed pinned frame never materializes storage") {
     spark.catalog.clearCache()
     val before = persistentRddIds
-    CacheScope.autoRelease(Seq(1).toDF("x"))
+    CacheScope.pinned(p => p(Seq(1).toDF("x")).select((col("x") + 1).as("y")))
     assert(persistentRddIds == before)
   }
 
@@ -71,11 +96,49 @@ class CacheScopeSpec extends SparkSpec {
     // Dataset action — no surviving cached RDD, no clearCache help
     spark.catalog.clearCache()
     val before = persistentRddIds
-    val base = CacheScope.autoRelease(
-      Seq(1, 2, 3, 4).toDF("x").select(col("x"), (col("x") * 3).as("y")))
-    val consumer = base.filter(col("y") > 3).union(base.filter(col("x") === 1))
+    val consumer = CacheScope.pinned { p =>
+      val base = p(Seq(1, 2, 3, 4).toDF("x").select(col("x"), (col("x") * 3).as("y")))
+      base.filter(col("y") > 3).union(base.filter(col("x") === 1))
+    }
     assert(CacheScope.fullEval(consumer) == 4L)
     assert(awaitNoCachedRdds(before), "cache block outlived a toRdd-only query")
+  }
+
+  /** An operator that runs actions on its pins while it builds (a
+    * sizing pass, a driver-side collect, a clustering loop's per-round
+    * heads) still hands them to the caller: the caller's plan scans
+    * the cache, and the caller's one action releases it.
+    */
+  private def assertPinsOutliveBuild(build: => DataFrame): Unit = {
+    spark.catalog.clearCache()
+    val before = persistentRddIds
+    val out = build
+    awaitListenerBus()
+    val backing = directCheckpoints(out)
+    assert((persistentRddIds -- before -- backing).nonEmpty, "an in-build action spent the pin")
+    assert(out.queryExecution.executedPlan.toString.contains("InMemoryTableScan"),
+      "the caller's plan does not read the pin")
+    assert(out.collect().nonEmpty)
+    assert(awaitNoCachedRdds(before ++ backing), "a pin outlived the caller's action")
+  }
+
+  private def docs = Seq((1L, "the cat sat on the mat"), (2L, "the dog sat"),
+    (3L, "a cat and a dog"), (4L, "the end")).toDF("doc_id", "text")
+
+  test("pins outlive in-build actions: heavyHitters' sketch pass and candidate collect") {
+    assertPinsOutliveBuild(TextOps.heavyHitters(docs, minFreq = 0.1))
+  }
+
+  test("pins outlive in-build actions: packSequences' bucket-total collect") {
+    assertPinsOutliveBuild(TextAnalysisOps.packSequences(docs, chunkLen = 4, nBuckets = 2))
+  }
+
+  test("pins outlive in-build actions: gridDensityClusters' clustering rounds") {
+    def pt(id: Long, x: Double, y: Double) = (id, Array(x.toFloat, y.toFloat))
+    val emb = Seq(pt(1, 0.1, 0.1), pt(2, 0.5, 0.5), pt(3, 0.9, 0.2),
+      pt(4, 1.1, 1.9), pt(5, 1.5, 1.5), pt(6, 1.2, 1.7),
+      pt(7, 3.5, 0.5)).toDF("vec_id", "embedding")
+    assertPinsOutliveBuild(ClusterOps.gridDensityClusters(emb, eps = 1.0, minPts = 3))
   }
 
   test("pinned: a throwing body releases every pin and checkpoint at once") {
@@ -157,7 +220,8 @@ class CacheScopeSpec extends SparkSpec {
     val backing = Seq("q_cf_recommend", "q_ngram_jaccard", "q_kmeans",
       "q_silhouette", "q_pca_top", "q_pca_top2", "q_item_assoc",
       "q_neardup_clusters", "q_bfs", "q_lpa", "q_hits", "q_incr_clusters",
-      "q_stream_window").flatMap { q =>
+      "q_heavy_hitters", "q_pack_sequences", "q_grid_density",
+      "q_bloom_decontaminate", "q_stream_window").flatMap { q =>
       val df = SparkEntry.queries(q)(spark, sf0)
       assert(df.collect().nonEmpty, q)
       directCheckpoints(df)

@@ -657,7 +657,7 @@ class PlanShapeSpec extends SparkSpec {
     */
   private def execShape(df: DataFrame): Seq[String] = {
     // fullEval, not raw toRdd.count(): the raw action never fires
-    // autoRelease listeners (CacheScope contract), so each pin run
+    // pinned-scope listeners (CacheScope contract), so each pin run
     // would leak its persisted blocks + listeners into the rest of
     // the suite (NOTES.md documents cache-block pressure flipping
     // AQE broadcast sides in shape pins)
@@ -749,7 +749,7 @@ class PlanShapeSpec extends SparkSpec {
     // shape q_neardup_minhash runs: same node sequence, same exchanges
     def shape(df: DataFrame): Seq[String] = {
       // fullEval, not raw toRdd.count(): the raw action never fires
-      // autoRelease listeners (CacheScope contract), so each pin run
+      // pinned-scope listeners (CacheScope contract), so each pin run
       // would leak its persisted blocks + listeners into the rest of
       // the suite
       graft.CacheScope.fullEval(df)
