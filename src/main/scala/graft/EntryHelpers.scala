@@ -50,43 +50,76 @@ private[graft] object EntryHelpers {
     */
   private[graft] val StreamSeq = new java.util.concurrent.atomic.AtomicInteger()
 
-  /** Shuffle/state partition count for STREAMING queries — sized from
-    * expected STATE volume, not core count (guide §2.1/§2.2). Every
-    * stateful micro-batch pays a fixed per-shuffle-partition cost: one
-    * state-store provider load + delta commit PER STORE PER PARTITION
-    * PER BATCH (a stream-stream join keeps four stores per partition),
-    * regardless of how many rows the partition holds. With
-    * `spark.sql.shuffle.partitions = $SPARK_GRAFT_CPUS` the two
-    * interval-join lanes were the bench's two most expensive entries
-    * AND anti-scaled (r12 scaling block: 8 cores ran them 3× FASTER
-    * than 32 — the partition count, not the data, was the workload).
-    * State partitioning is a DECLARED layout choice, pinned at the
-    * first run by the checkpoint, so it must come from state-volume
-    * arithmetic: partitions ≈ ceil(peak state bytes / 256 MB). Local
-    * default 8: every gate corpus' peak state (both interval-join
-    * buffers within watermark+lookback) is ≪ one 256 MB partition, and
-    * 8 keeps the store/commit path genuinely parallel; production sets
-    * SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS from the same arithmetic
-    * (e.g. ~400 partitions for a 100 GB-state join). Results are
-    * partition-count-invariant (all stream ops here are keyed
-    * aggregates/joins); the oracle gate re-proves it.
+  /** Target state bytes per stream shuffle/state partition. */
+  private val StatePartitionBytes: Long = 256L * 1024 * 1024
+
+  /** Shuffle/state partition count for one STREAMING query, from its
+    * input: `max(1, ⌈input bytes / 256 MB⌉)`. Every stateful micro-batch
+    * pays a fixed cost per shuffle partition: one state-store provider
+    * load plus one delta commit per store per partition per batch (a
+    * stream-stream join keeps four stores per partition), however few
+    * rows the partition holds. Measured on local[4] (4-core VM) at
+    * sf0.01, state-store `commitTimeMs` summed over partitions and
+    * batches read 1130, 1404 and 4885 ms with 8 partitions and 92, 83
+    * and 604 ms with 1 for q_stream_window, q_stream_welford_state and
+    * q_stream_interval_join, for the same 720, 5 and 210 state rows:
+    * about 150-190 ms per extra partition on the single-store lanes. A
+    * stream's state holds at most the rows it reads, so its input bytes
+    * stand in for its state bytes: 256 MB of input is 1 partition,
+    * 256 MB + 1 B is 2, a 100 GiB input is 400. Every gate corpus is
+    * ≪ 256 MB, so every gate stream runs 1 partition.
+    *
+    * Spark pins the count in a stream's checkpoint at its first batch.
+    * Every graft stream writes a fresh temp checkpoint, so no stored
+    * layout conflicts with the derived count; a resumed checkpoint
+    * would run with its own stored count whatever the session says.
+    * Results do not depend on the count: all stream ops here are keyed
+    * aggregates or joins, and the oracle gate re-proves it.
     */
-  private[graft] lazy val StreamShufflePartitions: Int =
-    GraftSession.positiveIntVar(sys.env, "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", 8)
+  private[graft] def statePartitions(inputBytes: Long): Int =
+    math.max(1L, (inputBytes + StatePartitionBytes - 1) / StatePartitionBytes).toInt
+
+  /** Total size of the files a stream's file sources will read: each
+    * `StreamingRelation` in the logical plan names its directory by the
+    * `path` option and narrows it by `pathGlobFilter`. Sources with
+    * nothing to list (a `MemoryStream`, a missing path) count 0 bytes.
+    */
+  private[graft] def streamInputBytes(df: DataFrame): Long = {
+    import org.apache.hadoop.fs.{GlobFilter, Path}
+    import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
+    val hadoopConf = df.sparkSession.sessionState.newHadoopConf()
+    df.queryExecution.logical.collect { case r: StreamingRelation => r.dataSource }
+      .flatMap { ds =>
+        val opts = CaseInsensitiveMap(ds.options)
+        val keep = opts.get("pathGlobFilter").map(new GlobFilter(_))
+        opts.get("path").toSeq.flatMap { p =>
+          val path = new Path(p)
+          val fs = path.getFileSystem(hadoopConf)
+          Option(fs.globStatus(path)).toSeq.flatten.flatMap { st =>
+            val files = fs.listFiles(st.getPath, true)
+            Iterator.continually(files).takeWhile(_.hasNext).map(_.next()).toSeq
+          }.filter(f => keep.forall(_.accept(f.getPath)))
+            .map(_.getLen)
+        }
+      }.sum
+  }
 
   /** Start-and-await a streaming query with the session's shuffle
-    * partitions pinned to [[StreamShufflePartitions]] for the duration
-    * of the start call only: the stream's constructor clones the
-    * session (`StreamExecution` → `cloneSession()`) before `start()`
-    * returns, so the override binds the STREAM's state layout and the
-    * batch value is back before the run is awaited. All 16 q_stream_*
-    * lanes funnel through here.
+    * partitions set to the stream's [[statePartitions]] (sized from
+    * [[streamInputBytes]] of `df`) for the duration of the start call
+    * only: the stream's constructor clones the session
+    * (`StreamExecution` → `cloneSession()`) before `start()` returns,
+    * so the override binds the STREAM's state layout and the batch
+    * value is back before the run is awaited. All 16 q_stream_* lanes
+    * funnel through here.
     */
-  private[graft] def runStream(spark: SparkSession)(
+  private[graft] def runStream(df: DataFrame)(
       start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    val spark = df.sparkSession
     val key = "spark.sql.shuffle.partitions"
     val old = spark.conf.get(key)
-    spark.conf.set(key, StreamShufflePartitions.toString)
+    spark.conf.set(key, statePartitions(streamInputBytes(df)).toString)
     val q = try start finally spark.conf.set(key, old)
     q.awaitTermination()
   }
@@ -103,7 +136,7 @@ private[graft] object EntryHelpers {
       mode: String): DataFrame = {
     val spark = df.sparkSession
     val qn = s"graft_stream_${tag}_${StreamSeq.incrementAndGet()}"
-    runStream(spark)(df.writeStream.format("memory").queryName(qn)
+    runStream(df)(df.writeStream.format("memory").queryName(qn)
       .outputMode(mode)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start())
     try spark.table(qn) finally spark.catalog.dropTempView(qn)
@@ -118,14 +151,19 @@ private[graft] object EntryHelpers {
     * of millions of rows). The file sink keeps rows on executors end to
     * end; reading the sink directory back is metadata-driven
     * (_spark_metadata), so the gate compares exactly what the stream
-    * committed.
+    * committed. The returned frame reads the temp directory lazily, so
+    * the directory is not deleted here: it is registered with the local
+    * Hadoop `FileSystem.deleteOnExit`, which deletes it when the JVM's
+    * file systems close at shutdown.
     */
   private[graft] def fileSinkRun(df: DataFrame, tag: String): DataFrame = {
     val spark = df.sparkSession
-    val dir = java.nio.file.Files
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sessionState.newHadoopConf())
+    val dir = fs.makeQualified(new org.apache.hadoop.fs.Path(java.nio.file.Files
       .createTempDirectory(s"graft_${tag}_${StreamSeq.incrementAndGet()}_")
-      .toString
-    runStream(spark)(df.writeStream.format("parquet")
+      .toString))
+    fs.deleteOnExit(dir)
+    runStream(df)(df.writeStream.format("parquet")
       .option("path", s"$dir/out")
       .option("checkpointLocation", s"$dir/chk")
       .outputMode("append")

@@ -18,16 +18,14 @@ class GraftSessionSpec extends SparkSpec {
   }
 
   test("positive-int env vars: unset takes the default, anything but n > 0 fails") {
-    for ((name, default) <- Seq("SPARK_GRAFT_CPUS" -> 32,
-        "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS" -> 8)) {
-      def parse(v: Option[String]) =
-        GraftSession.positiveIntVar(v.map(name -> _).toMap, name, default)
-      assert(parse(None) == default)
-      assert(parse(Some("8")) == 8)
-      for (bad <- Seq("0", "-1", "abc")) {
-        val e = intercept[IllegalArgumentException](parse(Some(bad)))
-        assert(e.getMessage.contains(name) && e.getMessage.contains(s"'$bad'"))
-      }
+    val (name, default) = ("SPARK_GRAFT_CPUS", 32)
+    def parse(v: Option[String]) =
+      GraftSession.positiveIntVar(v.map(name -> _).toMap, name, default)
+    assert(parse(None) == default)
+    assert(parse(Some("8")) == 8)
+    for (bad <- Seq("0", "-1", "abc")) {
+      val e = intercept[IllegalArgumentException](parse(Some(bad)))
+      assert(e.getMessage.contains(name) && e.getMessage.contains(s"'$bad'"))
     }
   }
 }

@@ -87,4 +87,26 @@ class SourcesSpec extends SparkSpec {
     assert(got == Set((1L, "p1", 10.0), (2L, "p1", 20.0),
       (30L, "p2", 300.0), (31L, "p2", 310.0), (4L, "p3", 40.0)))
   }
+
+  test("Tables reads each parquet footer once per file version") {
+    val dir = s"$base/footer_memo"
+    Seq((1L, "a")).toDF("n_nationkey", "n_name").write.parquet(s"$dir/nation.parquet")
+    awaitListenerBus()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Tables.nation(spark, dir)
+      Tables.nation(spark, dir)
+      awaitListenerBus()
+      assert(jobs.get == 1, "one footer job for two loads of one file")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // a rewritten table is read again, with its new schema
+    Seq((1L, "a", 2L)).toDF("n_nationkey", "n_name", "n_regionkey")
+      .write.mode("overwrite").parquet(s"$dir/nation.parquet")
+    assert(Tables.nation(spark, dir).columns.toSeq == Seq("n_nationkey", "n_name", "n_regionkey"))
+  }
 }

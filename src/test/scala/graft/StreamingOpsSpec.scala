@@ -392,13 +392,14 @@ class StreamingOpsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val key = "spark.sql.shuffle.partitions"
     val old = spark.conf.get(key)
+    val stream = MemoryStream[Int].toDF()
     // a batch value distinct from the stream's, so a held override shows
-    val batch = (EntryHelpers.StreamShufflePartitions + 1).toString
+    val batch = (EntryHelpers.statePartitions(EntryHelpers.streamInputBytes(stream)) + 1).toString
     spark.conf.set(key, batch)
     val started = Promise[StreamingQuery]()
-    val run = Future(EntryHelpers.runStream(spark) {
+    val run = Future(EntryHelpers.runStream(stream) {
       // no data is ever added: the stream stays active until stopped
-      val q = MemoryStream[Int].toDF().writeStream.format("noop").start()
+      val q = stream.writeStream.format("noop").start()
       started.success(q)
       q
     })
@@ -414,5 +415,32 @@ class StreamingOpsSpec extends SparkSpec {
       Await.result(run, 60.seconds)
       spark.conf.set(key, old)
     }
+  }
+
+  test("statePartitions: max(1, ceil(input bytes / 256 MB))") {
+    val mb = 1024L * 1024
+    for ((bytes, want) <- Seq(0L -> 1, 256 * mb -> 1, 256 * mb + 1 -> 2,
+        100L * 1024 * mb -> 400))
+      assert(EntryHelpers.statePartitions(bytes) == want, s"$bytes bytes")
+  }
+
+  test("q_stream_window sizes its state partitions from its input") {
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.streaming.StreamingQueryProgress]()
+    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit = progress.add(e.progress)
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      SparkEntry.queries("q_stream_window")(spark, sf0)
+      awaitListenerBus()
+    } finally spark.streams.removeListener(listener)
+    // sf0.001 events.parquet is a few kB: one partition, not a fixed count
+    val counts = progress.toArray(Array.empty[org.apache.spark.sql.streaming.StreamingQueryProgress])
+      .flatMap(_.stateOperators).map(_.numShufflePartitions)
+    assert(counts.nonEmpty && counts.forall(_ == 1L), counts.mkString(", "))
   }
 }

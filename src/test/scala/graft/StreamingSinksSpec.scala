@@ -125,6 +125,20 @@ class StreamingSinksSpec extends SparkSpec {
     assert(out.orderBy("k").as[(Long, Double)].collect().toSeq == first)
   }
 
+  test("fileSinkRun registers its temp directory for deletion at exit") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_filesink").toString
+    Seq((1L, 2.0), (2L, 4.0)).toDF("k", "v").write.parquet(s"$dir/in")
+    val stream = spark.readStream.schema("k LONG, v DOUBLE").parquet(s"$dir/in")
+    val out = EntryHelpers.fileSinkRun(stream, "sinks_spec")
+    assert(out.orderBy("k").as[(Long, Double)].collect().toSeq == Seq(1L -> 2.0, 2L -> 4.0))
+    // the sink writes <temp dir>/out/part-*.parquet
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sessionState.newHadoopConf())
+    val sinkDir = fs.makeQualified(new org.apache.hadoop.fs.Path(out.inputFiles.head).getParent.getParent)
+    assert(fs.cancelDeleteOnExit(sinkDir), s"$sinkDir is not registered for deletion")
+    fs.deleteOnExit(sinkDir)
+    fs.delete(new org.apache.hadoop.fs.Path(dir), true)
+  }
+
   test("gate→sink contract: data-sized gates file-sink, memory gates are state-bounded") {
     // append-mode, data-sized output → parquet file sink
     val fileGates = Set(
